@@ -85,14 +85,7 @@ object ScaleSmoke {
     val replicas100 = sys.env.getOrElse("GRAFT_SMOKE_REPLICAS100", "100").toInt
     val out30 = s"${out}_r$replicas30"
     val out100 = s"${out}_r$replicas100"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-scale-smoke", Session.envCpus(32))
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     deriveCorpus(spark, src, out, replicas)

@@ -86,9 +86,11 @@ object IvfQuantizer {
     * BIGINT algebra ([[QuantF]] per element, order-independent integer
     * sums) and array_sort on (dist, cell) structs is exactly the
     * window's `ORDER BY dist, cell` tie rule, so the output rows match
-    * the long-form path bit for bit. Assumes the corpus's uniform
-    * vector dimensionality (every embedding spans the centroid dims —
-    * the fixture contract both engines' training replay relies on). */
+    * the long-form path bit for bit. Every vector must span the
+    * centroid dims: zip_with would pad a short or long vector with
+    * nulls, the distance would go null and the vector would silently
+    * sort into cell 0, so a length mismatch raises
+    * `IVF_DIM_MISMATCH` instead. */
   private[operators] def nearestCellsArr(v: DataFrame, centroids: DataFrame,
                                          n: Int): DataFrame =
     v.select(col("vec_id"),
@@ -97,8 +99,12 @@ object IvfQuantizer {
       .select(col("vec_id"), explode(expr(
         s"""slice(array_sort(transform(cents, c ->
            |  named_struct(
-           |    'dist', aggregate(zip_with(qx, c.carr, (x, cv) -> (x - cv) * (x - cv)),
-           |                      CAST(0 AS BIGINT), (acc, d2) -> acc + d2),
+           |    'dist', IF(size(qx) = size(c.carr),
+           |      aggregate(zip_with(qx, c.carr, (x, cv) -> (x - cv) * (x - cv)),
+           |                CAST(0 AS BIGINT), (acc, d2) -> acc + d2),
+           |      raise_error(format_string(
+           |        'IVF_DIM_MISMATCH: vec_id %s has %d dims, cell %d has %d',
+           |        CAST(vec_id AS STRING), size(qx), c.cell, size(c.carr)))),
            |    'cell', c.cell))), 1, $n)""".stripMargin)).as("dc"))
       .select(col("vec_id"), col("dc.cell").as("cell"), col("dc.dist").as("dist"))
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.plans.Bloom.{bloomAgg, bloomContains}
+import graft.plans.SparkBloom
 import graft.plans.Hll.{hllEstimate, hllMerge, hllSketch}
 import graft.plans.Kmv.{kmvEstimate, kmvIntersect, kmvJaccard, kmvMerge, kmvSketch}
 
@@ -26,16 +26,19 @@ object SketchQueries {
     * design, so there is no DuckDB oracle; HllSketchSpec pins the
     * algebra (merge-of-shards ≡ whole corpus, repartition invariance)
     * and the estimate's accuracy against exact distinct counts. */
-  /** Heavy hitters over the corpus word stream via mergeable
-    * Misra-Gries sketches ([[graft.plans.Hh]]) — per-source sketches
-    * first (the per-shard jobs), then `hh_merge` folds them (the
-    * rollup), then the top 10 tokens inline to rows. ORACLE-CHECKED in
-    * the exact regime: this corpus's 31-word vocabulary sits below the
-    * k=64 counter capacity, so nothing is ever decremented and the
-    * sketch IS the exact count map — the same below-capacity-exactness
-    * property the KMV tier pins. The approximate regime's ε·n contract
-    * (order-dependent contents, guarantee-preserving merges) is pinned
-    * by HhSketchSpec instead, where adversarial shardings exist. */
+  /** Heavy hitters over the corpus word stream via Spark's mergeable
+    * frequent-items sketch (`approx_top_k_accumulate`, a DataSketches
+    * ItemsSketch) — per-source sketches first (the per-shard jobs), then
+    * `approx_top_k_combine` folds them (the rollup), then the top 10
+    * tokens inline to rows. `n_stream` is a plain count beside the
+    * sketch. ORACLE-CHECKED in the exact regime: this corpus's 31-word
+    * vocabulary sits below the sketch's capacity at maxItemsTracked=64
+    * (a 128-slot map holding up to 96 items), so the sketch IS the exact
+    * count map — the same below-capacity-exactness property the KMV tier
+    * pins. The built-in does not order tied counts, so the (cnt desc,
+    * word) tie order is imposed after the explode. The approximate
+    * regime's error contract is pinned by HhSketchSpec, where
+    * adversarial shardings exist. */
   val heavyHitters = {
     val k = 64
     Q(
@@ -48,15 +51,20 @@ object SketchQueries {
         |), n AS (SELECT CAST(count(*) AS BIGINT) AS n_stream FROM w)
         |SELECT word, cnt, n_stream FROM c, n
         |ORDER BY cnt DESC, word LIMIT 10""".stripMargin) { (s, d) =>
-      import graft.plans.Hh
       val sk = Tables.documents(s, d)
         .select(col("source"),
           explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
-        .groupBy("source").agg(Hh.hhSketch(col("word"), k).as("sk"))
-        .agg(Hh.hhMerge(col("sk")).as("sk"))
-      sk.select(explode(Hh.hhItems(col("sk"))).as("it"),
-          Hh.hhTotal(col("sk")).as("n_stream"))
-        .select(col("it.token").as("word"), col("it.cnt").as("cnt"),
+        .groupBy("source")
+        .agg(expr(s"approx_top_k_accumulate(word, $k)").as("sk"),
+          count(lit(1)).as("n"))
+        // a literal key, not a global agg: over an empty corpus the
+        // rollup yields no row instead of combining zero sketches
+        .groupBy(lit(1))
+        .agg(expr(s"approx_top_k_combine(sk, $k)").as("sk"),
+          sum("n").as("n_stream"))
+      sk.select(explode(expr(s"approx_top_k_estimate(sk, $k)")).as("it"),
+          col("n_stream"))
+        .select(col("it.item").as("word"), col("it.count").as("cnt"),
           col("n_stream"))
         .orderBy(desc("cnt"), asc("word"))
         .limit(10)
@@ -64,7 +72,7 @@ object SketchQueries {
   }
 
   /** Grouped heavy hitters: top-5 tokens PER SOURCE from per-shard
-    * Misra-Gries sketches merged per group — the per-domain frequent-
+    * frequent-items sketches merged per group — the per-domain frequent-
     * tokens breakdown a corpus mixture report shows. Same exact-regime
     * oracle contract as [[heavyHitters]] (vocabulary below counter
     * capacity → the sketch is the exact count map); the rank is computed
@@ -88,18 +96,18 @@ object SketchQueries {
         |)
         |SELECT source, word, cnt, rnk FROM r WHERE rnk <= 5
         |ORDER BY source, rnk""".stripMargin) { (s, d) =>
-      import graft.plans.Hh
       import org.apache.spark.sql.expressions.Window
       val sk = Tables.documents(s, d)
         .select(col("source"), col("doc_id"),
           explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
         .groupBy(col("source"), (col("doc_id") % 4).as("shard"))
-        .agg(Hh.hhSketch(col("word"), k).as("sk"))
-        .groupBy("source").agg(Hh.hhMerge(col("sk")).as("sk"))
+        .agg(expr(s"approx_top_k_accumulate(word, $k)").as("sk"))
+        .groupBy("source").agg(expr(s"approx_top_k_combine(sk, $k)").as("sk"))
       val w = Window.partitionBy("source")
         .orderBy(col("cnt").desc, col("word"))
-      sk.select(col("source"), explode(Hh.hhItems(col("sk"))).as("it"))
-        .select(col("source"), col("it.token").as("word"), col("it.cnt").as("cnt"))
+      sk.select(col("source"),
+          explode(expr(s"approx_top_k_estimate(sk, $k)")).as("it"))
+        .select(col("source"), col("it.item").as("word"), col("it.count").as("cnt"))
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 5)
         .orderBy("source", "rnk")
@@ -316,16 +324,17 @@ object SketchQueries {
     * 100 TB join-avoidance pattern:
     *
     *   drop-list (persisted LSH keep-list artifact) → one tiny Bloom
-    *   filter (8 KiB for ~a thousand ids at <1% fp) → broadcast to the
-    *   corpus scan → rows the filter rejects are DEFINITE non-members
+    *   filter ([[SparkBloom]]: 8 KiB sized for 8k ids, so 6 hashes and
+    *   far under 1% fp for ~a thousand) → a scalar subquery the
+    *   corpus scan probes → rows the filter rejects are DEFINITE non-members
     *   and skip the anti-join entirely → only the maybe-present sliver
     *   takes the exact anti-join, which removes false positives.
     *
     * The final answer therefore equals a plain anti-join — the DuckDB
     * oracle IS the plain anti-join — while at scale the shuffle-join
     * input shrinks from the whole corpus to ~(true members + fp·corpus)
-    * rows. The 1-row sketch cross join is a broadcast of one row — the
-    * bounded shape, not an n² one. */
+    * rows. The filter is computed once, as an uncorrelated scalar
+    * subquery — no join against the sketch row. */
   val bloomPrefilter = Q(
     "q_bloom_prefilter",
     s"""WITH RECURSIVE ${DedupQueries.lshCtes},
@@ -346,11 +355,10 @@ object SketchQueries {
        |GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
     val dropIds = DedupQueries.lshKeepList(s, d)
       .filter(!col("keep")).select(col("doc_id"))
-    val sketch = dropIds
-      .agg(bloomAgg(col("doc_id").cast("string"), 1 << 16, 5).as("sk"))
+    val sketch = dropIds.agg(SparkBloom.agg(col("doc_id"), 1L << 13, 1L << 16))
     val docs = Tables.documents(s, d).select("doc_id", "source")
-    val tagged = docs.crossJoin(broadcast(sketch))
-      .withColumn("maybe", bloomContains(col("sk"), col("doc_id").cast("string")))
+    val tagged = docs
+      .withColumn("maybe", SparkBloom.mightContain(sketch.scalar(), col("doc_id")))
     val clean = tagged.filter(!col("maybe")).select("doc_id", "source")
     val suspect = tagged.filter(col("maybe")).select("doc_id", "source")
       .join(dropIds, Seq("doc_id"), "left_anti")
@@ -379,7 +387,7 @@ object SketchQueries {
     * cell = Σ counts of colliding words, estimate = min over rows. The
     * grid is stream-order independent, so per-source shard sketches
     * merge to the whole-corpus sketch BYTE-FOR-BYTE (no below-capacity
-    * caveat, unlike Misra-Gries) — CmsSketchSpec pins the identity and
+    * caveat, unlike frequent items) — CmsSketchSpec pins the identity and
     * the overestimate-only contract. w = 64 on a ~31-word vocabulary
     * forces real collisions, so the oracle is exercising the estimator,
     * not an exact-regime shortcut. */

@@ -140,15 +140,7 @@ object CorpusPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft_corpus_out")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("corpus-build")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("corpus-build")
     println(s"=== corpus build: $sfDir -> $outDir")
     graft.operators.CorpusQueries.curationFunnel.run(spark, sfDir).show(truncate = false)
     val m = writeManifest(spark, sfDir, outDir)

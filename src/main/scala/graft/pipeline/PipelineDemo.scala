@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.{ConsoleSink, ParquetSink, Sources}
 
 /** Runnable end-to-end demo of both Customer360 pipelines over the
@@ -11,15 +10,7 @@ import graft.sources.{ConsoleSink, ParquetSink, Sources}
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/c360_out")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("customer360")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("customer360")
 
     val sample = "/root/reference/data/log_content_sample"
     val search = "/root/reference/data/log_search/20220701"

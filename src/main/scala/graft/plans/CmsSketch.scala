@@ -22,14 +22,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    probability 1 − e^−d;
   *  - [[CmsTotal]]     (`cms_total(sk)`): stream length n.
   *
-  * Unlike Misra-Gries, every cell is a PURE SUM: the sketch is
+  * Unlike a frequent-items sketch, every cell is a PURE SUM: the sketch is
   * stream-order independent, so merge-of-shards ≡ whole-corpus
   * BYTE-FOR-BYTE under ANY partitioning (the HLL/KMV identity, with no
   * below-capacity caveat) — and since the row hashes are md5-derived,
   * DuckDB can replay the entire grid and the query is fully
   * ORACLE-CHECKED, collisions included: bucket(r, v) = first 32 bits of
   * md5(r || '|' || v) mod w; cell(r, b) = Σ count(v) over colliding v;
-  * estimate = min over r. ~8·d·w bytes per sketch. */
+  * estimate = min over r. ~8·d·w bytes per sketch.
+  *
+  * Why not Spark's `count_min_sketch`: its rows hash with its own seeded
+  * Murmur3 and its serialized form is opaque, so DuckDB cannot replay
+  * the grid and q_cms_counts would lose its hash-for-hash oracle,
+  * collisions included. The md5 bucket rule keeps it, so this tier
+  * stays. */
 object Cms {
 
   final class Buffer(var d: Int, var w: Int) {

@@ -84,27 +84,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         KmvEstimate(children(0))))
     e.injectFunction((
-      FunctionIdentifier("hh_sketch"),
-      new ExpressionInfo(classOf[HhSketchAgg].getName, "hh_sketch"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HhSketchAgg(children(0), intLit(children(1), "hh_sketch k"))
-          .toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("hh_merge"),
-      new ExpressionInfo(classOf[HhMergeAgg].getName, "hh_merge"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HhMergeAgg(children(0)).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("hh_items"),
-      new ExpressionInfo(classOf[HhItems].getName, "hh_items"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HhItems(children(0))))
-    e.injectFunction((
-      FunctionIdentifier("hh_total"),
-      new ExpressionInfo(classOf[HhTotal].getName, "hh_total"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HhTotal(children(0))))
-    e.injectFunction((
       FunctionIdentifier("cms_sketch"),
       new ExpressionInfo(classOf[CmsSketchAgg].getName, "cms_sketch"),
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
@@ -151,22 +130,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[QSketchN].getName, "qsketch_m"),
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         QSketchN(children(0), total = false)))
-    e.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(classOf[BloomAgg].getName, "bloom_agg"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BloomAgg(children(0),
-          intLit(children(1), "bloom_agg bits"),
-          intLit(children(2), "bloom_agg hashes")).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("bloom_merge"),
-      new ExpressionInfo(classOf[BloomMergeAgg].getName, "bloom_merge"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BloomMergeAgg(children(0)).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BloomContains(children(0), children(1))))
   }
 }

@@ -35,7 +35,12 @@ import org.apache.spark.sql.types._
   * Same storage contract as the HLL tier: sketches are VALUES a
   * per-shard job stores in a table and a later rollup merges without
   * re-reading raw data. ~16·k bytes per sketch; relative error
-  * ≈ 1/√(k−2). */
+  * ≈ 1/√(k−2).
+  *
+  * Why not Spark's `theta_sketch_agg` / `theta_union_agg` /
+  * `theta_intersection_agg`: DuckDB cannot recompute a theta sketch, so
+  * q_kmv_distinct, q_kmv_overlap and q_kmv_diff would lose their
+  * hash-for-hash oracle. This md5-based sketch keeps it, so it stays. */
 object Kmv {
 
   val DigestLen = 16

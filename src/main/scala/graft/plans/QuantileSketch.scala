@@ -41,7 +41,13 @@ import org.apache.spark.sql.types._
   *
   * The key column is a unique row identifier rendered as STRING (the
   * md5-of-rendered-value oracle contract, as [[Kmv]]); a duplicate key
-  * deterministically keeps the smaller value. ~24·k bytes per sketch. */
+  * deterministically keeps the smaller value. ~24·k bytes per sketch.
+  *
+  * Why not Spark's `kll_sketch_agg_double` and its merge/quantile
+  * functions: KLL compacts with random choices, so neither the sample
+  * nor the quantile can be recomputed by DuckDB, and q_qtile_sketch
+  * would lose its hash-for-hash oracle. This sketch keeps it, so it
+  * stays. */
 object QSketch {
 
   final class Buffer(var k: Int) {
@@ -98,7 +104,7 @@ object QSketch {
 
   /** Sample q-quantile by selection: the value at index floor(q·(m−1))
     * of the sample sorted ascending. Null (boxed) on an empty sketch —
-    * the degrade-don't-crash rule the KMV/Bloom guards follow. */
+    * the degrade-don't-crash rule the KMV guards follow. */
   def quantile(bytes: Array[Byte], q: Double): java.lang.Double = {
     val b = deserialize(bytes)
     val m = b.map.size()

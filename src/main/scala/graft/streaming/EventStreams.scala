@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -104,35 +104,48 @@ object EventStreams {
         col("n"))
   }
 
-  /** Windowed heavy hitters: top users per (hour, event type) from a
-    * mergeable Misra-Gries sketch — the third windowed sketch beside
-    * the HLL distinct counter and the quantile sampler, with the same
-    * constant-state contract per (window, type). Capacity k is sized
+  /** Windowed heavy hitters: top users per (hour, event type) from
+    * Spark's mergeable frequent-items sketch (`approx_top_k_accumulate`)
+    * — the third windowed sketch beside the HLL distinct counter and the
+    * quantile sampler, with the same constant-state contract per
+    * (window, type). Null users are not counted. Capacity k is sized
     * ABOVE the per-window distinct cardinality on the test corpora, so
     * the sketch holds exact counts and the streamed top lists EQUAL
-    * the batch twin (above capacity the ε·n guarantee still holds and
-    * the parity claim weakens to the guarantee — the same regime note
-    * as the batch q_heavy_hitters oracle). */
+    * the batch twin (above capacity only the sketch's error bound holds
+    * and the parity claim weakens to it — the same regime note as the
+    * batch q_heavy_hitters oracle). */
   def windowedHeavyHitters(events: DataFrame,
                            watermark: String = "1 hour",
-                           k: Int = 1024, top: Int = 3): DataFrame = {
-    import graft.plans.Hh.{hhItems, hhSketch}
+                           k: Int = 1024, top: Int = 3): DataFrame =
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(hhSketch(col("user_id").cast("string"), k).as("sk"),
+      .agg(expr(s"approx_top_k_accumulate(CAST(user_id AS STRING), $k) " +
+             "FILTER (WHERE user_id IS NOT NULL)").as("sk"),
            count(lit(1)).as("n"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"),
-        slice(hhItems(col("sk")), 1, top).as("top_users"),
+        topItems(col("sk"), k, top).as("top_users"),
         col("n"))
-  }
+
+  /** The first `top` (item, count) entries of a frequent-items sketch in
+    * (count desc, item) order. The built-in estimate does not order tied
+    * counts, so every tracked item is estimated and sorted before the
+    * slice. */
+  def topItems(sketch: Column, maxItemsTracked: Int, top: Int): Column =
+    slice(array_sort(
+      call_function("approx_top_k_estimate", sketch, lit(maxItemsTracked)),
+      (a, b) => when(a("count") > b("count"), -1)
+        .when(a("count") < b("count"), 1)
+        .when(a("item") < b("item"), -1)
+        .when(a("item") > b("item"), 1)
+        .otherwise(0)), 1, top)
 
   /** Windowed point-frequency sketch: a count-min grid per (hour,
     * event type) probed for fixed keys — the last of the four
     * mergeable sketches as a windowed stream (HLL distinct, quantiles,
-    * Misra-Gries top lists, CMS point frequencies). CMS cells are pure
+    * frequent-items top lists, CMS point frequencies). CMS cells are pure
     * sums, so streamed grids equal the batch twin BYTE-FOR-BYTE under
     * any sharding — no below-capacity caveat at all. */
   def windowedTokenCounts(events: DataFrame,

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import java.nio.ByteBuffer
+import java.io.ByteArrayOutputStream
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 import scala.util.control.NonFatal
 
-import graft.plans.Bloom
+import graft.plans.SparkBloom
 
 /** Shared enforcement of the incremental twins' NEW-RECORDS contract
   * (round-13 verdict item 7): [[DedupStreams]], [[SemanticStreams]]
@@ -20,9 +21,10 @@ import graft.plans.Bloom
   *
   * Scale path ([[checkAndRecord]]): a persisted BLOOM LEDGER of every
   * ingested id (`_INGEST_BLOOM/` beside the index — the underscore
-  * keeps it out of parquet partition discovery) makes the common
-  * fresh-ingest batch cost |delta| membership tests against one
-  * broadcast 512 KiB sketch row — NO stored-index scan. The exact
+  * keeps it out of parquet partition discovery), one serialized Spark
+  * [[org.apache.spark.util.sketch.BloomFilter]] over `xxhash64(id)`,
+  * makes the common fresh-ingest batch cost |delta| membership tests
+  * against one 512 KiB filter — NO stored-index scan. The exact
   * semi-join scan ([[requireNewRecords]]) remains the fallback for
   * every bloom hit, so false positives (replayed batch whose own ids
   * are in the ledger, crash leftovers) cost one scan, never a wrong
@@ -37,13 +39,14 @@ import graft.plans.Bloom
   *    (the seed helpers) must call [[invalidateLedger]] — an absent
   *    ledger is always safe.
   *  - the cheap pass runs ONLY against a structurally VALID sketch
-  *    (exactly one row, correct header and byte length for this
-  *    geometry): a zero-row or truncated ledger is treated as absent
+  *    (exactly one row, Spark's serialized header and byte length for
+  *    this geometry): a zero-row, truncated or old-layout ledger is
+  *    treated as absent
   *    (exact scan + rebuild from the stored index), because an empty
   *    probe result must mean "no id was ever ingested", never "there
   *    was nothing to probe".
-  *  - a SATURATED sketch (ones-density > 1/2 ⇒ ≥3% false positives
-  *    per probe, so realistic batches always hit) stops being
+  *  - a SATURATED sketch (ones-density > 1/2 ⇒ ≥0.8% false positives
+  *    per probe at 7 hashes, so realistic batches always hit) stops being
   *    consulted AND stops being rewritten: the check degrades to the
   *    exact scan permanently instead of paying probe + merge + 512 KiB
   *    rewrite on top of it every batch. Deployments sizing for more
@@ -75,33 +78,51 @@ object IngestTelemetry {
 
 private[streaming] object IngestContract {
 
-  /** 4M bits / 5 hashes ≈ 1% false positives at ~300k ids (default —
-    * callers with bigger id spaces pass their own geometry). */
+  /** 4M bits ≈ 1% false positives at ~420k ids (default — callers with
+    * bigger id spaces pass their own `bits`). The filter is sized for
+    * bits/10 ids, from which Spark derives 7 hash functions. */
   val LedgerBits: Int = 1 << 22
-  val LedgerHashes: Int = 5
+
+  /** The empty ledger filter of a geometry: every stored ledger must
+    * match its serialized header and length. */
+  private[streaming] def emptyLedger(bits: Int): BloomFilter =
+    BloomFilter.create(ledgerItems(bits), bits.toLong)
+
+  private def ledgerItems(bits: Int): Long = math.max(1L, bits / 10L)
+
+  private[streaming] def serialize(f: BloomFilter): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    f.writeTo(out)
+    out.toByteArray
+  }
 
   private def ledgerPath(dir: String) = s"$dir/_INGEST_BLOOM"
 
-  /** Structural validation + saturation gauge, driver-side: the sketch
-    * serialization is (bits: Int, k: Int, words: Long*). Returns the
+  /** Spark's serialized filter starts with a 16-byte header (version,
+    * hash count, seed, word count) followed by the words. */
+  private val HeaderBytes = 16
+
+  /** Structural validation + saturation gauge, driver-side. Returns the
     * bytes and the ones-density for a well-formed current-geometry
     * sketch; None for anything else (wrong geometry after a resize,
-    * truncation, zero rows — all degrade to ledger-absent). */
-  private def validSketch(bytes: Array[Byte], bits: Int,
-                          hashes: Int): Option[(Array[Byte], Double)] = {
-    val words = Bloom.numWords(bits)
-    if (bytes == null || bytes.length != 8 + words * 8) return None
-    val bb = ByteBuffer.wrap(bytes)
-    if (bb.getInt != bits || bb.getInt != hashes) return None
-    var ones = 0L
-    while (bb.remaining() >= 8) ones += java.lang.Long.bitCount(bb.getLong)
-    Some((bytes, ones.toDouble / bits))
+    * truncation, the old `[bits][k][words]` layout, zero rows — all
+    * degrade to ledger-absent). The header is compared BEFORE parsing,
+    * so a corrupt word count never sizes an allocation. */
+  private def validSketch(bytes: Array[Byte],
+                          bits: Int): Option[(Array[Byte], Double)] = {
+    val ref = serialize(emptyLedger(bits))
+    if (bytes == null || bytes.length != ref.length ||
+        !java.util.Arrays.equals(bytes, 0, HeaderBytes, ref, 0, HeaderBytes)) None
+    else {
+      val f = BloomFilter.readFrom(bytes)
+      Some((bytes, f.cardinality().toDouble / f.bitSize()))
+    }
   }
 
   /** The ledger sketch, read and VALIDATED on the driver (512 KiB —
     * the 1-row telemetry-frame pattern). None ⇔ absent or unusable. */
-  private def readLedger(s: SparkSession, dir: String, bits: Int,
-                         hashes: Int): Option[(Array[Byte], Double)] =
+  private def readLedger(s: SparkSession, dir: String,
+                         bits: Int): Option[(Array[Byte], Double)] =
     try {
       val p = new Path(ledgerPath(dir))
       if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) None
@@ -109,7 +130,7 @@ private[streaming] object IngestContract {
         val rows = s.read.parquet(ledgerPath(dir))
           .select("sketch").limit(2).collect()
         if (rows.length != 1) None
-        else validSketch(rows(0).getAs[Array[Byte]](0), bits, hashes)
+        else validSketch(rows(0).getAs[Array[Byte]](0), bits)
       }
     } catch { case NonFatal(_) => None }
 
@@ -129,12 +150,11 @@ private[streaming] object IngestContract {
     * — see the soundness invariants above). */
   def checkAndRecord(stored: DataFrame, deltaIds: DataFrame, idCol: String,
                      batchId: Long, indexDir: String, what: String,
-                     remedy: String, bits: Int = LedgerBits,
-                     hashes: Int = LedgerHashes): Unit = {
+                     remedy: String, bits: Int = LedgerBits): Unit = {
     val s = deltaIds.sparkSession
     import s.implicits._
     val key = col(idCol).cast("string")
-    val ledger = readLedger(s, indexDir, bits, hashes)
+    val ledger = readLedger(s, indexDir, bits)
     val saturated = ledger.exists(_._2 > 0.5)
     if (saturated) {
       // permanent exact-scan mode: consulting a saturated sketch would
@@ -143,40 +163,38 @@ private[streaming] object IngestContract {
       requireNewRecords(stored, deltaIds, idCol, batchId, what, remedy)
       return
     }
-    val ledDf = ledger.map { case (bytes, _) =>
-      Seq(Tuple1(bytes)).toDF("sketch")
-    }
-    val cheapPass = ledDf.exists { led =>
-      try deltaIds.crossJoin(broadcast(led)) // ONE sketch row, broadcast
-        .filter(Bloom.bloomContains(col("sketch"), key))
+    val cheapPass = ledger.exists { case (bytes, _) =>
+      // ONE sketch row, probed as a scalar subquery
+      try deltaIds
+        .filter(SparkBloom.mightContain(Seq(Tuple1(bytes)).toDF("sketch").scalar(), key))
         .take(1).isEmpty
       catch { case NonFatal(_) => false } // unusable probe ⇒ exact path
     }
     IngestTelemetry.inc(what,
       if (cheapPass) "cheap_pass"
-      else if (ledDf.isEmpty) "ledger_absent_exact"
+      else if (ledger.isEmpty) "ledger_absent_exact"
       else "bloom_hit_exact")
     if (!cheapPass)
       requireNewRecords(stored, deltaIds, idCol, batchId, what, remedy)
-    // 1-row driver materialization — the write below must not read the
-    // path it overwrites. A merge failure (sketch unusable in ways the
-    // validation missed) falls back to the from-scratch rebuild rather
-    // than aborting a batch whose contract check already PASSED.
-    def rebuilt: Array[Byte] =
-      stored.select(col(idCol)).unionByName(deltaIds.select(col(idCol)))
-        .select(Bloom.bloomAgg(key, bits, hashes).as("sketch"))
+    // Filters are built by one aggregate job and merged on the driver —
+    // the write below must not read the path it overwrites. A merge
+    // failure (sketch unusable in ways the validation missed) falls
+    // back to the from-scratch rebuild rather than aborting a batch
+    // whose contract check already PASSED.
+    def filterOf(ids: DataFrame): BloomFilter = {
+      val bytes = ids.select(SparkBloom.agg(key, ledgerItems(bits), bits))
         .head.getAs[Array[Byte]](0)
-    val sketch: Array[Byte] = ledDf match {
-      case Some(led) =>
-        try deltaIds
-          .select(Bloom.bloomAgg(key, bits, hashes).as("sketch"))
-          .unionByName(led)
-          .agg(Bloom.bloomMerge(col("sketch")).as("sketch"))
-          .head.getAs[Array[Byte]](0)
+      if (bytes == null) emptyLedger(bits) else BloomFilter.readFrom(bytes)
+    }
+    def rebuilt: BloomFilter = filterOf(
+      stored.select(col(idCol)).unionByName(deltaIds.select(col(idCol))))
+    val sketch: BloomFilter = ledger match {
+      case Some((bytes, _)) =>
+        try BloomFilter.readFrom(bytes).mergeInPlace(filterOf(deltaIds))
         catch { case NonFatal(_) => rebuilt }
       case None => rebuilt
     }
-    Seq(Tuple1(sketch)).toDF("sketch")
+    Seq(Tuple1(serialize(sketch))).toDF("sketch")
       .coalesce(1).write.mode("overwrite").parquet(ledgerPath(indexDir))
   }
 

@@ -180,8 +180,8 @@ class PlanHygieneSpec extends SparkSpec {
     // (the q_ann_bruteforce shape — 5·n by construction, not n²)
     "q_retrieval_mrr",
     "q_freq_items",
-    // consumes the keep-list artifact; its one cross join broadcasts a
-    // single-row sketch frame — bounded by construction
+    // consumes the keep-list artifact; its Bloom filter is a scalar
+    // subquery over the drop list, probed map-side
     "q_bloom_prefilter",
     // serves from the knn edge artifact (one hash-agg + left join);
     // edge construction swept via the knnEdgesFrom stand-in sweep

@@ -27,6 +27,28 @@ class IvfQuantizerSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("a vector whose length differs from the centroid dims is a named " +
+    "contract error, not a silent cell-0 assignment") {
+    // cell 0 at the origin, cell 1 at (0.5, 0.5, 0.5), quantized the
+    // way training quantizes: round((f + 4.0) * 1000)
+    val cents = Seq((0, 4000L), (1, 4500L))
+      .flatMap { case (cell, cval) => (0 until 3).map(d => (cell, d, cval)) }
+      .toDF("cell", "dim", "cval")
+    val full = Seq((1L, Array(0.5f, 0.5f, 0.5f))).toDF("vec_id", "embedding")
+    assert(IvfQuantizer.assignedDistances(full, cents)
+      .select("cell", "dist").as[(Int, Long)].collect().toSeq == Seq((1, 0L)))
+    // the short vector matches cell 1 exactly on the dims it has; without
+    // the guard its distances would be null and it would sort into cell 0
+    val short = Seq((2L, Array(0.5f, 0.5f))).toDF("vec_id", "embedding")
+    val e = intercept[Exception] {
+      IvfQuantizer.assignVectors(short, cents).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("IVF_DIM_MISMATCH: vec_id 2 has 2 dims")),
+      e.getMessage)
+  }
+
   test("cell-pruned search keeps a usable fraction of the exact top-5; probing 2 cells helps") {
     val bf = SimilarityQueries.bruteForceTopK.run(spark, sf0001)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet

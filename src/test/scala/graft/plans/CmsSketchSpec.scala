@@ -6,7 +6,7 @@ import graft.plans.Cms.{cmsMerge, cmsQuery, cmsSketch, cmsTotal}
 
 /** The count-min algebra: merge-of-shards must equal the whole-stream
   * sketch BYTE-FOR-BYTE under any sharding (pure sums — stronger than
-  * Misra-Gries's guarantee-only merges), estimates must never
+  * the frequent-items sketch's guarantee-only merges), estimates must never
   * undercount and must respect the e·n/w overcount bound, and the
   * degenerate empty merge must degrade to zeros. */
 class CmsSketchSpec extends SparkSpec {

@@ -85,7 +85,6 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("streamed windowed heavy hitters equal the batch top lists exactly") {
-    import graft.plans.Hh.{hhItems, hhSketch}
     // below-capacity premise: exactness requires k above the per-window
     // distinct-user cardinality (above it, only the eps-n guarantee)
     val maxDistinct = graft.Tables.events(spark, sf0001)
@@ -103,12 +102,13 @@ class EventStreamsSpec extends SparkSpec {
         .select("window_start", "event_type", "top_users", "n")
       val batch = graft.Tables.events(spark, sf0001)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(hhSketch(col("user_id").cast("string"), 1024).as("sk"),
+        .agg(expr("approx_top_k_accumulate(CAST(user_id AS STRING), 1024) " +
+            "FILTER (WHERE user_id IS NOT NULL)").as("sk"),
           count(lit(1)).as("n"))
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
           col("event_type"),
-          slice(hhItems(col("sk")), 1, 3).as("top_users"),
+          EventStreams.topItems(col("sk"), 1024, 3).as("top_users"),
           col("n"))
       assert(streamed.count() == batch.count() && streamed.count() > 0)
       assert(streamed.exceptAll(batch).count() == 0)

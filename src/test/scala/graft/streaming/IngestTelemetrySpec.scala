@@ -29,7 +29,7 @@ class IngestTelemetrySpec extends SparkSpec {
     val dir2 = java.nio.file.Files.createTempDirectory("graft_tel2").toString
     def check2(stored: Range, delta: Range, batch: Long): Unit =
       IngestContract.checkAndRecord(ids(stored), ids(delta), "doc_id",
-        batch, dir2, "tel sat", "n/a", bits = 64, hashes = 5)
+        batch, dir2, "tel sat", "n/a", bits = 64)
     check2(0 until 0, 1 to 100, 0L)  // absent; 100 ids saturate 64 bits
     check2(1 to 100, 101 to 110, 1L) // over-dense → permanent exact
     val snap = IngestTelemetry.snapshot.toMap

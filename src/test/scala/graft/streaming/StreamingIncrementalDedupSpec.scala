@@ -206,11 +206,10 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
       mustFail(reingest)
       // SATURATED sketch (all ones, valid header): consulting it would
       // hit every batch — the check must go exact AND stop rewriting
-      val bits = 1 << 22
-      val bb = java.nio.ByteBuffer.allocate(8 + (bits / 64) * 8)
-      bb.putInt(bits).putInt(5)
-      while (bb.remaining() >= 8) bb.putLong(-1L)
-      Seq(Tuple1(bb.array())).toDF("sketch")
+      val saturated = IngestContract.serialize(
+        IngestContract.emptyLedger(IngestContract.LedgerBits))
+      java.util.Arrays.fill(saturated, 16, saturated.length, (-1).toByte)
+      Seq(Tuple1(saturated)).toDF("sketch")
         .write.mode("overwrite").parquet(ledger)
       mustFail(reingest)
       val before = spark.read.parquet(ledger).head.getAs[Array[Byte]](0)
@@ -220,6 +219,27 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
       val after = spark.read.parquet(ledger).head.getAs[Array[Byte]](0)
       assert(java.util.Arrays.equals(before, after),
         "a saturated ledger must not be rewritten every batch")
+      // OLD-LAYOUT ledger ([bits:int][k:int][words], the format before
+      // Spark's filter): not a valid sketch, so the exact path runs, and
+      // the next passing batch rebuilds it in Spark's layout
+      val bits = IngestContract.LedgerBits
+      val old = java.nio.ByteBuffer.allocate(8 + (bits / 64) * 8)
+      old.putInt(bits).putInt(5)
+      Seq(Tuple1(old.array())).toDF("sketch")
+        .write.mode("overwrite").parquet(ledger)
+      mustFail(reingest)
+      DedupStreams.processBatch(
+        docs.filter(col("doc_id") >= 30 && col("doc_id") < 40),
+        batchId = 2L, corpusT, pairT, bandD, buckets = 4)
+      val rebuilt = org.apache.spark.util.sketch.BloomFilter.readFrom(
+        spark.read.parquet(ledger).head.getAs[Array[Byte]](0))
+      assert(rebuilt.isCompatible(IngestContract.emptyLedger(bits)),
+        "old-layout ledger not rebuilt in the current layout")
+      val ids = spark.read.parquet(bandD).select("doc_id").distinct()
+        .select(xxhash64(col("doc_id").cast("string"))).as[Long].collect()
+      assert(ids.nonEmpty)
+      assert(ids.forall(rebuilt.mightContainLong),
+        "rebuilt ledger misses an ingested id")
     } finally cleanup()
   }
 
