@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.VectorMap
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** Benchmark main: times every registered query on the sf-dir given by
   * SPARK_GRAFT_SF_DIR.
@@ -11,56 +15,46 @@ import org.apache.spark.sql.SparkSession
   * directory instead of stdout.
   */
 object Bench {
+
+  /** What one bench run measured. `queries` holds each query's best
+    * time over the passes (None = failed in every pass); the drive
+    * pairs are (ok, seconds). */
+  final case class Run(
+      sf: String,
+      queries: Seq[(String, Option[Double])],
+      builds: Seq[Harness.Build],
+      provenance: Seq[(String, String)],
+      twin: (Boolean, Double),
+      bloomLedger: Seq[(String, Seq[(String, Long)])],
+      admission: (Boolean, Double),
+      admissionFunnel: Seq[(Int, Long)],
+      diagnostic: Boolean)
+
+  /** The last stdout line and the files to write: none for a
+    * diagnostic run, so a subset can never re-baseline the gate. */
+  final case class Report(line: String, files: Seq[(String, String)])
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Diagnostic filter: time a subset inside the REAL bench environment
+    // (post-prebuild, two interleaved passes), for bisecting effects
+    // that only appear in-bench. The telemetry drives are skipped under
+    // it: they are canonical-artifact payload, and an untimed 30 s
+    // admission drive would defeat a bisection loop.
+    val only = Harness.only()
     val spark = Session.local("graft-bench") // same shapes Verify checked
     // Warm the JVM/codegen/scan paths so the first measured query does
     // not absorb session startup (~5s of JIT + classloading).
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .selectExpr("sum(l_quantity)").collect()
-    // One timed attempt: full materialization (a bare count() lets Spark
-    // skip map-only projections entirely, under-reporting cost), caches
-    // cleared after so queries don't pay each other's memory pressure.
-    def attempt(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      if (ok) Some(dt) else None
-    }
     // Pre-build every IndexCatalog artifact, timed separately: with
     // memoization, min-of-two would otherwise exclude index-build cost
     // from whichever query happened to build first (round-3 advice).
     // After this, every artifact-backed query measures SERVING cost —
     // the steady-state number a train-once/query-many deployment sees —
     // and build cost is reported explicitly as idx_* entries.
-    // Each build records whether it actually TRAINED or adopted a
-    // manifest-valid artifact from a previous process (IndexCatalog's
-    // content-keyed reuse): an adopted "build" is a registration replay,
-    // and reporting it as training cost would understate a cold run.
-    // Diagnostic builder filter (pairs with SPARK_GRAFT_ONLY below): a
-    // comma list of idx_* names to prebuild, for bisecting prebuild
-    // side effects. Driver never sets it; queries that consume an
-    // unbuilt artifact will build lazily inside their own timing.
-    val buildOnly = sys.env.get("SPARK_GRAFT_BUILD_ONLY")
-      .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
-    val builds = graft.operators.IndexBuilds.all
-      .filter { case (n, _) => buildOnly.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val b0 = graft.sources.IndexCatalog.buildCount.get()
-      val ok = try { fn(spark, sfDir); true }
-               catch { case e: Throwable =>
-                 System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val trained = graft.sources.IndexCatalog.buildCount.get() > b0
-      spark.catalog.clearCache()
-      (name, if (ok) Some(dt) else None, trained)
-    }
+    val builds = Harness.prebuild(spark, sfDir, "bench")
     // Min of two INTERLEAVED full passes: this host has noisy co-tenants
     // that inflate measurements 5-10x, sometimes as a multi-minute burst.
     // Back-to-back attempts (round ≤6) shared the burst, so a contiguous
@@ -68,31 +62,11 @@ object Bench {
     // list twice puts each query's two attempts minutes apart, so a burst
     // inflates DIFFERENT queries in each pass and the per-query min stays
     // clean. One success is enough — a transient failure must not mask it.
-    // Diagnostic filter (the Verify SPARK_GRAFT_ONLY convention): time a
-    // subset inside the REAL bench environment (post-prebuild, two
-    // interleaved passes) — for bisecting effects that only appear
-    // in-bench. The driver never sets it; the regression gate below is
-    // skipped under a filter so a subset run can't re-baseline anything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
-    // ANY diagnostic filter makes the whole run print-only (round-16
-    // advice): a SPARK_GRAFT_BUILD_ONLY run skips prebuilds, so lazy
-    // in-query builds inflate query times — letting it overwrite
-    // BENCH_DETAIL.json would silently re-baseline the regression gate
-    // loose. The telemetry drives below are also skipped under a
-    // filter — they are canonical-artifact payload, and slowing a
-    // bisection loop with an untimed 30 s admission drive defeats the
-    // filter's purpose.
-    val diagnostic = only.nonEmpty || buildOnly.nonEmpty
-    val qlist = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val qlist = only.getOrElse(Harness.all)
     val passes = Seq.fill(2)(qlist.map { case (name, fn) =>
-      name -> attempt(name, fn)
-    }.toMap)
-    val results = qlist.map { case (name, _) =>
-      val times = passes.flatMap(_(name))
-      name -> (if (times.nonEmpty) Some(times.min) else None)
-    }
+      Harness.time(spark, "bench", name, fn, sfDir)
+    })
+    val queries = qlist.map(_._1).zip(passes.transpose.map(_.flatten.minOption))
     // Bloom-ledger telemetry (r15 verdict item 8): drive the
     // representative incremental twin through the paths a deployment
     // sees — seed (ledger invalidated), first batch (absent ledger →
@@ -111,7 +85,7 @@ object Bench {
     // how the r16 canonical lost its bloom-ledger telemetry. Sweep
     // both names (metastore entry AND warehouse dir — a dir can
     // survive its catalog entry after a crash) BEFORE seeding, and
-    // again in `finally` so this run's own failure can't strand them.
+    // again after so this run's own failure can't strand them.
     val twinTables = Seq("bench_twin_corpus", "bench_twin_pairs")
     def sweepTwinTables(): Unit = twinTables.foreach { t =>
       try {
@@ -124,166 +98,132 @@ object Bench {
         System.err.println(s"[bench] twin sweep of $t failed: ${e.getMessage}")
       }
     }
-    val twinT0 = System.nanoTime()
-    val twinOk = !diagnostic && {
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_bench_twin").toString
-      try {
+    val twin = if (only.nonEmpty) (false, 0.0) else
+      Harness.drive(spark, "bench", "twin") { scratch =>
         sweepTwinTables()
-        val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-        val Seq(corpusT, pairT) = twinTables
-        val bandD = s"$scratch/bands"
-        graft.streaming.DedupStreams.seedCorpus(
-          spark, docs.filter(col("doc_id") % 10 < 7), corpusT, bandD, 4)
-        def slice(m: Int) = docs.filter(col("doc_id") % 10 === m)
-        graft.streaming.DedupStreams.processBatch(slice(7), 0L, corpusT, pairT, bandD, 4)
-        graft.streaming.DedupStreams.processBatch(slice(8), 1L, corpusT, pairT, bandD, 4)
-        graft.streaming.DedupStreams.processBatch(slice(9), 2L, corpusT, pairT, bandD, 4)
-        graft.streaming.DedupStreams.processBatch(slice(9), 2L, corpusT, pairT, bandD, 4)
-        true
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] twin drive failed: ${e.getMessage}"); false
-      } finally {
-        sweepTwinTables()
-        val p = new org.apache.hadoop.fs.Path(scratch)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        try {
+          val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+          val Seq(corpusT, pairT) = twinTables
+          val bandD = s"$scratch/bands"
+          graft.streaming.DedupStreams.seedCorpus(
+            spark, docs.filter(col("doc_id") % 10 < 7), corpusT, bandD, 4)
+          def slice(m: Int) = docs.filter(col("doc_id") % 10 === m)
+          graft.streaming.DedupStreams.processBatch(slice(7), 0L, corpusT, pairT, bandD, 4)
+          graft.streaming.DedupStreams.processBatch(slice(8), 1L, corpusT, pairT, bandD, 4)
+          graft.streaming.DedupStreams.processBatch(slice(9), 2L, corpusT, pairT, bandD, 4)
+          graft.streaming.DedupStreams.processBatch(slice(9), 2L, corpusT, pairT, bandD, 4)
+        } finally sweepTwinTables()
       }
-    }
-    val twinSec = (System.nanoTime() - twinT0) / 1e9
-    spark.catalog.clearCache()
-    val bloomCounters = graft.streaming.IngestTelemetry.snapshot
+    val bloomLedger = graft.streaming.IngestTelemetry.snapshot
     // Admission-funnel telemetry (round 16): drive the composed
     // curation twin — train the three frozen models, admit the corpus
     // in three out-of-order slices, replay one — and land the per-level
     // verdict counts, so the on-arrival funnel's stage attribution is
     // audited numbers in the canonical artifact. Timed separately,
     // never part of the regression-gated query total.
-    val admT0 = System.nanoTime()
     var admLevels: Seq[(Int, Long)] = Seq.empty
-    val admOk = !diagnostic && {
-      val admScratch = java.nio.file.Files
-        .createTempDirectory("graft_bench_adm").toString
-      try {
+    val admission = if (only.nonEmpty) (false, 0.0) else
+      Harness.drive(spark, "bench", "admission") { scratch =>
         val docsA = Tables.documents(spark, sfDir)
           .select("doc_id", "source", "text")
         val m = graft.streaming.AdmissionStreams.train(
-          spark, sfDir, s"$admScratch/models")
+          spark, sfDir, s"$scratch/models")
         def slice(k: Int) = docsA.filter(col("doc_id") % 3 === k)
-        graft.streaming.AdmissionStreams.admitBatch(slice(2), 0L, m, s"$admScratch/out")
-        graft.streaming.AdmissionStreams.admitBatch(slice(0), 1L, m, s"$admScratch/out")
-        graft.streaming.AdmissionStreams.admitBatch(slice(1), 2L, m, s"$admScratch/out")
-        graft.streaming.AdmissionStreams.admitBatch(slice(2), 3L, m, s"$admScratch/out")
+        graft.streaming.AdmissionStreams.admitBatch(slice(2), 0L, m, s"$scratch/out")
+        graft.streaming.AdmissionStreams.admitBatch(slice(0), 1L, m, s"$scratch/out")
+        graft.streaming.AdmissionStreams.admitBatch(slice(1), 2L, m, s"$scratch/out")
+        graft.streaming.AdmissionStreams.admitBatch(slice(2), 3L, m, s"$scratch/out")
         admLevels = graft.streaming.AdmissionStreams
-          .admitted(spark, s"$admScratch/out")
+          .admitted(spark, s"$scratch/out")
           .groupBy("level").count().collect()
           .map(r => r.getInt(0) -> r.getLong(1)).toSeq.sortBy(_._1)
-        true
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] admission drive failed: ${e.getMessage}")
-        false
-      } finally { // scratch (3 model sets + 4 verdict partitions) must not
-        val p = new org.apache.hadoop.fs.Path(admScratch) // outlive the run
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       }
-    }
-    val admSec = (System.nanoTime() - admT0) / 1e9
-    spark.catalog.clearCache()
     spark.stop()
-    def r3(v: Double) = math.rint(v * 1000) / 1000
-    val succeeded = results.collect { case (k, Some(v)) => k -> r3(v) }
-    val failed = results.collect { case (k, None) => k } ++
-      builds.collect { case (k, None, _) => k }
+    val out = report(
+      Run(sfDir, queries, builds,
+        graft.sources.IndexCatalog.provenance.toSeq.sortBy(_._1), twin,
+        bloomLedger, admission, admLevels,
+        diagnostic = only.nonEmpty),
+      committedDetail())
+    out.files.foreach { case (f, txt) => Files.writeString(Paths.get(f), txt) }
+    println(out.line)
+  }
+
+  /** The summary line, `BENCH_DETAIL.json` and the regression gate
+    * against `prevDetail` (the last committed detail). */
+  def report(run: Run, prevDetail: Option[String]): Report = {
+    import Harness.r3
+    val succeeded = run.queries.collect { case (k, Some(v)) => k -> r3(v) }
+    // Explicit failed list: no -1 sentinels that a summing consumer
+    // could mistake for timings.
+    val failed = run.queries.collect { case (k, None) => k } ++
+      run.builds.collect { case Harness.Build(k, None, _) => k }
     val total = r3(succeeded.map(_._2).sum)
-    val builtOk = builds.collect { case (k, Some(v), _) => k -> r3(v) }
-    val adopted = builds.collect { case (k, Some(_), false) => k }
+    val builtOk = run.builds.collect { case Harness.Build(k, Some(v), _) => k -> r3(v) }
+    val adopted = run.builds.collect { case Harness.Build(k, Some(_), false) => k }
     val indexBuild = r3(builtOk.map(_._2).sum)
-    // Regression gate (round-5 verdict item 6): compare per-query times
-    // against the last COMMITTED BENCH_DETAIL.json — read via
-    // `git show HEAD:…`, never the working-tree file, so an uncommitted
-    // noisy run can't silently loosen the baseline (round-10 verdict:
-    // the driver's 1.23x co-tenant-noisy run overwrote the working tree
-    // and would have baselined the next run ~23% loose). Working-tree
-    // fallback only when git itself is unavailable. Same-format
-    // self-parse — the queries object is flat {"name":sec,...}.
-    val prevQueries: Map[String, Double] = {
-      val committed: Option[String] =
-        try {
-          val pb = new ProcessBuilder("git", "show", "HEAD:BENCH_DETAIL.json")
-          pb.redirectErrorStream(false)
-          val proc = pb.start()
-          val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-          if (proc.waitFor() == 0 && out.nonEmpty) Some(out) else None
-        } catch { case _: Exception => None }
-      val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
-      val fromDisk: Option[String] =
-        if (committed.isDefined || !java.nio.file.Files.exists(p)) None
-        else Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      committed.orElse(fromDisk) match {
-        case None => Map.empty
-        case Some(txt) =>
-          // Only compare same-scale runs: a local sf0.001 probe must not
-          // become the baseline a subsequent sf0.1 run "regresses" from.
-          val prevSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-          if (!prevSf.contains(sfDir)) Map.empty
-          else {
-            val obj = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-              .map(_.group(1)).getOrElse("")
-            """"([^"]+)":([0-9.eE+-]+)""".r.findAllMatchIn(obj)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }
-      }
-    }
+    // Only compare same-scale runs: a local sf0.001 probe must not
+    // become the baseline a subsequent sf0.1 run "regresses" from.
+    val prevQueries: Map[String, Double] = prevDetail
+      .flatMap(txt => Try(Harness.parse(txt)).toOption)
+      .filter(_.path("sf").asText == run.sf)
+      .map(_.path("queries").properties.asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap)
+      .getOrElse(Map.empty)
     val regressions = (for {
       (k, cur) <- succeeded
       prev <- prevQueries.get(k)
       // only flag swings that are both large (>=2x) and material
       // (>=0.5s lost) — tiny queries jitter on a shared host
       if prev > 0 && cur >= 2 * prev && cur - prev >= 0.5
-    } yield (k, prev, cur, math.rint(cur / prev * 100) / 100))
-      .sortBy { case (_, p, c, _) => p - c }
-    // Per-query detail (and the explicit failed list — no -1 sentinels
-    // that a summing consumer could mistake for timings) to a file.
-    val qs = succeeded.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val bs = builtOk.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val fl = failed.map(k => s"\"$k\"").mkString("[", ",", "]")
-    val ad = adopted.map(k => s"\"$k\"").mkString("[", ",", "]")
-    // adopt-vs-rebuild attribution per artifact key (r11 verdict item 1:
-    // a stale-artifact straddle must be visible evidence, not forensics)
-    val prov = graft.sources.IndexCatalog.provenance.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"$k\":\"$v\"" }.mkString("{", ",", "}")
-    val rg = regressions.map { case (k, p, c, r) =>
-      s"""{"query":"$k","prev":$p,"cur":$c,"ratio":$r}"""
-    }.mkString("[", ",", "]")
-    val bl = bloomCounters.map { case (w, ks) =>
-      s"\"$w\":" + ks.map { case (k, n) => s"\"$k\":$n" }
-        .mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    val af = admLevels.map { case (l, n) => s"\"level$l\":$n" }
-      .mkString("{", ",", "}")
-    val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${succeeded.size},"queries":$qs,"index_build_sec":$indexBuild,"index_builds":$bs,"index_adopted":$ad,"artifact_provenance":$prov,"regressions":$rg,"failed":$fl,"twin_ingest_sec":${r3(twinSec)},"twin_ingest_ok":$twinOk,"bloom_ledger":$bl,"admission_sec":${r3(admSec)},"admission_ok":$admOk,"admission_funnel":$af,"sf":"$sfDir"}"""
-    if (diagnostic) { // ANY filter: print-only, never overwrite the canonical
-      println(s"""{"diagnostic":true,"detail":$detail}""")
-      return
+    } yield (k, prev, cur)).sortBy { case (_, p, c) => p - c }.map { case (k, p, c) =>
+      VectorMap("query" -> k, "prev" -> p, "cur" -> c,
+        "ratio" -> math.rint(c / p * 100) / 100)
     }
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      detail.getBytes("UTF-8"))
-    // Short summary is the LAST stdout line (the parseable artifact) AND
-    // a file — sbt appends its own trailing lines to stdout, which
-    // defeated the driver's last-line parse in round 2 (BENCH_r02.json
-    // recorded "parsed": null); the file can't be defeated that way.
-    // ADDITIVE per-query map (r20 verdict item 5: the driver could not
-    // adjudicate per-query movement because the summary carried only the
-    // total): every existing field is unchanged and `queries` is the
-    // same flat {"name":sec,…} object BENCH_DETAIL.json has always
-    // carried — ~6 KB, far below the round-1 truncation regime, and the
-    // file copy is the fallback if a harness ever truncates the line.
-    val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${succeeded.size},"n_failed":${failed.size},"queries":$qs,"index_build_sec":$indexBuild,"n_index_adopted":${adopted.size},"n_regressions":${regressions.size},"sf":"$sfDir"}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_SUMMARY.json"),
-      summary.getBytes("UTF-8"))
-    println(summary)
+    val qs = VectorMap.from(succeeded)
+    val head = VectorMap[String, Any]("metric" -> "total", "value" -> total,
+      "unit" -> "sec", "n_queries" -> succeeded.size)
+    val detail = Harness.json(head ++ VectorMap(
+      "queries" -> qs, "index_build_sec" -> indexBuild,
+      "index_builds" -> VectorMap.from(builtOk), "index_adopted" -> adopted,
+      // adopt-vs-rebuild attribution per artifact key (r11 verdict item
+      // 1: a stale-artifact straddle must be visible evidence)
+      "artifact_provenance" -> VectorMap.from(run.provenance),
+      "regressions" -> regressions, "failed" -> failed,
+      "twin_ingest_sec" -> r3(run.twin._2), "twin_ingest_ok" -> run.twin._1,
+      "bloom_ledger" -> VectorMap.from(
+        run.bloomLedger.map { case (w, ks) => w -> VectorMap.from(ks) }),
+      "admission_sec" -> r3(run.admission._2),
+      "admission_ok" -> run.admission._1,
+      "admission_funnel" -> VectorMap.from(
+        run.admissionFunnel.map { case (l, n) => s"level$l" -> n }),
+      "sf" -> run.sf))
+    if (run.diagnostic) Report(s"""{"diagnostic":true,"detail":$detail}""", Nil)
+    else {
+      // The summary is the LAST stdout line (the parseable artifact) AND a
+      // file — sbt appends its own trailing lines to stdout, which
+      // defeated the driver's last-line parse in round 2. It carries the
+      // same flat per-query map as the detail (r20 verdict item 5), ~6 KB.
+      val summary = Harness.json(head ++ VectorMap(
+        "n_failed" -> failed.size, "queries" -> qs,
+        "index_build_sec" -> indexBuild, "n_index_adopted" -> adopted.size,
+        "n_regressions" -> regressions.size, "sf" -> run.sf))
+      Report(summary,
+        Seq("BENCH_DETAIL.json" -> detail, "BENCH_SUMMARY.json" -> summary))
+    }
+  }
+
+  /** The regression gate's baseline: the last COMMITTED detail (`git
+    * show HEAD:…`), never the working-tree file, so an uncommitted noisy
+    * run can't silently loosen it (round-10 verdict). The working-tree
+    * file is the fallback only when git itself is unavailable. */
+  private def committedDetail(): Option[String] = {
+    val committed = Try {
+      val proc = new ProcessBuilder("git", "show", "HEAD:BENCH_DETAIL.json")
+        .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+      val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+      Option.when(proc.waitFor() == 0 && out.nonEmpty)(out)
+    }.toOption.flatten
+    committed.orElse(Try(Files.readString(Paths.get("BENCH_DETAIL.json"))).toOption)
   }
 }

@@ -8,15 +8,16 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val queries = if (args.length > 1) Harness.resolve(args.tail.toSeq) else Harness.all
     val spark = Session.local("graft-explain", Session.envCpus(32))
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    queries.foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
       println(s"\n========== $name ==========")
       df.explain("formatted")
-      val t0 = System.nanoTime()
-      val n = df.queryExecution.toRdd.count() // full materialization
-      println(f"rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
+      var rows = 0L
+      Harness.attempt(spark, "explain", name) {
+        rows = df.queryExecution.toRdd.count() // full materialization
+      }.foreach(t => println(f"rows=$rows time=$t%.2fs"))
     }
     spark.stop()
   }

@@ -1,48 +1,29 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.VectorMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Session.local("graft-verify")
-    new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b dumps just those
     // queries (+ their oracle entries). The driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
-    def keep(name: String) = only.forall(_.contains(name))
+    val only = Harness.only()
+    val spark = Session.local("graft-verify")
+    new java.io.File(outDir).mkdirs()
+    def writeJson(file: String, entries: Seq[(String, String)]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"),
+        Harness.json(VectorMap.from(entries)))
     var mismatches: Seq[String] = Nil
     // Artifact provenance (r11 verdict item 1): on a full gate run,
     // pre-build every catalog artifact so each adopt-vs-rebuild decision
     // happens HERE, attributably, instead of lazily inside whichever
     // query touches the artifact first — the round-11 red row
     // (q_quality_tertiles) was a suspected stale-artifact straddle the
-    // gate's output could not attribute. GRAFT_VERIFY_REBUILD=1 forces a
-    // fresh sweep (a clean-room gate run at ~index-build cost).
+    // gate's output could not attribute. GRAFT_CATALOG_REBUILD=1 forces
+    // a clean-room sweep (each key is ensured once per process).
     if (only.isEmpty) {
-      val sweep = sys.env.get("GRAFT_VERIFY_REBUILD").exists(_.nonEmpty)
-      if (sweep) sys.props("graft.catalog.rebuild") = "1"
-      graft.operators.IndexBuilds.all.foreach { case (name, fn) =>
-        try fn(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] prebuild $name failed: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
-      }
-      if (sweep) sys.props.remove("graft.catalog.rebuild")
+      Harness.prebuild(spark, sfDir, "verify")
       // Artifact-vs-live sentinel (r12 verdict item 2): before trusting
       // any adopted artifact with a full-aggregate consumer, digest the
       // served bytes against the live builder plan; a mismatch
@@ -56,9 +37,7 @@ object Verify {
       sentinel.foreach { case (k, v) =>
         System.err.println(s"[verify] sentinel $k: $v")
       }
-      Files.writeString(Paths.get(s"$outDir/sentinel_report.json"),
-        sentinel.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-          .mkString("{", ",", "}"))
+      writeJson("sentinel_report.json", sentinel)
       mismatches = sentinel.collect {
         case (k, v) if v.startsWith("MISMATCH") => s"$k: $v"
       }
@@ -75,26 +54,22 @@ object Verify {
       }
       spark.catalog.clearCache()
     }
-    SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val queries = only.getOrElse(Harness.all)
+    queries.foreach { case (name, fn) =>
+      Harness.attempt(spark, "verify", name) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
       }
-      // queries that cache internally (LSH) must not pin memory for the
-      // remaining ~60 queries
-      spark.catalog.clearCache()
     }
     // The provenance ledger (pre-built artifacts above + any ensured
     // lazily by the queries themselves): stderr lines for the human
     // reading the gate log, a JSON file beside the dumps for the record.
     val prov = graft.sources.IndexCatalog.provenance.toSeq.sortBy(_._1)
     prov.foreach { case (k, v) => System.err.println(s"[verify] artifact $k: $v") }
-    Files.writeString(Paths.get(s"$outDir/artifact_provenance.json"),
-      prov.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    val json = SparkEntry.oracleSql.filter(e => keep(e._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeJson("artifact_provenance.json", prov)
+    val oracles = SparkEntry.oracleSql
+    writeJson("oracle_sql.json",
+      queries.flatMap { case (k, _) => oracles.get(k).map(k -> _) })
     spark.stop()
     // A non-converging sentinel rebuild means results were dumped from
     // an artifact whose bytes provably diverge from its live plan —

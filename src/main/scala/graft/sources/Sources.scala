@@ -55,11 +55,6 @@ object Sources {
       .withColumn("log_date",
         to_date(regexp_extract(input_file_name(), "(\\d{8})/[^/]*$", 1), "yyyyMMdd"))
 
-  /** Parity escape hatch: schema-inferred variant of [[interactionLogs]]
-    * for verifying the declared schema against live data. */
-  def interactionLogsInferred(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.json(paths: _*)
-
   /** Corrupt-tolerant NDJSON ingest: PERMISSIVE parse with broken lines
     * CAPTURED in `_corrupt` instead of silently nulled or failing the
     * job — real crawl/export feeds always carry some torn lines.
