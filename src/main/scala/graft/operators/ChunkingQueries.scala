@@ -145,14 +145,15 @@ object ChunkingQueries {
     * both the argmax and the next state, and an unmaterialized chain
     * would re-execute its lineage exponentially in the step count —
     * the same reason iterative k-means materializes between rounds. No
-    * driver-side data; the merge decision stays a 1-row broadcast
-    * frame. */
+    * driver-side data; the merge decision stays a 1-row frame, attached
+    * by scalar subquery ([[graft.plans.OneRow]]). */
   private def bpeArtifactDir(s: SparkSession, d: String): String = {
     import graft.sources.IndexCatalog
     IndexCatalog.ensure(s, s"bpe_merges_${IndexCatalog.tag(d)}",
         inputs = Seq(d),
         owners = Seq(ChunkingQueries.getClass, Tables.getClass,
-          graft.functions.TextFunctions.getClass)) { dir =>
+          graft.functions.TextFunctions.getClass,
+          graft.plans.OneRow.getClass)) { dir =>
       bpeTrainInto(s, Tables.documents(s, d), dir)
     }
   }
@@ -192,7 +193,7 @@ object ChunkingQueries {
           .unionByName(s.range(1).select(
             lit("").as("pa"), lit("").as("pb"), lit(1).as("pri")))
           .orderBy("pri").limit(1).select("pa", "pb")
-        vocab = st.crossJoin(broadcast(guarded))
+        vocab = graft.plans.OneRow.attach(st, guarded)
           .withColumn("syms", bpeApplyMerge(col("syms"), col("pa"), col("pb")))
           .select("w", "wn", "syms")
       }

@@ -30,8 +30,7 @@ object CorpusQueries {
 
   /** The unexecuted benchmark-gram plan: distinct word 5-grams of the
     * held-out eval slice (`doc_id % 97 = 0` stands in for "the benchmark
-    * suite"). Plan-only — the hygiene sweep checks this shape; runtime
-    * callers go through [[benchGrams]]. */
+    * suite"). Plan-only; runtime callers go through [[benchGrams]]. */
   private[graft] def benchGramsPlan(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
     Tables.documents(s, d)

@@ -52,7 +52,7 @@ object DedupQueries {
   private val semOwners: Seq[Class[_]] = Seq(
     DedupQueries.getClass, Tables.getClass,
     classOf[graft.plans.CosineSimilarity],
-    IvfQuantizer.getClass, IvfIndex.getClass,
+    IvfQuantizer.getClass, IvfIndex.getClass, graft.plans.OneRow.getClass,
     // supplies ivfK/ivfIters — the sem_* keys don't encode k, so a
     // constant change must invalidate via the fingerprint (OwnersGuardSpec)
     SimilarityQueries.getClass)
@@ -239,8 +239,7 @@ object DedupQueries {
     * corpus-sized). */
   /** Per-document distinct 3-gram shingle sets — the input frame every
     * LSH stage derives from. Uncached: callers own the cache lifecycle
-    * (the builder caches for its one materializing pass; the hygiene
-    * sweep plans it cold). */
+    * (the builder caches for its one materializing pass). */
   private[graft] def lshShingles(s: SparkSession, d: String): DataFrame =
     shinglesOf(
       Tables.documents(s, d)
@@ -260,8 +259,7 @@ object DedupQueries {
     * collisions) → exact-Jaccard verify at 0.5 via plain equi-joins on
     * doc id (NO broadcast hints — the shingle frame is corpus-sized; AQE
     * broadcasts the candidate side when it measures small). Pure plan
-    * construction — nothing executes, so PlanHygieneSpec can inspect the
-    * exact shape the builder runs without materializing the artifact. */
+    * construction — nothing executes. */
   private[graft] def lshPairsFrom(sh: DataFrame): DataFrame =
     lshPairsFrom(sh, LshMaxBucket)
 
@@ -648,7 +646,7 @@ object DedupQueries {
     * pigeonhole two-half blocking → (half, bits) candidate equi-join →
     * exact bit-diff verify via plain equi-joins on doc id (the signature
     * frame is corpus-sized, so no static broadcast hint — AQE sizes it).
-    * Pure plan construction for the builder AND the hygiene sweep.
+    * Pure plan construction.
     *
     * Half-buckets above [[SimhashMaxBucket]] are excluded from candidate
     * generation (bounding per-bucket work at cap²/2) — the guard the
@@ -971,7 +969,7 @@ object DedupQueries {
     * on vec id (NO broadcast hints — the vector frame is corpus-sized;
     * a static hint on it is the round-2 "guaranteed OOM at 100 TB"
     * shape. AQE broadcasts the candidate side when it measures small).
-    * Pure plan construction for the builder AND the hygiene sweep. */
+    * Pure plan construction. */
   /** The candidate half of [[embeddingPairsFrom]] — exposed so the
     * scale smoke can report the candidate-count-vs-corpus-size curve
     * per geometry setting. */
@@ -1118,42 +1116,6 @@ object DedupQueries {
       .agg(count(lit(1)).as("n_docs"), sum(size(col("w"))).as("ws_tokens"))
       .orderBy("source")
   }
-
-  /** The unexecuted pair-generation plans behind every [[IndexCatalog]]
-    * artifact this object builds, keyed by artifact family. The hygiene
-    * sweep plan-checks THESE (the shapes the builders actually execute)
-    * instead of the registered queries, whose own plans are just
-    * artifact parquet scans — and whose construction would materialize
-    * the artifact mid-sweep. Nothing here caches or executes. */
-  private[graft] def builderPlans(s: SparkSession, d: String): Seq[(String, DataFrame)] = Seq(
-    "lsh_pairs"     -> lshPairsFrom(lshShingles(s, d)),
-    "simhash_pairs" -> simhashPairsFrom(simhashFrame(s, d)),
-    "emb_pairs"     -> embeddingPairsFrom(embeddingVectors(s, d)),
-    "bench_grams"   -> CorpusQueries.benchGramsPlan(s, d),
-    // sem_pairs consumes the persisted IVF assignment table, whose
-    // ensure() would materialize mid-sweep; a label-as-cell stand-in has
-    // the IDENTICAL join/guard shape downstream of the assignment scan
-    "sem_pairs"     -> semanticPairsFrom(
-      Tables.embeddings(s, d).select(col("vec_id"), col("label").as("cell")),
-      embeddingVectors(s, d)),
-    // same stand-in rule for the probed variant: two label-derived
-    // probe rows per vector give the identical downstream join shape
-    "sem2_pairs"    -> semanticPairsProbed(
-      Tables.embeddings(s, d).select(col("vec_id"), col("label").as("cell"))
-        .unionByName(Tables.embeddings(s, d)
-          .select(col("vec_id"), (col("label") + 1).as("cell"))),
-      embeddingVectors(s, d)),
-    "inv_index"     -> TextQueries.invertedIndexPlan(s, d),
-    "er_mb_pairs"   -> ResolutionQueries.multiBlockPlan(s, d),
-    "img_phash"     -> MultimodalQueries.phashPlan(s, d),
-    "gif_phash"     -> MultimodalQueries.gifFramePlan(s, d),
-    "inv_doclens"   -> TextQueries.doclensPlan(s, d),
-    // same label-as-cell stand-in rule as sem_pairs: the kNN edge build
-    // consumes the persisted IVF assignment table; the stand-in has the
-    // identical candidate-join + window shape downstream of that scan
-    "knn_edges"     -> SimilarityQueries.knnEdgesFrom(
-      Tables.embeddings(s, d).select(col("vec_id"), col("label").as("cell")),
-      Tables.embeddings(s, d).select("vec_id", "embedding")))
 
   /** Exact all-pairs cosine baseline, hard-bounded to vec_id < 500 — the
     * recall oracle for the LSH pipeline above (same role as

@@ -116,12 +116,13 @@ object DsirQueries {
     // (doc_id, source, b) rows (r20 lesson: a checkpoint wins exactly
     // when the duplicated subtree is the corpus pass). The 256-row
     // model then materializes once more for its two consumers (totals
-    // agg + broadcast score join).
+    // agg + score join; the totals ride along as a scalar subquery and
+    // AQE broadcasts the model while it measures small).
     val bk = bucketTokens(Tables.documents(s, d)).materializeOnce
     val bt = bucketModel(bk).materializeOnce
     val tot = bt.agg(sum("ct").as("nt"), sum("cr").as("nr"))
     bk.filter(!isTarget)
-      .join(broadcast(bt.crossJoin(broadcast(tot))), Seq("b"))
+      .join(graft.plans.OneRow.attach(bt, tot), Seq("b"))
       .withColumn("s", scoreCol)
       .groupBy("doc_id", "source")
       .agg(count(lit(1)).as("n_tokens"),
@@ -139,7 +140,8 @@ object DsirQueries {
     val dir = IndexCatalog.ensure(s, s"dsir_weights_${IndexCatalog.tag(d)}",
         inputs = Seq(d),
         owners = Seq(DsirQueries.getClass, graft.Tables.getClass,
-          graft.functions.TextFunctions.getClass)) { dir =>
+          graft.functions.TextFunctions.getClass,
+          graft.plans.OneRow.getClass)) { dir =>
       weightsFrame(s, d).write.mode("overwrite").parquet(s"$dir/weights")
       IndexCatalog.declareIds("path", "weights", Seq("doc_id"))
     }

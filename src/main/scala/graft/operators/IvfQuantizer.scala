@@ -28,9 +28,10 @@ import graft.plans.Materialize.MaterializeOps
   *    restricted to the query's trained cell.
   *
   * Scale shape: vectors live long-form (vec_id, dim, x) — assignment is
-  * a broadcast join against k·dim centroid rows and centroid recompute
-  * is a (cell, dim) hash-agg, both embarrassingly parallel; nothing ever
-  * collects to the driver. At 100 TB the same plan holds with k in the
+  * an unhinted equi-join against k·dim centroid rows (AQE broadcasts
+  * them while they measure small) and centroid recompute is a
+  * (cell, dim) hash-agg, both embarrassingly parallel; only the k seed
+  * ids reach the driver. At 100 TB the same plan holds with k in the
   * thousands (centroid frame stays tiny).
   */
 object IvfQuantizer {
@@ -48,7 +49,7 @@ object IvfQuantizer {
   private[operators] def nearestCells(vqDf: DataFrame, cent: DataFrame, n: Int): DataFrame = {
     val d2 = (col("x") - col("cval")) * (col("x") - col("cval"))
     val byDist = Window.partitionBy("vec_id").orderBy(col("dist"), col("cell"))
-    vqDf.join(broadcast(cent), Seq("dim"))
+    vqDf.join(cent, Seq("dim"))
       .groupBy("vec_id", "cell").agg(sum(d2).as("dist"))
       .withColumn("rn", row_number().over(byDist))
       .filter(col("rn") <= n)
@@ -62,7 +63,7 @@ object IvfQuantizer {
     * body over an element named `f`. */
   private val QuantF = "CAST(round((CAST(f AS DOUBLE) + 4.0) * 1000) AS BIGINT)"
 
-  /** The whole centroid frame as ONE broadcastable row: `cents` =
+  /** The whole centroid frame as ONE row: `cents` =
     * array of (cell, carr) structs ordered by cell, carr = the cell's
     * cvals ordered by dim. k·dim values total — metadata-sized. */
   private def centroidsRow(centroids: DataFrame): DataFrame =
@@ -78,7 +79,8 @@ object IvfQuantizer {
     * rows), multiplies by k through the centroid join, and needs a
     * (vec_id, cell) hash-agg plus a per-vec_id rank window — two
     * corpus-grain exchanges per call. Here the k·dim centroid frame is
-    * folded into ONE broadcast row and the whole argmin runs inside a
+    * folded into ONE row, attached as a scalar subquery
+    * ([[graft.plans.OneRow]]), and the whole argmin runs inside a
     * single projection over the unexploded scan: quantize the vector
     * once, compute all k squared-L2 distances with zip_with/aggregate,
     * sort the k-element (dist, cell) array and slice the top n — zero
@@ -93,9 +95,9 @@ object IvfQuantizer {
     * `IVF_DIM_MISMATCH` instead. */
   private[operators] def nearestCellsArr(v: DataFrame, centroids: DataFrame,
                                          n: Int): DataFrame =
-    v.select(col("vec_id"),
-        expr(s"transform(embedding, f -> $QuantF)").as("qx"))
-      .crossJoin(broadcast(centroidsRow(centroids)))
+    graft.plans.OneRow.attach(
+        v.select(col("vec_id"), expr(s"transform(embedding, f -> $QuantF)").as("qx")),
+        centroidsRow(centroids))
       .select(col("vec_id"), explode(expr(
         s"""slice(array_sort(transform(cents, c ->
            |  named_struct(
@@ -110,7 +112,7 @@ object IvfQuantizer {
 
   /** Assign arbitrary (vec_id, embedding) rows to their nearest trained
     * cell — the frozen-centroid assignment step a streaming ingest runs
-    * per micro-batch (map-only against the one-row centroid broadcast;
+    * per micro-batch (map-only against the one-row centroid subquery;
     * no training). Deterministic, so a streamed vector lands in exactly
     * the cell a batch rebuild would give it. */
   def assignVectors(v: DataFrame, centroids: DataFrame): DataFrame =
@@ -147,14 +149,14 @@ object IvfQuantizer {
       .repartition(spark.sparkContext.defaultParallelism)
     val q = vq(v).cache() // reused by every assign + recompute step
     // cells 0..k-1 = the k smallest vec_ids in order. The frame is at
-    // most k rows (post-limit), so index it with a sorted zipWithIndex
-    // instead of an unpartitioned row_number window — same deterministic
-    // mapping, no single-partition WindowExec warning per training job.
+    // most k ids (post-limit), so index them on the driver instead of
+    // with an unpartitioned row_number window; as a local relation the
+    // seed frame carries its exact size, and the join broadcasts it
+    // without a hint.
     val seeds = v.select("vec_id").orderBy("vec_id").limit(k)
-      .as[Long].rdd.sortBy(identity).zipWithIndex()
-      .map { case (id, i) => (id, i.toInt) }
+      .as[Long].collect().sorted.toSeq.zipWithIndex
       .toDF("vec_id", "cell")
-    var cent = q.join(broadcast(seeds), Seq("vec_id"))
+    var cent = q.join(seeds, Seq("vec_id"))
       .select(col("cell"), col("dim"), col("x").as("cval"))
     for (_ <- 0 until iters) {
       val a = assign(q, cent)
@@ -237,8 +239,9 @@ object IvfQuantizer {
   * Every later consumer — single-probe search, multi-probe search, a
   * second query in the same run — reads the stored tables; nothing
   * retrains. Multi-probe cell lists are NOT stored: they derive from the
-  * tiny persisted centroid table with one map-only quantize pass +
-  * broadcast join, so any nprobe dial is served by the same artifact. */
+  * tiny persisted centroid table with one map-only quantize pass
+  * against the one-row centroid subquery, so any nprobe dial is served
+  * by the same artifact. */
 object IvfIndex {
   import graft.sources.{BucketedTableSink, IndexCatalog}
 
@@ -277,7 +280,7 @@ object IvfIndex {
 
   /** The `nprobe` nearest trained cells per vector, derived from the
     * persisted centroids (map-only against the one-row centroid
-    * broadcast — no training, no stored probe lists, no shuffle). */
+    * subquery — no training, no stored probe lists, no shuffle). */
   def cells(s: SparkSession, d: String, k: Int, iters: Int, nprobe: Int): DataFrame = {
     val v = Tables.embeddings(s, d).select("vec_id", "embedding")
     IvfQuantizer.nearestCellsArr(v, centroids(s, d, k, iters), nprobe)

@@ -580,7 +580,7 @@ object LangModelQueries {
       version = "2", // v2: owners now cover the tokenizer (one clean rebuild)
       owners = Seq(LangModelQueries.getClass, graft.Tables.getClass,
         graft.functions.TextFunctions.getClass,
-        classOf[graft.plans.WordShingles])) { dir =>
+        classOf[graft.plans.WordShingles], graft.plans.OneRow.getClass)) { dir =>
       knScoresLive(s, d).write.mode("overwrite").parquet(s"$dir/scores")
       IndexCatalog.declareIds("path", "scores", Seq("doc_id"))
     }
@@ -656,7 +656,7 @@ object LangModelQueries {
       inst: org.apache.spark.sql.DataFrame,
       st: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val tt = st.agg(count(lit(1)).as("t"))
-    val sc = st.crossJoin(broadcast(tt))
+    val sc = graft.plans.OneRow.attach(st, tt)
       .select(col("bg"),
         (length(bin(col("cv") * 4 * col("t"))) -
           length(bin(greatest(col("cvw") * 4 - 3, lit(0L)) * col("t") +

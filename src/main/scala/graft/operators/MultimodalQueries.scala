@@ -383,7 +383,7 @@ object MultimodalQueries {
     * multi-frame GIF through the JDK writer's sequence API → frame-
     * sampled (stride 2) read-back + per-frame aHash, all inside one
     * partition (codec lifecycle rule). What [[gifFrameTable]]
-    * materializes; plan-swept via `builderPlans("gif_phash")`. */
+    * materializes. */
   private[graft] def gifFramePlan(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._

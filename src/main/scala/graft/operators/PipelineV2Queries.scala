@@ -594,7 +594,7 @@ object V2ManifestIndex {
     PipelineV2Queries.getClass, graft.pipeline.CorpusPipeline.getClass,
     ShardPacking.getClass, BoilerplateQueries.getClass,
     LangModelQueries.getClass, DedupQueries.getClass,
-    DedupResolve.getClass, DsirQueries.getClass,
+    DedupResolve.getClass, DsirQueries.getClass, graft.plans.OneRow.getClass,
     graft.Tables.getClass, graft.functions.TextFunctions.getClass,
     classOf[graft.plans.WordShingles], classOf[graft.plans.MinHashes],
     classOf[graft.plans.MinHashBands])

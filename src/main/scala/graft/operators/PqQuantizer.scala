@@ -28,11 +28,11 @@ import graft.plans.Materialize.MaterializeOps
   * distances are therefore exact BIGINTs and the whole tier —
   * codebooks, codes, search ranking — is oracle-checkable.
   *
-  * Scale shape: codebooks are M·C·dsub rows (tiny, broadcast); encoding
-  * is one broadcast join + (vec_id, sub) hash-agg over the long-form
-  * corpus; the ADC lookup table is |queries|·M·C rows (broadcast); the
+  * Scale shape: codebooks are M·C·dsub rows (tiny; unhinted, AQE
+  * broadcasts them); encoding is one equi-join + (vec_id, sub) hash-agg
+  * over the long-form corpus; the ADC lookup table is |queries|·M·C rows (broadcast); the
   * per-candidate distance is an equi-join on (query, sub, code) + one
-  * hash-agg. Nothing collects to the driver; nothing joins corpus
+  * hash-agg. Only the C seed ids reach the driver; nothing joins corpus
   * against corpus. */
 object PqQuantizer {
 
@@ -48,7 +48,7 @@ object PqQuantizer {
       .repartition(s.sparkContext.defaultParallelism)
     IvfQuantizer.vq(v)
       .join(IvfIndex.assignments(s, d, k, iters), Seq("vec_id"))
-      .join(broadcast(IvfIndex.centroids(s, d, k, iters)), Seq("cell", "dim"))
+      .join(IvfIndex.centroids(s, d, k, iters), Seq("cell", "dim"))
       .select(col("vec_id"),
         expr(s"dim div $dsub").as("sub"),
         (col("dim") % dsub).as("dim_in"),
@@ -61,7 +61,7 @@ object PqQuantizer {
     val d2 = (col("r") - col("cval")) * (col("r") - col("cval"))
     val byDist = Window.partitionBy("vec_id", "sub")
       .orderBy(col("dist"), col("code"))
-    res.join(broadcast(cb), Seq("sub", "dim_in"))
+    res.join(cb, Seq("sub", "dim_in"))
       .groupBy("vec_id", "sub", "code").agg(sum(d2).as("dist"))
       .withColumn("rn", row_number().over(byDist))
       .filter(col("rn") === 1)
@@ -78,14 +78,13 @@ object PqQuantizer {
       dsub: Int, codes: Int, pqIters: Int): (DataFrame, DataFrame) = {
     import s.implicits._
     val res = residuals(s, d, k, iters, dsub).cache()
-    // ≤ `codes` rows post-limit: sorted zipWithIndex, not an
-    // unpartitioned row_number window (same fix as IvfQuantizer.train)
+    // ≤ `codes` ids post-limit, indexed on the driver into a local
+    // relation (same seeding as IvfQuantizer.train)
     val seeds = Tables.embeddings(s, d).select("vec_id")
       .orderBy("vec_id").limit(codes)
-      .as[Long].rdd.sortBy(identity).zipWithIndex()
-      .map { case (id, i) => (id, i.toInt) }
+      .as[Long].collect().sorted.toSeq.zipWithIndex
       .toDF("vec_id", "code")
-    var cb = res.join(broadcast(seeds), Seq("vec_id"))
+    var cb = res.join(seeds, Seq("vec_id"))
       .select(col("sub"), col("code"), col("dim_in"), col("r").as("cval"))
     for (_ <- 0 until pqIters) {
       val a = assignCodes(res, cb)

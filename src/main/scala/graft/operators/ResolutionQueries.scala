@@ -274,7 +274,7 @@ object ResolutionQueries {
   }
 
   /** The unexecuted two-pass union plan — the shape the builder
-    * materializes and the hygiene sweep checks.
+    * materializes.
     *
     * levenshtein + threshold run INSIDE each pass, before the
     * union-distinct: dist is a function of the pair, so deduping

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *      cluster;
   *   3. aggregate the per-bucket token totals (a TINY frame: sources × B
   *      rows), prefix-sum them with a window over buckets within source,
-  *      and broadcast the offsets back;
+  *      and join the offsets back (AQE broadcasts them);
   *   4. cum_before = bucket_offset + local_before — EXACTLY the single
   *      cumulative sum in (bucket, doc_id) order.
   *
@@ -81,10 +81,10 @@ object ShardPacking {
       .withColumn("bucket_offset", coalesce(sum("bucket_toks").over(wOffset), lit(0L)))
       .select(bCols.map(col) :+ col("bucket_offset"): _*)
 
-    // broadcast the tiny offsets frame back — a derived aggregate, not a
-    // base table (the PlanHygieneSpec rule), and genuinely small by
-    // construction.
-    local.join(broadcast(offsets), bCols)
+    // join the offsets frame back: one row per (group, bucket), so at
+    // most |groups| × 16^bucketChars rows whatever the corpus size. No
+    // hint: AQE broadcasts it while it measures small.
+    local.join(offsets, bCols)
       .withColumn("cum_before", col("bucket_offset") + col("local_before"))
       .withColumn("shard", expr(s"cum_before div $budget"))
       .drop("local_before", "bucket_offset")

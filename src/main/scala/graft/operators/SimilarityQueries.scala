@@ -688,11 +688,11 @@ object SimilarityQueries {
        |  ) WHERE rank <= $knnK
        |)""".stripMargin
 
-  /** Construction shape of the kNN edge build, factored over the
-    * assignment frame so PlanHygieneSpec can sweep it with a
-    * label-as-cell stand-in (the real assignment table would
-    * materialize its artifact mid-sweep). */
-  private[graft] def knnEdgesFrom(asn: DataFrame, vecs: DataFrame): DataFrame = {
+  /** Construction shape of the kNN edge build over the persisted IVF
+    * assignments. */
+  private[graft] def knnEdgesPlan(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+    val asn = IvfIndex.assignments(s, d, ivfK, ivfIters)
+    val vecs = Tables.embeddings(s, d).select("vec_id", "embedding")
     val okCells = asn.groupBy("cell").agg(count(lit(1)).as("cn"))
       .filter(col("cn") <= DedupQueries.SemanticMaxCell).select("cell")
     val bounded = asn.join(okCells, Seq("cell"))
@@ -708,11 +708,6 @@ object SimilarityQueries {
       .filter(col("rank") <= knnK)
       .select("vec_a", "rank", "vec_b", "cosine")
   }
-
-  private[graft] def knnEdgesPlan(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    knnEdgesFrom(
-      IvfIndex.assignments(s, d, ivfK, ivfIters),
-      Tables.embeddings(s, d).select("vec_id", "embedding"))
 
   /** The kNN edge set, served from the persisted [[KnnIndex]] artifact
     * (columns vec_a, rank, vec_b, cosine) — built once per corpus,
@@ -1044,7 +1039,7 @@ object SimilarityQueries {
 
   /** Per-dim midrange thresholds of a (vec_id, e) corpus as ONE
     * pos-ordered array row — the binary tier's trained "model"
-    * (broadcast onto the packing scan, never collected). Shared by
+    * (attached to the packing scan by scalar subquery). Shared by
     * [[binaryWords]] and [[graft.streaming.CodeStreams]]'s frozen
     * threshold model so the two cannot drift. */
   private[graft] def binaryThresholdRow(v: DataFrame): DataFrame =
@@ -1060,7 +1055,7 @@ object SimilarityQueries {
       .agg(((min("x") + max("x")) / 2).as("t"))
 
   /** Collapse a per-dim (pos, t) frame into the ONE pos-ordered array
-    * row the packing kernel broadcasts. */
+    * row the packing kernel attaches. */
   private[graft] def thresholdRowOf(perDim: DataFrame): DataFrame =
     perDim
       .agg(expr("transform(array_sort(collect_list(struct(pos, t))), s -> s.t)")
@@ -1070,8 +1065,8 @@ object SimilarityQueries {
     * against a 1-row thresholds frame — the kernel shared by the batch
     * builder and the pack-on-arrival twin. */
   private[graft] def packWords(v: DataFrame, thrRow: DataFrame): DataFrame =
-    v.select(col("vec_id"), posexplode(col("e")).as(Seq("pos", "x")))
-      .crossJoin(broadcast(thrRow))
+    graft.plans.OneRow.attach(
+      v.select(col("vec_id"), posexplode(col("e")).as(Seq("pos", "x"))), thrRow)
       .select(col("vec_id"), expr("pos div 32").as("word"),
         when(col("x") > element_at(col("ts"), col("pos") + 1),
           expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"))
@@ -1379,7 +1374,7 @@ object BinaryIndex {
     val table = IndexCatalog.tableName(bkey)
     IndexCatalog.ensure(s, bkey, inputs = Seq(d),
         owners = Seq(SimilarityQueries.getClass, BinaryIndex.getClass,
-          graft.Tables.getClass,
+          graft.Tables.getClass, graft.plans.OneRow.getClass,
           graft.sources.BucketedTableSink.getClass)) { dir =>
       // Two packed words hold 64 sign bits: a wider corpus would have
       // its high dims silently dropped from BOTH the Spark and oracle

@@ -201,9 +201,9 @@ object TextQueries {
     s.read.parquet(s"$dir/stats")
   }
 
-  /** The unexecuted postings plan (exposed for the hygiene sweep):
-    * posexplode keeps each token's 0-based offset, so one hash-agg
-    * yields tf AND the sorted position list together. */
+  /** The unexecuted postings plan: posexplode keeps each token's
+    * 0-based offset, so one hash-agg yields tf AND the sorted position
+    * list together. */
   private[graft] def invertedIndexPlan(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
     Tables.documents(s, d)
@@ -213,7 +213,7 @@ object TextQueries {
         sort_array(collect_list(col("pos"))).as("positions"))
       .select("term", "doc_id", "tf", "positions")
 
-  /** The unexecuted doc-length plan (exposed for the hygiene sweep). */
+  /** The unexecuted doc-length plan. */
   private[graft] def doclensPlan(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
     Tables.documents(s, d)

@@ -28,8 +28,8 @@ import graft.functions.TextFunctions.tokens
   * VOCABULARY size. The lattice DP is map-side: one fold over word
   * positions per distinct word ([[viterbiSeg]], higher-order
   * functions, no shuffle, no driver data) with the piece-score map
-  * carried as a broadcast 1-row map column (seed ≈ chars + 256 pieces
-  * — kilobytes). Per-document encode is the [[ChunkingQueries.bpeEncode]]
+  * carried as a 1-row map column attached by scalar subquery
+  * ([[graft.plans.OneRow]]; seed ≈ chars + 256 pieces — kilobytes). Per-document encode is the [[ChunkingQueries.bpeEncode]]
   * shape: positional word explode → vocabulary-sized broadcast join →
   * one doc_id hash-agg. Long-tail words (> [[MaxWordLen]] chars) price
   * as character pieces — the bounded lattice's honest contract, the
@@ -109,7 +109,8 @@ object UnigramQueries {
     IndexCatalog.ensure(s, s"unigram_${IndexCatalog.tag(d)}",
         inputs = Seq(d),
         owners = Seq(UnigramQueries.getClass, Tables.getClass,
-          graft.functions.TextFunctions.getClass)) { dir =>
+          graft.functions.TextFunctions.getClass,
+          graft.plans.OneRow.getClass)) { dir =>
       Tables.documents(s, d)
         .select(explode(tokens(col("text"))).as("w"))
         .filter(col("w") =!= "")
@@ -135,7 +136,7 @@ object UnigramQueries {
       // round 1: segment on the seed lattice, frequency-scored
       val vm1 = seed.agg(map_from_entries(
         collect_list(struct(col("piece"), col("freq")))).as("vm"))
-      wc.crossJoin(broadcast(vm1))
+      graft.plans.OneRow.attach(wc, vm1)
         .select(col("w"), col("wn"), segCol(col("w"), col("vm")).as("seg"))
         .write.mode("overwrite").parquet(s"$dir/seg1")
       // usage = realized token-stream count per piece (EM-count analog)
@@ -156,7 +157,7 @@ object UnigramQueries {
       val kept = s.read.parquet(s"$dir/pieces")
       val vm2 = kept.agg(map_from_entries(
         collect_list(struct(col("piece"), col("n_used")))).as("vm"))
-      wc.crossJoin(broadcast(vm2))
+      graft.plans.OneRow.attach(wc, vm2)
         .select(col("w"), col("wn"), segCol(col("w"), col("vm")).as("seg"))
         .select(col("w"), col("wn"), col("seg"),
           size(split(col("seg"), " ")).cast("long").as("n_tokens"))

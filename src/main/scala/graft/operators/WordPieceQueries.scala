@@ -31,7 +31,7 @@ import graft.functions.TextFunctions.tokens
   * `##` prefix. In Spark this is one fold over at most [[MaxWordLen]]
   * steps per DISTINCT word (map-side, vocabulary-sized, the
   * [[UnigramQueries.viterbiSeg]] discipline, with the piece set as a
-  * broadcast map); the oracle unrolls the same loop position by
+  * one-row map attached by scalar subquery); the oracle unrolls the same loop position by
   * position. Words beyond [[MaxWordLen]] chars segment as `##`-rendered
   * character pieces (the [[UnigramQueries]] long-tail convention).
   *
@@ -128,7 +128,8 @@ object WordPieceQueries {
     IndexCatalog.ensure(s, s"wordpiece_${IndexCatalog.tag(d)}",
         inputs = Seq(d),
         owners = Seq(WordPieceQueries.getClass, ChunkingQueries.getClass,
-          Tables.getClass, graft.functions.TextFunctions.getClass)) { dir =>
+          Tables.getClass, graft.functions.TextFunctions.getClass,
+          graft.plans.OneRow.getClass)) { dir =>
       var vocab = Tables.documents(s, d)
         .select(explode(tokens(col("text"))).as("w"))
         .filter(col("w") =!= "")
@@ -149,7 +150,7 @@ object WordPieceQueries {
           .unionByName(s.range(1).select(
             lit("").as("pa"), lit("").as("pb"), lit(1).as("pri")))
           .orderBy("pri").limit(1).select("pa", "pb")
-        vocab = st.crossJoin(broadcast(guarded))
+        vocab = graft.plans.OneRow.attach(st, guarded)
           .withColumn("syms",
             ChunkingQueries.bpeApplyMerge(col("syms"), col("pa"), col("pb")))
           .select("w", "wn", "syms")
@@ -171,7 +172,7 @@ object WordPieceQueries {
         .write.mode("overwrite").parquet(s"$dir/pieces")
       val vm = s.read.parquet(s"$dir/pieces").agg(map_from_entries(
         collect_list(struct(col("piece"), lit(1)))).as("vm"))
-      wc.crossJoin(broadcast(vm))
+      graft.plans.OneRow.attach(wc, vm)
         .select(col("w"), col("wn"), segCol(col("w"), col("vm")).as("seg"))
         .select(col("w"), col("wn"), col("seg"),
           size(split(col("seg"), " ")).cast("long").as("n_tokens"))

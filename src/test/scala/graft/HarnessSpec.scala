@@ -101,6 +101,16 @@ class HarnessSpec extends SparkSpec {
     assert(times.forall(_.exists(_ > 0)), times)
   }
 
+  test("a forced prebuild retrains an artifact this process already ensured") {
+    val one = operators.IndexBuilds.all.filter(_._1 == "idx_avro_docs")
+    one.head._2(spark, sf0001) // built or adopted, and memoized either way
+    val forced = Harness.prebuild(spark, sf0001, "spec", force = true, builds = one)
+    assert(forced.map(b => (b.name, b.sec.isDefined, b.trained)) ==
+      Seq(("idx_avro_docs", true, true)))
+    val again = Harness.prebuild(spark, sf0001, "spec", builds = one)
+    assert(again.map(_.trained) == Seq(false))
+  }
+
   test("a throwing body returns None and leaves a stderr line") {
     val err = new ByteArrayOutputStream()
     val res = Console.withErr(new PrintStream(err, true)) {
