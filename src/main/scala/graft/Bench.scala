@@ -46,7 +46,7 @@ object Bench {
     // Warm the JVM/codegen/scan paths so the first measured query does
     // not absorb session startup (~5s of JIT + classloading).
     spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    Tables.lineitem(spark, sfDir)
       .selectExpr("sum(l_quantity)").collect()
     // Pre-build every IndexCatalog artifact, timed separately: with
     // memoization, min-of-two would otherwise exclude index-build cost

@@ -51,7 +51,7 @@ object ScaleSmoke {
     fs.delete(outPath, true)
     val reps = spark.range(replicas).select(col("id").as("rep"))
     val IdStride = 100000000L // far above any source id
-    spark.read.parquet(s"$src/documents.parquet")
+    Tables.documents(spark, src)
       .crossJoin(reps) // corpus × tiny literal frame: broadcast, map-only
       .select(
         (col("doc_id") + col("rep") * IdStride).as("doc_id"),
@@ -61,7 +61,7 @@ object ScaleSmoke {
         (col("n_chars") + length(concat(lit(" rep"), col("rep"))))
           .as("n_chars"))
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    spark.read.parquet(s"$src/embeddings.parquet")
+    Tables.embeddings(spark, src)
       .crossJoin(reps)
       .select(
         (col("vec_id") + col("rep") * IdStride).as("vec_id"),
@@ -76,7 +76,8 @@ object ScaleSmoke {
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "events"))
-      spark.read.parquet(s"$src/$t.parquet")
+      // raw copy: `events` keeps the physical ts type of the source
+      Tables(spark, src, t)
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
     fs.create(new org.apache.hadoop.fs.Path(s"$out/_SMOKE_READY_$replicas"), true).close()
   }
@@ -257,8 +258,8 @@ object ScaleSmoke {
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     deriveCorpus(spark, src, out, Replicas)
-    val nDocs = spark.read.parquet(s"$out/documents.parquet").count()
-    val nVecs = spark.read.parquet(s"$out/embeddings.parquet").count()
+    val nDocs = Tables.documents(spark, out).count()
+    val nVecs = Tables.embeddings(spark, out).count()
 
     // ---- cold artifact builds (force: this is the build-cost probe) ----
     val builds = Harness.prebuild(spark, out, "smoke", force = true)

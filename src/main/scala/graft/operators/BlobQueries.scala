@@ -113,7 +113,7 @@ object BlobQueries {
       chunkFrame(s, d).write.mode("overwrite").parquet(s"$dir/chunks")
       IndexCatalog.declareIds("path", "chunks", Seq("doc_id"))
     }
-    s.read.parquet(s"$dir/chunks")
+    IndexCatalog.read(s, dir, "chunks")
   }
 
   /** Per-blob chunking profile: chunk count, within-blob distinct

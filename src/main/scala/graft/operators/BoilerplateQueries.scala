@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.sources.IndexCatalog
 import graft.plans.Materialize.MaterializeOps
 
 /** Line-grain boilerplate removal — the CCNet / RefinedWeb curation move
@@ -185,7 +186,7 @@ object BoilerplateQueries {
     * scale), with its spread and first carrier. Served from the
     * persisted list. */
   val lineDupes = Q("q_line_dupes", dupesSql) { (s, d) =>
-    s.read.parquet(s"${boilerplateDir(s, d)}/list")
+    IndexCatalog.read(s, boilerplateDir(s, d), "list")
       .select(md5(col("seg")).as("seg_fp"), col("n_docs"), col("first_doc"))
       .orderBy("seg_fp")
   }
@@ -197,7 +198,7 @@ object BoilerplateQueries {
     * boilerplate (both engines agree: md5 of no content is no content,
     * not md5('')). Served from the persisted doc-grain result. */
   val lineExcise = Q("q_line_excise", exciseSql) { (s, d) =>
-    s.read.parquet(s"${boilerplateDir(s, d)}/excised")
+    IndexCatalog.read(s, boilerplateDir(s, d), "excised")
       .select("doc_id", "segs_total", "segs_removed", "words_total",
         "words_kept", "cleaned_fp")
       .orderBy("doc_id")

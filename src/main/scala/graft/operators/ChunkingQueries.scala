@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.sources.IndexCatalog
 import graft.functions.TextFunctions.tokens
 
 /** Context-window preparation for LLM training — the step between a
@@ -212,12 +213,12 @@ object ChunkingQueries {
 
   /** The trained merge table, served from the artifact. */
   private[graft] def bpeMergeTable(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${bpeArtifactDir(s, d)}/merges")
+    IndexCatalog.read(s, bpeArtifactDir(s, d), "merges")
 
   /** Per-word segmentation of the trained tokenizer (w, wn, n_tokens),
     * served from the same artifact as [[bpeMergeTable]]. */
   private[graft] def bpeVocab(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${bpeArtifactDir(s, d)}/vocab")
+    IndexCatalog.read(s, bpeArtifactDir(s, d), "vocab")
 
   /** The DuckDB replay of the whole loop, unrolled: v0 is the wrapped
     * vocabulary, step CTEs (p/b/bg/v) mirror pair-count → argmax →

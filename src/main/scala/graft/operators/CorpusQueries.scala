@@ -54,7 +54,7 @@ object CorpusQueries {
         classOf[graft.plans.WordShingles])) { dir =>
       benchGramsPlan(s, d).write.mode("overwrite").parquet(s"$dir/grams")
     }
-    s.read.parquet(s"$dir/grams")
+    graft.sources.IndexCatalog.read(s, dir, "grams")
   }
 
   /** Benchmark-contamination check: which training documents share word

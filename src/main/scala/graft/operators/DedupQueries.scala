@@ -354,7 +354,7 @@ object DedupQueries {
       finally sh.unpersist()
       IndexCatalog.declareIds("path", "pairs", Seq("doc_a", "doc_b"))
     }
-    s.read.parquet(s"$dir/pairs")
+    IndexCatalog.read(s, dir, "pairs")
   }
 
   /** Keep-list over the LSH pair graph (doc_id, cluster, keep) —
@@ -368,7 +368,7 @@ object DedupQueries {
       // the cluster label is itself a doc id (canonical min member)
       IndexCatalog.declareIds("path", "keep", Seq("doc_id", "cluster"))
     }
-    s.read.parquet(s"$dir/keep")
+    IndexCatalog.read(s, dir, "keep")
   }
 
   val minhashLshPairs = Q(
@@ -721,7 +721,7 @@ object DedupQueries {
       finally sig.unpersist()
       IndexCatalog.declareIds("path", "pairs", Seq("doc_a", "doc_b"))
     }
-    s.read.parquet(s"$dir/pairs")
+    IndexCatalog.read(s, dir, "pairs")
   }
 
   /** SimHash near-dup pairs at Hamming distance ≤ 1, with GUARANTEED
@@ -1021,7 +1021,7 @@ object DedupQueries {
       } finally v.unpersist()
       IndexCatalog.declareIds("path", "pairs", Seq("vec_a", "vec_b"))
     }
-    s.read.parquet(s"$dir/pairs")
+    IndexCatalog.read(s, dir, "pairs")
   }
 
   /** Keep-list over the embedding pair graph — connected components
@@ -1034,7 +1034,7 @@ object DedupQueries {
         .write.mode("overwrite").parquet(s"$dir/keep")
       IndexCatalog.declareIds("path", "keep", Seq("doc_id", "cluster"))
     }
-    s.read.parquet(s"$dir/keep")
+    IndexCatalog.read(s, dir, "keep")
   }
 
   val embeddingPairs = Q(
@@ -1236,7 +1236,7 @@ object DedupQueries {
         .write.mode("overwrite").parquet(s"$dir/pairs")
       IndexCatalog.declareIds("path", "pairs", Seq("vec_a", "vec_b"))
     }
-    s.read.parquet(s"$dir/pairs")
+    IndexCatalog.read(s, dir, "pairs")
   }
 
   /** Shared oracle CTE chain: IVF training replay → capped cells →
@@ -1272,7 +1272,7 @@ object DedupQueries {
         .write.mode("overwrite").parquet(s"$dir/keep")
       IndexCatalog.declareIds("path", "keep", Seq("doc_id", "cluster"))
     }
-    s.read.parquet(s"$dir/keep")
+    IndexCatalog.read(s, dir, "keep")
   }
 
   /** End-to-end semantic dedup: IVF-cell pairs → connected components →
@@ -1323,7 +1323,7 @@ object DedupQueries {
         .write.mode("overwrite").parquet(s"$dir/pairs")
       IndexCatalog.declareIds("path", "pairs", Seq("vec_a", "vec_b"))
     }
-    s.read.parquet(s"$dir/pairs")
+    IndexCatalog.read(s, dir, "pairs")
   }
 
   /** Oracle CTE fragment for the nprobe=2 tier, appended after

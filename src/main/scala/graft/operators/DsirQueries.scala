@@ -145,7 +145,7 @@ object DsirQueries {
       weightsFrame(s, d).write.mode("overwrite").parquet(s"$dir/weights")
       IndexCatalog.declareIds("path", "weights", Seq("doc_id"))
     }
-    s.read.parquet(s"$dir/weights")
+    IndexCatalog.read(s, dir, "weights")
   }
 
   private val weightsSql =

@@ -344,7 +344,7 @@ object GraphQueries {
       // the community label is itself a vec id (canonical min member)
       IndexCatalog.declareIds("path", "labels", Seq("vec_id", "community"))
     }
-    s.read.parquet(s"$dir/labels")
+    IndexCatalog.read(s, dir, "labels")
   }
 
   /** Community detection by synchronous label propagation over the

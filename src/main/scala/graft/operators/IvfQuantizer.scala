@@ -269,7 +269,7 @@ object IvfIndex {
   /** Trained centroids (cell, dim, cval) from the stored artifact. */
   def centroids(s: SparkSession, d: String, k: Int, iters: Int): DataFrame = {
     val (dir, _) = ensure(s, d, k, iters)
-    s.read.parquet(s"$dir/centroids")
+    IndexCatalog.read(s, dir, "centroids")
   }
 
   /** Home-cell assignment (vec_id, cell) from the stored bucketed table. */

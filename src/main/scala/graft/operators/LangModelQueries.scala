@@ -584,7 +584,7 @@ object LangModelQueries {
       knScoresLive(s, d).write.mode("overwrite").parquet(s"$dir/scores")
       IndexCatalog.declareIds("path", "scores", Seq("doc_id"))
     }
-    s.read.parquet(s"$dir/scores")
+    IndexCatalog.read(s, dir, "scores")
   }
 
   /** The unserved train+score plan (artifact builder body). */

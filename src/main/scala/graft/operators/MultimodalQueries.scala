@@ -167,7 +167,7 @@ object MultimodalQueries {
       phashPlan(s, d).write.mode("overwrite").parquet(s"$dir/phash")
       IndexCatalog.declareIds("path", "phash", Seq("doc_id"))
     }
-    s.read.parquet(s"$dir/phash")
+    IndexCatalog.read(s, dir, "phash")
   }
 
   /** Keeper election over a (doc_id, phash) signature frame: keep =
@@ -417,7 +417,7 @@ object MultimodalQueries {
       gifFramePlan(s, d).write.mode("overwrite").parquet(s"$dir/frames")
       IndexCatalog.declareIds("path", "frames", Seq("doc_id"))
     }
-    s.read.parquet(s"$dir/frames")
+    IndexCatalog.read(s, dir, "frames")
   }
 
   /** REAL multi-frame GIF decode, frame-sampled at stride 2 — and
@@ -628,7 +628,7 @@ object MultimodalQueries {
         .write.mode("overwrite").parquet(s"$dir/phash")
       IndexCatalog.declareIds("path", "phash", Seq("doc_id"))
     }
-    s.read.parquet(s"$dir/phash")
+    IndexCatalog.read(s, dir, "phash")
   }
 
   /** Audio fingerprint dedup (round-9 verdict item 3 — closes the

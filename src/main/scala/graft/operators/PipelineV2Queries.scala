@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.sources.IndexCatalog
 import graft.functions.TextFunctions.{tokens, StopwordTable}
 
 /** CorpusPipeline v2 — the modern curation recipe composed end-to-end
@@ -262,7 +263,7 @@ object PipelineV2Queries {
     // ArtifactSentinel/IndexCatalog content-key that guards words_kept
     // (boilerplateDir rebuilds on any input or owner-code change)
     // guards words_total identically, since both ride the same file.
-    val kept = s.read.parquet(s"$bpDir/excised")
+    val kept = IndexCatalog.read(s, bpDir, "excised")
       .select(col("doc_id"), col("words_kept"), col("words_total"))
     // Gopher stats over the CLEANED token stream: segments minus the
     // persisted boilerplate list, exploded to words. NO static broadcast
@@ -270,7 +271,7 @@ object PipelineV2Queries {
     // broadcasts it while it measures small and demotes to a sort-merge
     // on seg past the threshold (a pinned hint would instead fail hard
     // at the 8 GB broadcast cap; r15 verdict item 2).
-    val bp = s.read.parquet(s"$bpDir/list").select(col("seg").as("bseg"))
+    val bp = IndexCatalog.read(s, bpDir, "list").select(col("seg").as("bseg"))
     val qa = gopherOkFrame(
       BoilerplateQueries.segmentsOf(docs)
         .join(bp, col("seg") === col("bseg"), "left_anti"))

@@ -173,7 +173,7 @@ object PqIndex {
   def codebooks(s: SparkSession, d: String, k: Int, iters: Int,
                 dsub: Int, codes: Int, pqIters: Int): DataFrame = {
     val (dir, _) = ensure(s, d, k, iters, dsub, codes, pqIters)
-    s.read.parquet(s"$dir/codebooks")
+    IndexCatalog.read(s, dir, "codebooks")
   }
 
   /** Per-vector PQ codes (vec_id, sub, code) from the bucketed table. */

@@ -203,7 +203,7 @@ object ResolutionQueries {
       IndexCatalog.declareIds("path", "labels", Seq("cust_id", "entity"),
         space = "cust")
     }
-    s.read.parquet(s"$dir/labels")
+    IndexCatalog.read(s, dir, "labels")
   }
 
   /** Stage-3a: entity ids (connected components) for every customer in
@@ -308,7 +308,7 @@ object ResolutionQueries {
       IndexCatalog.declareIds("path", "pairs", Seq("cust_a", "cust_b"),
         space = "cust")
     }
-    s.read.parquet(s"$dir/pairs")
+    IndexCatalog.read(s, dir, "pairs")
   }
 
   val multiBlock = Q(

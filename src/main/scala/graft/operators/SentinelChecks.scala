@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions.col
 
 import graft.sources.ArtifactSentinel.Check
+import graft.sources.IndexCatalog
 import graft.sources.IndexCatalog.tag
 
 /** Registry of [[graft.sources.ArtifactSentinel]] checks — every
@@ -47,11 +48,11 @@ object SentinelChecks {
       (s, d) => LangModelQueries.knScoresLive(s, d)),
     Check("boilerplate_list",
       d => s"boilerplate_${tag(d)}",
-      (s, d) => s.read.parquet(s"${BoilerplateQueries.boilerplateDir(s, d)}/list"),
+      (s, d) => IndexCatalog.read(s, BoilerplateQueries.boilerplateDir(s, d), "list"),
       (s, d) => BoilerplateQueries.listOf(BoilerplateQueries.segments(s, d))),
     Check("boilerplate_excised",
       d => s"boilerplate_${tag(d)}",
-      (s, d) => s.read.parquet(s"${BoilerplateQueries.boilerplateDir(s, d)}/excised"),
+      (s, d) => IndexCatalog.read(s, BoilerplateQueries.boilerplateDir(s, d), "excised"),
       (s, d) => {
         val seg = BoilerplateQueries.segments(s, d)
         BoilerplateQueries.exciseFrom(seg,
@@ -83,12 +84,12 @@ object SentinelChecks {
       (s, d) => WinnowQueries.fingerprintLive(s, d)),
     Check("winnow_topk",
       d => s"winnow_topk_${tag(d)}",
-      (s, d) => s.read.parquet(s"${WinnowQueries.topkDir(s, d)}/topk"),
+      (s, d) => IndexCatalog.read(s, WinnowQueries.topkDir(s, d), "topk"),
       (s, d) => WinnowQueries.topkOf(
         WinnowQueries.symOf(WinnowQueries.matchPairs(s, d)))),
     Check("winnow_partners",
       d => s"winnow_topk_${tag(d)}",
-      (s, d) => s.read.parquet(s"${WinnowQueries.topkDir(s, d)}/partners"),
+      (s, d) => IndexCatalog.read(s, WinnowQueries.topkDir(s, d), "partners"),
       (s, d) => WinnowQueries.partnersOf(
         WinnowQueries.symOf(WinnowQueries.matchPairs(s, d)))))
 }

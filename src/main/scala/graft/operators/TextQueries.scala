@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.sources.IndexCatalog
 import graft.functions.TextFunctions._
 
 /** Text-analysis operator family: language-ID (stopword heuristic),
@@ -191,14 +192,14 @@ object TextQueries {
   private[graft] def doclens(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val (dir, _) = ensureTextIndex(s, d)
-    s.read.parquet(s"$dir/doclens")
+    IndexCatalog.read(s, dir, "doclens")
   }
 
   /** Collection stats (1 row: n_docs, total_tokens) from the artifact. */
   private[graft] def textStats(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val (dir, _) = ensureTextIndex(s, d)
-    s.read.parquet(s"$dir/stats")
+    IndexCatalog.read(s, dir, "stats")
   }
 
   /** The unexecuted postings plan: posexplode keeps each token's

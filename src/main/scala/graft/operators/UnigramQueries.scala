@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.sources.IndexCatalog
 import graft.functions.TextFunctions.tokens
 
 /** The second tokenizer family (round-10 verdict "what's missing"): a
@@ -167,11 +168,11 @@ object UnigramQueries {
 
   /** The pruned vocabulary (piece, freq, n_used), artifact-served. */
   private[graft] def unigramPieces(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${unigramDirOf(s, d)}/pieces")
+    IndexCatalog.read(s, unigramDirOf(s, d), "pieces")
 
   /** Final per-word segmentation (w, wn, seg, n_tokens), artifact-served. */
   private[graft] def unigramVocab(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${unigramDirOf(s, d)}/vocab")
+    IndexCatalog.read(s, unigramDirOf(s, d), "vocab")
 
   // -------------------------------------------------------------------
   // Oracle: both rounds replayed, position-unrolled

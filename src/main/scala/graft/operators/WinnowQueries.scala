@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.sources.IndexCatalog
 import graft.functions.TextFunctions._
 
 /** Robust winnowing fingerprints (Schleimer, Wilkerson & Aiken 2003,
@@ -379,7 +380,7 @@ object WinnowQueries {
        |SELECT doc_id, partner, n_shared, CAST(rank AS BIGINT) AS rank
        |FROM rk WHERE rank <= $MatchTopK
        |ORDER BY doc_id, rank""".stripMargin) { (s, d) =>
-    s.read.parquet(s"${topkDir(s, d)}/topk")
+    IndexCatalog.read(s, topkDir(s, d), "topk")
       .select("doc_id", "partner", "n_shared", "rank")
       .orderBy("doc_id", "rank")
   }
@@ -399,7 +400,7 @@ object WinnowQueries {
        |FROM (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_partners
        |      FROM sym GROUP BY doc_id)
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    s.read.parquet(s"${topkDir(s, d)}/partners")
+    IndexCatalog.read(s, topkDir(s, d), "partners")
       .select("doc_id", "n_partners", "n_kept", "n_dropped")
       .orderBy("doc_id")
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.sources.IndexCatalog
 import graft.functions.TextFunctions.tokens
 
 /** The third tokenizer family (r15 verdict item 7): WordPiece — BERT's
@@ -182,11 +183,11 @@ object WordPieceQueries {
 
   /** The trained vocabulary (piece, piece_len, step), artifact-served. */
   private[graft] def wpPieces(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${wpDirOf(s, d)}/pieces")
+    IndexCatalog.read(s, wpDirOf(s, d), "pieces")
 
   /** Per-word greedy segmentation (w, wn, seg, n_tokens). */
   private[graft] def wpVocab(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${wpDirOf(s, d)}/vocab")
+    IndexCatalog.read(s, wpDirOf(s, d), "vocab")
 
   // -------------------------------------------------------------------
   // Oracle

@@ -41,6 +41,73 @@ object Schemas {
     StructField("action", StringType),
     StructField("userPlansMap", ArrayType(StringType))))
 
+  /** The ten star-schema tables (`<sfDir>/<name>.parquet`, FIXTURES.md
+    * §B), exactly as Spark infers them from the files every scale factor
+    * ships: all columns nullable, INT32 keys and counts as `IntegerType`,
+    * and `o_orderdate`, `l_shipdate` and `events.ts` stored as INT64
+    * TIMESTAMP(MICROS) without UTC adjustment, hence `TimestampNTZType`.
+    * [[graft.Tables]] reads with these and checks each table's footer
+    * against them once per session. `events.ts` alone may also arrive
+    * UTC-adjusted or as TIMESTAMP(NANOS) (see [[graft.Tables.events]]). */
+  private def table(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t) })
+
+  val sf: Map[String, StructType] = Map(
+    "region" -> table("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "nation" -> table("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "customer" -> table("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+      "c_mktsegment" -> StringType),
+    "supplier" -> table("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "part" -> table("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType, "p_size" -> IntegerType,
+      "p_retailprice" -> DoubleType),
+    "orders" -> table("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "lineitem" -> table("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType),
+    "events" -> table("event_id" -> LongType, "ts" -> TimestampNTZType,
+      "user_id" -> LongType, "event_type" -> StringType,
+      "value" -> DoubleType, "props" -> StringType),
+    "documents" -> table("doc_id" -> LongType, "text" -> StringType,
+      "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType),
+    "embeddings" -> table("vec_id" -> LongType,
+      "embedding" -> ArrayType(FloatType), "label" -> IntegerType))
+
+  /** How a file's schema differs from the declared one, one entry per
+    * column: missing, extra, or a different type (nullability aside —
+    * Spark reads every file column as nullable). Empty when they agree. */
+  def drift(declared: StructType, found: StructType): Seq[String] = {
+    val have = found.fields.map(f => f.name -> f.dataType).toMap
+    val want = declared.fieldNames.toSet
+    declared.fields.toSeq.flatMap { f =>
+      have.get(f.name) match {
+        case None => Some(s"${f.name}: missing")
+        case Some(t) if t.catalogString != f.dataType.catalogString =>
+          Some(s"${f.name}: ${t.catalogString}, declared ${f.dataType.catalogString}")
+        case _ => None
+      }
+    } ++ found.fields.toSeq.collect {
+      case f if !want(f.name) => s"${f.name}: extra (${f.dataType.catalogString})"
+    }
+  }
+
+  /** A data drop whose parquet schema is not the declared one: raised on
+    * the first read of the table, naming each differing column. The fix
+    * is the data, or `Schemas` itself when the change is intended. */
+  final class SchemaContractError(val table: String, val path: String,
+      val diffs: Seq[String])
+      extends IllegalStateException(
+        s"SCHEMA_CONTRACT: $table at $path differs from graft.schema.Schemas." +
+          s"$table: ${diffs.mkString("; ")}")
+
   /** Typed façade for the interaction rows after envelope unwrap. */
   final case class InteractionLog(
       Contract: String, Mac: String, TotalDuration: Long, AppName: String)

@@ -8,6 +8,7 @@ import scala.collection.mutable.ListBuffer
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Persisted-index catalog: the train-once / query-many lifecycle for
   * expensive derived state (trained IVF quantizers, LSH near-dup pairs,
@@ -101,9 +102,37 @@ object IndexCatalog {
   /** Test hook: point the catalog at a scratch root. */
   private[graft] var rootOverride: Option[String] = None
 
+  /** Artifact subdirectory path → its schema, inferred on its first
+    * [[read]] in this process. The catalog is the single writer of
+    * artifact dirs, so dropping a dir's entries whenever it is rebuilt
+    * or deleted keeps them exact. */
+  private val schemas = TrieMap.empty[String, StructType]
+
+  private def forgetSchemas(dir: String): Unit =
+    schemas.keys.filter(_.startsWith(s"$dir/")).foreach(schemas.remove)
+
+  /** Serving read of subdirectory `name` of a committed artifact `dir`
+    * (one [[ensure]] returned): the first read in the process infers the
+    * parquet schema (one Spark job), later reads reuse it and build the
+    * frame without a job. Reads of a build's own intermediate state,
+    * inside its `ensure` block, stay plain `read.parquet`. */
+  def read(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name"
+    schemas.get(path) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None =>
+        val df = s.read.parquet(path)
+        schemas.put(path, df.schema)
+        df
+    }
+  }
+
   /** Test hook: forget per-process memoization, as a fresh process
     * would — the manifest on disk then carries all reuse decisions. */
-  private[graft] def resetProcessMemo(): Unit = built.clear()
+  private[graft] def resetProcessMemo(): Unit = {
+    built.clear()
+    schemas.clear()
+  }
 
   private def root: String = rootOverride.getOrElse(
     sys.env.getOrElse(
@@ -347,6 +376,7 @@ object IndexCatalog {
                 s"stale-${stale.mkString("+")}"
             }
           provenance.put(key, s"built:$reason")
+          forgetSchemas(dir)
           f.delete(new Path(dir), true)
           val ddls = ListBuffer.empty[String]
           val idRels = ListBuffer.empty[(String, String, Seq[String], String)]
@@ -384,6 +414,7 @@ object IndexCatalog {
     built.remove(key)
     provenance.remove(key)
     val dir = Paths.get(root, key).toString
+    forgetSchemas(dir)
     fs(s, dir).delete(new Path(dir), true)
   }
 
@@ -460,7 +491,7 @@ object IndexCatalog {
             val df = kind match {
               case "table" => s.table(name)
               case "avro"  => AvroTable.read(s, s"$dir/$name")
-              case _       => s.read.parquet(s"$dir/$name")
+              case _       => read(s, dir, name)
             }
             Some((s"$key/$name", df, cols.split(",").toSeq))
           }

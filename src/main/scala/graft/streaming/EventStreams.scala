@@ -17,26 +17,13 @@ object EventStreams {
   /** The `events` table schema as a stream source (ts pre-converted to
     * TimestampType by the caller — see [[readEventStream]]). */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    // File-stream twin of Tables.events: probe the batch schema once to
-    // learn which physical ts type this data drop uses (nanos-as-long vs
-    // TIMESTAMP(MICROS)/NTZ — see Tables.events), then declare the stream
-    // schema to match and normalize to session-zone TimestampType.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = graft.Tables(spark, dir, "events").schema("ts").dataType
-    val raw = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val src = spark.readStream
+    // File-stream twin of Tables.events: the batch read's schema carries
+    // the physical ts type the footer check found (see Tables.events)
+    val raw = graft.Tables(spark, dir, "events").schema
+    graft.Tables.normalizeTs(spark.readStream
       .schema(raw)
       .option("pathGlobFilter", "events.parquet") // stream source needs a dir
-      .parquet(dir)
-    tsType match {
-      case LongType => src.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampType => src
-      case _ => src.withColumn("ts", col("ts").cast(TimestampType))
-    }
+      .parquet(dir))
   }
 
   /** Tumbling 1-hour windows per event type with a 1-hour watermark —

@@ -50,7 +50,7 @@ class BoilerplateSpec extends SparkSpec {
       // one doc carrying its own segment 3 times: ONE distinct carrier,
       // must NOT become boilerplate
       (6L, { val own = ws(0 until 8, "own"); s"$own $own $own" }, "en", "web"))
-      .toDF("doc_id", "text", "lang", "source")
+      .toDF("doc_id", "text", "lang", "source").asSfTable("documents")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val prof = BoilerplateQueries.lineDupes.run(spark, dir).collect()

@@ -50,7 +50,7 @@ class DsirSpec extends SparkSpec {
       // bulk raw mass so the raw distribution is dominated by noise
       (4L, rep("noise0", 40), "en", "src6"),
       (5L, rep("noise1", 40), "en", "src7"))
-      .toDF("doc_id", "text", "lang", "source")
+      .toDF("doc_id", "text", "lang", "source").asSfTable("documents")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val w = DsirQueries.dsirWeights.run(spark, dir)

@@ -45,7 +45,7 @@ class ExciseSpec extends SparkSpec {
       (2L, full, "en", "web"),
       (3L, full, "en", "web"),
       (4L, ws(0 until (k - 1), "e"), "en", "web"))
-      .toDF("doc_id", "text", "lang", "source")
+      .toDF("doc_id", "text", "lang", "source").asSfTable("documents")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val out = DedupQueries.substringExcise.run(spark, dir)

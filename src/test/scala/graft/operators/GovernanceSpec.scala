@@ -49,7 +49,7 @@ class GovernanceSpec extends SparkSpec {
       (0 until 10).map(i => (i.toLong, s"c$i", 0, "HOMOG", BigDecimal(100.00))) ++
       (0 until 10).map(i => (100L + i, s"d$i", 1, "DIVERSE", BigDecimal(i * 2500.00)))
     rows.toDF("c_custkey", "c_name", "c_nationkey", "c_mktsegment", "c_acctbal")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/customer.parquet")
+      .asSfTable("customer").coalesce(1).write.mode("overwrite").parquet(s"$dir/customer.parquet")
     val r = DataQualityQueries.lDiversity.run(spark, dir).collect()
       .map(x => x.getString(1) -> x).toMap
     assert(!r("HOMOG").getBoolean(4) && r("HOMOG").getLong(2) == 10,
@@ -75,7 +75,7 @@ class GovernanceSpec extends SparkSpec {
       (0 until 50).map(i => (i.toLong, para, "en", "collapsed")) ++
       (0 until 50).map(i =>
         (100L + i, (0 until 40).map(j => s"u${i}_$j").mkString(" "), "en", "diverse"))
-    docs.toDF("doc_id", "text", "lang", "source")
+    docs.toDF("doc_id", "text", "lang", "source").asSfTable("documents")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r = TextQueries.ngramDiversity.run(spark, dir).collect()
       .map(x => x.getString(0) -> x).toMap
@@ -112,7 +112,7 @@ class GovernanceSpec extends SparkSpec {
       (3L, s"${sw.mkString(" ")} ${Seq.fill(40)("dup").mkString(" ")} ${okWords(10)}", "en", "s0"), // r3: dup 40/60
       (4L, okWords(60), "en", "s0"),                            // r4: no stopwords
       (5L, s"${sw.mkString(" ")} ${Seq.fill(25)("xy").mkString(" ")} ${okWords(25)}", "en", "s0")) // r5: short 25/60 — also r3
-      .toDF("doc_id", "text", "lang", "source")
+      .toDF("doc_id", "text", "lang", "source").asSfTable("documents")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r = TextQueries.qualityRules.run(spark, dir).collect()
     assert(r.length == 1)

@@ -18,7 +18,7 @@ class MatryoshkaSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val rows = (0L until 60L).map { id =>
       val head = Array.fill(MatDims)(rnd.nextFloat() * 2 - 1)
-      (id, (head ++ Array.fill(64 - MatDims)(0f)).toSeq, s"l${id % 4}")
+      (id, (head ++ Array.fill(64 - MatDims)(0f)).toSeq, (id % 4).toInt)
     }
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

@@ -24,7 +24,7 @@ class QueryLikelihoodSpec extends SparkSpec {
       doc(2L, s"scan ${(0 until 4100).map("q" + _).mkString(" ")}"),
       // same tf as doc 1, ~100x the length -> must rank BELOW doc 1
       doc(3L, (0 until 41).map("z" + _).mkString(" "))) // no terms: not a candidate
-      .toDF("doc_id", "text", "lang", "source")
+      .toDF("doc_id", "text", "lang", "source").asSfTable("documents")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val out = TextQueries.queryLikelihood.run(spark, dir).collect()

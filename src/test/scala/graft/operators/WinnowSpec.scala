@@ -21,7 +21,7 @@ class WinnowSpec extends SparkSpec {
 
   private def writeDocs(rows: Seq[(Long, String)], d: String = dir): Unit =
     rows.map { case (id, t) => (id, t, "en", "web") }
-      .toDF("doc_id", "text", "lang", "source")
+      .toDF("doc_id", "text", "lang", "source").asSfTable("documents")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
 
   private def fpHashes(sfDir: String): Map[Long, Set[Long]] =

@@ -71,7 +71,7 @@ class StreamingCurationSpec extends SparkSpec {
     // so a zero norm can't make the assertion pass vacuously
     Seq((0L, "alpha alpha beta", "en", "src0"),
         (1L, Seq.fill(13)("gamma").mkString(" "), "en", "src5"))
-      .toDF("doc_id", "text", "lang", "source")
+      .toDF("doc_id", "text", "lang", "source").asSfTable("documents")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$corpus/documents.parquet")
     val m = CurationStreams.trainDsir(spark, corpus, mD)

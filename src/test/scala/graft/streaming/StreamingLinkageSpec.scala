@@ -50,6 +50,7 @@ class StreamingLinkageSpec extends SparkSpec {
     Tables.customer(spark, sf0001)
       .select("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
       .unionByName(synthetic)
+      .asSfTable("customer")
       .write.mode("overwrite").parquet(s"$corpusDir/customer.parquet")
   }
 

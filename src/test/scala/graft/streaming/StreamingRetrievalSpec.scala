@@ -115,7 +115,7 @@ class StreamingRetrievalSpec extends SparkSpec {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val base = Tables.embeddings(spark, sf0001)
-        .filter(col("vec_id") < 5).select("vec_id", "embedding")
+        .filter(col("vec_id") < 5).select("vec_id", "embedding").asSfTable("embeddings")
       base.write.mode("overwrite").parquet(s"$corpusDir/embeddings.parquet")
       val query = Tables.embeddings(spark, sf0001)
         .filter(col("vec_id") === 100)
