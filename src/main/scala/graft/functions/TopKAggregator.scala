@@ -8,11 +8,14 @@ import org.apache.spark.sql.expressions.Aggregator
   * a bounded buffer, merged map-side, so the shuffle carries at most k
   * entries per partition per group instead of every row.
   *
-  * Compare with the window-function composition (`TopKeyword`:
-  * row_number over a sort): the window plan shuffles and sorts ALL rows
-  * of each group; this aggregator's partial buffers make per-group
-  * top-k a pure hash-agg — the shape that survives a 100 TB keyword
-  * log. Ties resolve by key ascending (same contract as TopKeyword).
+  * Compare with `TopKeyword`, which keeps only the top 1: a built-in
+  * `min` over a `(-count, key IS NULL, key)` struct, O(1) state per
+  * group but planned as a sort aggregate (a struct buffer is not
+  * fixed-width, so Spark cannot hash-aggregate it). For k > 1 a window
+  * would shuffle and sort ALL rows of each group; this aggregator's
+  * bounded partial buffers make per-group top-k an object hash-agg —
+  * the shape that survives a 100 TB keyword log. Ties resolve by key
+  * ascending (same contract as TopKeyword).
   */
 object TopKAggregator {
 

@@ -3,7 +3,6 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.semantic.{KeywordClassifier, RuleClassifier}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.Materialize.MaterializeOps
 
@@ -26,7 +25,7 @@ import graft.plans.Materialize.MaterializeOps
   * Scale shape (the X1 redesign contract, see [[graft.semantic]]):
   * classification cost is per DISTINCT keyword, never per log row —
   * [[KeywordClassifier.applyDistinct]] computes the mapping on the
-  * distinct set and broadcast-joins it back, so a 100 TB log with a
+  * distinct set and joins it back, so a 100 TB log with a
   * millions-row keyword set classifies each keyword once. The rule
   * classifier itself is a literal when-chain (whole-stage codegen'd).
   */
@@ -80,7 +79,7 @@ object ClassifyQueries {
   /** X1: classify every distinct keyword — documents tokens (a large
     * mostly-"Other" set, the realistic distinct-heavy shape) UNION the
     * event search log (full taxonomy coverage) — via the distributed
-    * distinct→classify→broadcast-join path, then roll up per category.
+    * distinct→classify→join-back path, then roll up per category.
     * Hash-checks both the rule semantics (n_keywords per class) and the
     * join-back multiplicity (n_rows counts log occurrences). */
   val classifyKeywords = Q(
@@ -122,10 +121,12 @@ object ClassifyQueries {
     *
     * The reference's two month-loads (June/July) become the two halves
     * of the single synthetic month (day ≤ 15 — the same adaptation
-    * q_c6c7_trend_nulls established). Plan shape: one hash-agg, one
-    * window on (half, user), classifier broadcast-join, then a
-    * conditional-aggregation pivot on user_id — no H1×H2 self-join, so
-    * the month-vs-month comparison is one exchange on user_id. */
+    * q_c6c7_trend_nulls established). Plan shape: pipeline B's own
+    * pick-and-pair ([[TopKeyword.paired]]: one hash-agg on (user, half,
+    * keyword), then ONE aggregate on user_id that picks both halves and
+    * keeps users present in both — no window, no H1×H2 self-join), then
+    * one classification of the distinct picked keywords joined back
+    * onto both columns. */
   val behaviorTrend = Q(
     "q_behavior_trend",
     s"""WITH log AS (
@@ -153,37 +154,17 @@ object ClassifyQueries {
        |FROM (SELECT * FROM cls WHERE half = 'H1') a
        |JOIN (SELECT * FROM cls WHERE half = 'H2') b USING (user_id)
        |ORDER BY user_id""".stripMargin) { (s, d) =>
-    val log = searchLog(s, d)
-      .withColumn("half", when(dayofmonth(col("ts")) <= 15, "H1").otherwise("H2"))
-    val counts = log.groupBy("half", "user_id", "keyword")
-      .agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy("half", "user_id")
-      .orderBy(col("n").desc, col("keyword"))
-    // ≤2 rows per user after the rank-1 filter — materialize once so
-    // applyDistinct's two consumptions (mapping + probe) don't re-run
-    // the event-log agg + window
-    val top1 = counts.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") === 1)
-      .materializeOnce
-    val cls = RuleClassifier.applyDistinct(s, top1, "keyword", "category")
-    // ≤1 row per (half, user): conditional aggregation IS the H1×H2 join
-    cls.groupBy("user_id")
-      .agg(
-        max(when(col("half") === "H1", col("keyword"))).as("most_search_h1"),
-        max(when(col("half") === "H1", col("category"))).as("category_h1"),
-        max(when(col("half") === "H2", col("keyword"))).as("most_search_h2"),
-        max(when(col("half") === "H2", col("category"))).as("category_h2"))
-      // inner-join semantics (:197): both halves must be present
-      .filter(col("most_search_h1").isNotNull && col("most_search_h2").isNotNull)
+    val picks = TopKeyword.paired(searchLog(s, d),
+      when(dayofmonth(col("ts")) <= 15, "H1").otherwise("H2"),
+      Seq("H1" -> "most_search_h1", "H2" -> "most_search_h2"))
+    RuleClassifier.applyDistinct(s, picks,
+        Seq("most_search_h1" -> "category_h1", "most_search_h2" -> "category_h2"))
       .select(
         col("user_id"),
         col("most_search_h1"), col("category_h1"),
         col("most_search_h2"), col("category_h2"),
-        when(col("category_h1") === col("category_h2"), "Unchanged")
-          .otherwise("Changed").as("trending_type"),
-        when(col("category_h1") =!= col("category_h2"),
-             concat_ws("-", col("category_h1"), col("category_h2")))
-          .otherwise("Unchanged").as("category_change"))
+        Trend.trendingType(col("category_h1"), col("category_h2")).as("trending_type"),
+        Trend.categoryChange(col("category_h1"), col("category_h2")).as("category_change"))
       .orderBy("user_id")
   }
 }

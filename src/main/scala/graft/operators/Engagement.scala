@@ -10,9 +10,12 @@ import org.apache.spark.sql.functions._
   *  - ONE pivot over the whole multi-day frame with an explicit value
   *    list — the reference pivots per day with data-dependent values
   *    (30 extra distinct-values jobs; unionByName breaks when a day
-  *    misses a type);
-  *  - fillna(0) applied once post-pivot (covers both per-day pivot nulls
-  *    and missing-type columns).
+  *    misses a type). The pivot is written as one (Contract, Date)
+  *    aggregate with a conditional sum per type: Spark's `pivot` plans
+  *    a (Contract, Date, Type) aggregate plus a `PivotFirst` aggregate,
+  *    one more exchange for the same columns;
+  *  - fillna(0) applied once, as a `coalesce` over each pivoted sum
+  *    (covers both per-day pivot nulls and missing-type columns).
   * Tie semantics preserved exactly: most-watched priority Truyen Hinh >
   * Phim Truyen > Giai Tri > Thieu Nhi > The Thao; taste order
   * Giai Tri, Phim Truyen, The Thao, Thieu Nhi, Truyen Hinh.
@@ -24,19 +27,23 @@ object Engagement {
   private def totalCol(t: String) = "Total_" + t.replace(' ', '_')
 
   /** Pivot the typed rows to per-(Contract, Date) duration columns. */
-  def pivotDaily(typed: DataFrame): DataFrame =
+  def pivotDaily(typed: DataFrame): DataFrame = {
+    val sums = ContentTypes.map(t =>
+      coalesce(sum(when(col("Type") === t, col("TotalDuration"))), lit(0)).as(t))
     typed
       .groupBy(col("Contract"), col("log_date").as("Date"))
-      .pivot("Type", ContentTypes)
-      .sum("TotalDuration")
-      .na.fill(0, ContentTypes)
+      .agg(sums.head, sums.tail: _*)
+  }
 
-  /** Aggregate pivoted days to the final engagement profile. */
+  /** Aggregate pivoted days (one row per (Contract, Date), as
+    * [[pivotDaily]] makes them) to the final engagement profile. */
   def profile(pivoted: DataFrame): DataFrame = {
     val sums = ContentTypes.map(t => sum(col(t)).as(totalCol(t)))
     val agg = pivoted
       .groupBy("Contract")
-      .agg(sums.head, sums.tail :+ countDistinct(col("Date")).as("Active"): _*)
+      // one pivoted row per (Contract, Date): counting the non-null
+      // dates counts the distinct active days
+      .agg(sums.head, sums.tail :+ count(col("Date")).as("Active"): _*)
 
     // C2: argmax label, priority = reference chain order
     val priority = Seq("Truyen Hinh", "Phim Truyen", "Giai Tri", "Thieu Nhi", "The Thao")

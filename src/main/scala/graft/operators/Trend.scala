@@ -1,10 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Month-over-month trend derivation (pipeline B tail: SURVEY §2.3 J1 +
   * §2.8 C6/C7).
+  *
+  * The reference's June × July inner USING-join on `user_id` is
+  * [[TopKeyword.paired]]: one aggregate per user that keeps the users
+  * with a pick in both months. What is left here is the two derived
+  * columns over the paired categories.
   *
   * 3VL quirks preserved exactly (SURVEY §7.4 risk 3): with a NULL
   * category on either side, `Trending_Type` falls through to "Changed"
@@ -13,20 +18,20 @@ import org.apache.spark.sql.functions._
   */
 object Trend {
 
-  /** Inner USING-join of the June and July profiles + trend columns.
-    * Expected inputs: (user_id, most_search_T6, category_T6) and
-    * (user_id, most_search_T7, category_T7). */
-  def apply(june: DataFrame, july: DataFrame): DataFrame =
-    june.join(july, Seq("user_id"), "inner")
-      .withColumn("Trending_Type",
-        when(col("category_T6") === col("category_T7"), "Unchanged")
-          .otherwise("Changed"))
-      .withColumn("Category_Change",
-        when(col("category_T6") =!= col("category_T7"),
-             concat_ws("-", col("category_T6"), col("category_T7")))
-          .otherwise("Unchanged"))
-      .select("user_id",
-        "most_search_T6", "category_T6",
-        "most_search_T7", "category_T7",
-        "Trending_Type", "Category_Change")
+  def trendingType(before: Column, after: Column): Column =
+    when(before === after, "Unchanged").otherwise("Changed")
+
+  def categoryChange(before: Column, after: Column): Column =
+    when(before =!= after, concat_ws("-", before, after)).otherwise("Unchanged")
+
+  /** Trend columns over the paired months. Expected input:
+    * (user_id, most_search_T6, category_T6, most_search_T7,
+    * category_T7). */
+  def apply(paired: DataFrame): DataFrame =
+    paired.select(
+      col("user_id"),
+      col("most_search_T6"), col("category_T6"),
+      col("most_search_T7"), col("category_T7"),
+      trendingType(col("category_T6"), col("category_T7")).as("Trending_Type"),
+      categoryChange(col("category_T6"), col("category_T7")).as("Category_Change"))
 }

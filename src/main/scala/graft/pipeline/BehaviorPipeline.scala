@@ -9,33 +9,33 @@ import graft.sources.{Sink, Sources}
 /** Pipeline B — customer search-behavior trends (reference
   * ETL_customer_behavior.py end to end, re-planned per SURVEY §3.2/§3.3):
   *
-  *   one multi-path parquet read per month (not 14 unioned scans)
-  *   → per-user top keyword (deterministic tie-break)
-  *   → distributed keyword classification (distinct → classify →
-  *     broadcast join; no driver collect, no 10k cap, no hardcoded key)
-  *   → June × July inner join → trend/category-change derivation
+  *   one multi-path parquet read per month (not 14 unioned scans), each
+  *   tagged with its month, the two unioned
+  *   → per-(user, month, keyword) counts
+  *   → ONE `groupBy(user_id)` that picks each month's top keyword
+  *     (deterministic tie-break) and keeps the users with a pick in both
+  *     months — the reference's June × July inner join, without a window
+  *     or a join ([[TopKeyword.paired]])
+  *   → distributed keyword classification of the distinct picked
+  *     keywords of both months, once (distinct → classify → one mapping
+  *     joined back onto both columns; no driver collect, no 10k cap, no
+  *     hardcoded key), so the classifier never sees a keyword of a user
+  *     the join would drop
+  *   → trend/category-change derivation
   *   → injected sink.
   */
 object BehaviorPipeline {
 
-  /** Per-month half: top keyword + category, suffixed columns. */
-  def monthProfile(spark: SparkSession, dayDirs: Seq[String], suffix: String,
-                   classifier: KeywordClassifier): DataFrame = {
-    val top = TopKeyword(Sources.searchLogs(spark, dayDirs))
-    classifier
-      .applyDistinct(spark, top, "most_search", "category")
-      .select(
-        col("user_id"),
-        col("most_search").as(s"most_search_$suffix"),
-        col("category").as(s"category_$suffix"))
-  }
-
   /** Build the behavior frame (lazy; no action). */
   def build(spark: SparkSession, juneDirs: Seq[String], julyDirs: Seq[String],
-            classifier: KeywordClassifier = RuleClassifier): DataFrame =
-    Trend(
-      monthProfile(spark, juneDirs, "T6", classifier),
-      monthProfile(spark, julyDirs, "T7", classifier))
+            classifier: KeywordClassifier = RuleClassifier): DataFrame = {
+    def month(dirs: Seq[String], tag: String) =
+      Sources.searchLogs(spark, dirs).select(col("user_id"), col("keyword"), lit(tag).as("month"))
+    val picks = TopKeyword.paired(month(juneDirs, "T6").unionByName(month(julyDirs, "T7")),
+      col("month"), Seq("T6" -> "most_search_T6", "T7" -> "most_search_T7"))
+    Trend(classifier.applyDistinct(spark, picks,
+      Seq("most_search_T6" -> "category_T6", "most_search_T7" -> "category_T7")))
+  }
 
   /** Run end to end into a sink (table `behavior_data`). */
   def run(spark: SparkSession, juneDirs: Seq[String], julyDirs: Seq[String],

@@ -9,13 +9,15 @@ import graft.sources.{Sink, Sources}
   *
   *   one multi-path NDJSON read (not 30 driver-loop scans)
   *   → envelope unwrap + AppName mapping + sentinel filters
-  *   → ONE pivot with explicit values (not 30 data-dependent pivots)
+  *   → ONE pivot with explicit values (not 30 data-dependent pivots),
+  *     folded into the daily aggregate: one `groupBy(Contract, Date)`
+  *     with a conditional sum per type
   *   → engagement profile (totals, active days, most-watched, taste,
   *     activeness band)
   *   → injected sink.
   *
-  * Shuffle count: exactly 2 (pivot agg, profile agg) vs the reference's
-  * 31+ jobs.
+  * Shuffle count: exactly 2 exchanges (daily aggregate, profile
+  * aggregate) and 3 jobs per write, vs the reference's 31+ jobs.
   */
 object InteractionPipeline {
 

@@ -1,7 +1,6 @@
 package graft.semantic
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Batch-execution shape for classifiers that can't be a Catalyst
   * expression — the remote-LLM form of the reference's X1 operator
@@ -11,10 +10,11 @@ import org.apache.spark.sql.functions._
   *              HTTPS call, map back in pandas;
   *   engine:    DISTINCT keywords stay distributed; each partition
   *              batches its keywords (same 300/call protocol) through
-  *              [[classifyBatch]]; the resulting mapping broadcast-joins
-  *              back onto the full log. No driver collect, no row cap,
-  *              lazy (runs inside the job), deterministic under retry
-  *              when the implementation is.
+  *              [[classifyBatch]] (this trait's [[mapping]]); the
+  *              mapping joins back onto the frame through
+  *              [[KeywordClassifier.applyDistinct]]. No driver collect,
+  *              no row cap, lazy (runs inside the job), deterministic
+  *              under retry when the implementation is.
   *
   * A remote implementation supplies credentials via constructor —
   * never hardcoded (the reference ships a live API key; SURVEY §7.4).
@@ -35,13 +35,11 @@ trait BatchClassifier extends KeywordClassifier {
     throw new UnsupportedOperationException(
       s"$getClass is batch-only; use applyDistinct")
 
-  override def applyDistinct(spark: SparkSession, df: DataFrame,
-                             keywordCol: String, outName: String): DataFrame = {
+  override def mapping(spark: SparkSession, keywords: DataFrame): DataFrame = {
     import spark.implicits._
     val bs = batchSize
     val self = this
-    val mapping = df.select(col(keywordCol).cast("string")).na.drop().distinct()
-      .as[String]
+    keywords.as[String]
       .mapPartitions { it =>
         it.grouped(bs).flatMap { batch =>
           val m = self.classifyBatch(batch)
@@ -49,19 +47,18 @@ trait BatchClassifier extends KeywordClassifier {
             (k, m.getOrElse(k, KeywordClassifier.Fallback)))
         }
       }
-      .toDF(keywordCol, outName)
-    // no static broadcast hint: the distinct-keyword mapping grows with
-    // the corpus — AQE broadcasts it while small (see KeywordClassifier)
-    df.join(mapping, Seq(keywordCol), "left")
-      .withColumn(outName, coalesce(col(outName), lit(KeywordClassifier.Fallback)))
+      .toDF("keyword", "category")
   }
 }
 
 /** Deterministic stand-in for a remote model: classifies via the rule
   * table (scoring on the driver-free executor path), exercising the full
   * batch protocol — partition batching, partial responses (keys the
-  * "model" drops fall back to Other). Swap for a real HTTPS client
-  * without touching the plumbing. */
+  * "model" drops fall back to Other). With `dropEvery = n` the model
+  * loses about one key in n, chosen by the key's hash rather than its
+  * place in a batch, so the same keys fall back whatever the partitions,
+  * batches and retries. Swap for a real HTTPS client without touching
+  * the plumbing. */
 class MockLlmClassifier(dropEvery: Int = 0) extends BatchClassifier {
 
   private def ruleOf(k: String): String = {
@@ -75,9 +72,7 @@ class MockLlmClassifier(dropEvery: Int = 0) extends BatchClassifier {
 
   override def classifyBatch(keywords: Seq[String]): Map[String, String] = {
     val kept =
-      if (dropEvery > 0) keywords.zipWithIndex.collect {
-        case (k, i) if (i + 1) % dropEvery != 0 => k
-      }
+      if (dropEvery > 0) keywords.filter(k => Math.floorMod(k.hashCode, dropEvery) != 0)
       else keywords
     kept.map(k => k -> ruleOf(k)).toMap
   }

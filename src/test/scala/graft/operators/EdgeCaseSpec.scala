@@ -43,11 +43,31 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("trend with empty month frames: empty inner join") {
-    val june = Seq.empty[(String, String, String)]
-      .toDF("user_id", "most_search_T6", "category_T6")
-    val july = Seq.empty[(String, String, String)]
-      .toDF("user_id", "most_search_T7", "category_T7")
-    assert(Trend(june, july).count() == 0)
+    val logs = Seq.empty[(String, String, String)].toDF("user_id", "month", "keyword")
+    val pairs = TopKeyword.paired(logs, col("month"),
+      Seq("T6" -> "most_search_T6", "T7" -> "most_search_T7"))
+    assert(Trend(RuleClassifier.applyDistinct(spark, pairs,
+      Seq("most_search_T6" -> "category_T6", "most_search_T7" -> "category_T7"))).count() == 0)
+  }
+
+  test("pipeline B with an empty June or an empty July: zero rows, full schema") {
+    val root = java.nio.file.Files.createTempDirectory("graft_empty_month").toString
+    val empty = s"$root/20220601"
+    val full = s"$root/20220701"
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      graft.schema.Schemas.searchLog).write.parquet(empty)
+    Seq(("u1", "VTV3"), ("u2", "phim")).toDF("user_id", "keyword")
+      .select(graft.schema.Schemas.searchLog.map(f =>
+        (if (f.name == "user_id" || f.name == "keyword") col(f.name) else lit(null))
+          .cast(f.dataType).as(f.name)): _*)
+      .write.parquet(full)
+    val columns = Seq("user_id", "most_search_T6", "category_T6",
+      "most_search_T7", "category_T7", "Trending_Type", "Category_Change")
+    for ((june, july) <- Seq((empty, full), (full, empty))) {
+      val out = graft.pipeline.BehaviorPipeline.build(spark, Seq(june), Seq(july))
+      assert(out.columns.toSeq == columns)
+      assert(out.count() == 0, s"june $june july $july")
+    }
   }
 
   test("as-of joins over empty sides: left-join contract holds") {
