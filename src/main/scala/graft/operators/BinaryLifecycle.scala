@@ -41,7 +41,7 @@ import graft.sources.GenerationedTable
   * Pinned readers are undisturbed: a reader on generation g keeps
   * reading g's bytes; the streaming packer
   * ([[graft.streaming.CodeStreams]]) observes the new generation at
-  * its next model load — the generation boundary — and a full repack
+  * its next [[asModel]] read — the generation boundary — and a full repack
   * has already landed beside it, so post-switch arrivals extend a
   * consistent table.
   *
@@ -95,7 +95,16 @@ object BinaryLifecycle {
   /** The pointed (or pinned) generation's trained per-dim thresholds. */
   def thresholds(s: SparkSession, store: String,
                  gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, thresholdsDir(store), gen)
+    GenerationedTable.read(s, thresholdsDir(store),
+      Some(gen.getOrElse(committedGeneration(s, store))))
+
+  /** The pointed (or pinned) generation bridged to the streaming twin's
+    * frozen-model type — how [[graft.streaming.CodeStreams]] packs
+    * arrivals under generation `gen`. */
+  def asModel(s: SparkSession, store: String,
+              gen: Option[Int] = None): graft.streaming.CodeStreams.ThresholdModel =
+    graft.streaming.CodeStreams.ThresholdModel(
+      SimilarityQueries.thresholdRowOf(thresholds(s, store, gen)))
 
   /** The pointed (or pinned) generation's packed code table — what the
     * Hamming serving tier scans. An UNPINNED read resolves the
@@ -155,8 +164,7 @@ object BinaryLifecycle {
                  shiftPpm: Long = 150000L,
                  darkBandPpm: Long = 50000L): CodeDriftDecision = {
     val s = vectors.sparkSession
-    val gen = GenerationedTable.latest(s, thresholdsDir(store)).getOrElse(
-      throw new IllegalStateException(s"$store has no trained generation"))
+    val gen = committedGeneration(s, store)
     val frozen = thresholds(s, store, Some(gen))
     val cur = balanceOf(explodeVecs(vectors), frozen)
       .select(col("pos"), col("balance_ppm").as("cur_ppm"))

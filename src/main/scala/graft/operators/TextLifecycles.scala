@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions.{tokens, wordShingles}
 import graft.sources.GenerationedTable
 import graft.plans.Materialize.MaterializeOps
 
@@ -41,6 +40,11 @@ import graft.plans.Materialize.MaterializeOps
   * (unpinned readers resolve ONLY the totals pointer — the
   * [[BinaryLifecycle.codes]] single-commit-point rule) and are
   * overwritten by the next retrain.
+  *
+  * The store is the DSIR model's only trainer and on-disk format:
+  * [[graft.streaming.CurationStreams.dsirStream]] and
+  * [[graft.streaming.AdmissionStreams.train]] train through [[retrain]]
+  * and score with [[asModel]].
   *
   * Scale shape: the gauge is one token explode into a 256-row hash-agg
   * (the scoring pass's own featurization); only 256 aggregate rows
@@ -243,6 +247,11 @@ object DsirLifecycle {
   * Orphans from a crash mid-retrain are unreachable and overwritten by
   * the next retrain.
   *
+  * The store is the KN model's only trainer and on-disk format:
+  * [[graft.streaming.QualityStreams.scoreStream]] and
+  * [[graft.streaming.AdmissionStreams.train]] train through [[retrain]]
+  * and score with [[asModel]].
+  *
   * Scale shape: the gauge is the scoring pass itself (three
   * vocabulary-keyed equi-joins) aggregated to one row; training is the
   * [[LangModelQueries]] type-stats plan. Nothing pairs documents; the
@@ -257,17 +266,13 @@ object KnLifecycle {
   def contsDir(store: String): String = s"$store/conts"
   def cutsDir(store: String): String = s"$store/cuts"
 
-  private def instOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("source"),
-      explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-
   /** Train the next generation from the current corpus: the full KN
     * model ([[graft.streaming.QualityStreams.KnModel]] components), the
     * per-source band cutpoints, and the training-time surprisal
     * baseline, all under one generation number. Returns that number. */
   def retrain(docs: DataFrame, store: String): Int = {
     val s = docs.sparkSession
-    val inst = instOf(docs)
+    val inst = graft.streaming.QualityStreams.instOf(docs)
     val st = LangModelQueries.knTypeStats(inst).cache()
     try {
       val next = GenerationedTable.generations(s, totalDir(store))
@@ -347,28 +352,11 @@ object KnLifecycle {
                  shiftPpm: Long = 100000L): KnDriftDecision = {
     val s = docs.sparkSession
     val gen = committedGeneration(s, store)
-    val bigrams = GenerationedTable.read(s, bigramsDir(store), Some(gen))
-    val firsts = GenerationedTable.read(s, firstsDir(store), Some(gen))
-    val conts = GenerationedTable.read(s, contsDir(store), Some(gen))
-    val t = GenerationedTable.read(s, totalDir(store), Some(gen))
-      .head().getLong(0)
-    // the QualityStreams scoring joins, with OOV flags kept — 1 agg
-    // row; same size gate as the twin (broadcast under the conf gate,
-    // equi-keyed past it — t is the bigram frame's row count)
-    val r = instOf(docs)
-      .withColumn("v", substring_index(col("bg"), " ", 1))
-      .withColumn("wd", substring_index(col("bg"), " ", -1))
-      .transform(LangModelQueries.joinFrozen(_, bigrams, "bg", t))
-      .transform(LangModelQueries.joinFrozen(_, firsts, "v", t))
-      .transform(LangModelQueries.joinFrozen(_, conts, "wd", t))
-      .select(
-        when(col("cv").isNull || col("n1w").isNull, 1L).otherwise(0L).as("oovw"),
-        (length(bin(coalesce(col("cv"), lit(1L)) * 4 * lit(t))) -
-          length(bin(
-            greatest(coalesce(col("cvw"), lit(0L)) * 4 - 3, lit(0L)) * lit(t)
-              + coalesce(col("n1v"), lit(1L)) * coalesce(col("n1w"), lit(1L)) * 3)))
-          .as("bits"))
-      .agg(count(lit(1)).as("n"), sum("oovw").as("oov"),
+    // the twin's own pricing of each bigram instance, aggregated to 1 row
+    val r = graft.streaming.QualityStreams
+      .bigramBits(docs, asModel(s, store, Some(gen)))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("oov"), 1L).otherwise(0L)).as("oov"),
         sum(col("bits").cast("long")).as("kn_bits"))
       .collect().head
     require(!r.isNullAt(0) && r.getLong(0) > 0,
@@ -582,6 +570,11 @@ object BpeLifecycle {
   * `<store>/bplist` is the AUTHORITY (written last — the
   * [[BinaryLifecycle.codes]] single-commit-point rule);
   * `<store>/stats` (1-row training baseline) commits first.
+  *
+  * The store is the list's only trainer and on-disk format:
+  * [[graft.streaming.CurationStreams.boilerplateStream]] and
+  * [[graft.streaming.AdmissionStreams.train]] train through [[retrain]]
+  * and excise with [[list]].
   *
   * Scale shape: the gauge is the list-training pass itself (one
   * segment explode + one segment-keyed hash-agg) plus a list-sized

@@ -1,11 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import graft.functions.TextFunctions.tokens
-import graft.operators.{BoilerplateQueries, DsirQueries, PipelineV2Queries}
+import graft.operators.{BoilerplateLifecycle, BoilerplateQueries, DsirLifecycle, DsirQueries, KnLifecycle, PipelineV2Queries}
 
 /** Curation-funnel admission on arrival — the composed streaming twin
   * of the v2 pipeline's PER-DOCUMENT gates
@@ -18,7 +17,7 @@ import graft.operators.{BoilerplateQueries, DsirQueries, PipelineV2Queries}
   * row with stage attribution: the production shape where every crawl
   * batch receives an admit/reject decision the moment it lands.
   *
-  * All three models are trained ONCE from the reference corpus and
+  * All three models are trained ONCE into their lifecycle stores and
   * frozen (the [[CurationStreams]]/[[QualityStreams]] discipline); the
   * stage kernels are the SAME code the batch pipeline runs
   * ([[BoilerplateQueries.segmentsOf]],
@@ -53,21 +52,25 @@ object AdmissionStreams {
       kn: QualityStreams.KnModel,
       dsir: CurationStreams.DsirModel)
 
-  /** Train all three frozen models from the corpus (each component
-    * keeps its own commit marker — a crash mid-train leaves that
-    * component explicitly uncommitted). */
-  def train(s: SparkSession, corpusDir: String, modelRoot: String): AdmissionModel =
-    AdmissionModel(
-      CurationStreams.trainBoilerplate(s, corpusDir, s"$modelRoot/bp"),
-      QualityStreams.train(s, corpusDir, s"$modelRoot/kn"),
-      CurationStreams.trainDsir(s, corpusDir, s"$modelRoot/dsir"))
+  /** Train the next generation of all three stores under `modelRoot`
+    * (`bp`, `kn`, `dsir`) from the corpus, then [[load]] them. A crash
+    * before a store's commit pointer swings leaves that store on its
+    * previous generation. */
+  def train(s: SparkSession, corpusDir: String, modelRoot: String): AdmissionModel = {
+    val docs = graft.Tables.documents(s, corpusDir)
+    BoilerplateLifecycle.retrain(docs, s"$modelRoot/bp")
+    KnLifecycle.retrain(docs, s"$modelRoot/kn")
+    DsirLifecycle.retrain(docs, s"$modelRoot/dsir")
+    load(s, modelRoot)
+  }
 
-  /** Re-open persisted models; refuses any uncommitted component. */
+  /** The committed generation of each store; refuses a store with
+    * none. */
   def load(s: SparkSession, modelRoot: String): AdmissionModel =
     AdmissionModel(
-      CurationStreams.loadBoilerplate(s, s"$modelRoot/bp"),
-      QualityStreams.load(s, s"$modelRoot/kn"),
-      CurationStreams.loadDsir(s, s"$modelRoot/dsir"))
+      BoilerplateLifecycle.list(s, s"$modelRoot/bp"),
+      KnLifecycle.asModel(s, s"$modelRoot/kn"),
+      DsirLifecycle.asModel(s, s"$modelRoot/dsir"))
 
   /** Admission verdicts for one already-deduplicated batch:
     * (doc_id, source, raw_toks, kept, band, weight_bits, level) with
@@ -131,7 +134,8 @@ object AdmissionStreams {
       .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
 
   /** Continuous wiring: admission decided micro-batch by micro-batch
-    * under models trained once on `corpusDir`, under either dial. */
+    * under the stores' next generations, trained once on `corpusDir`
+    * at start, under either dial. */
   def admitStream(docs: DataFrame, corpusDir: String, modelRoot: String,
                   outDir: String, pareto: Boolean = false): DataStreamWriter[Row] = {
     val m = train(docs.sparkSession, corpusDir, modelRoot)
@@ -144,10 +148,6 @@ object AdmissionStreams {
 
   /** The accumulated admission ledger, newest-batch-wins on re-ingest. */
   def admitted(s: SparkSession, outDir: String): DataFrame =
-    s.read.parquet(outDir)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("ingest_batch").desc)))
-      .filter(col("rk") === 1)
-      .select("doc_id", "source", "raw_toks", "kept", "band",
-        "weight_bits", "level")
+    Ledger.newest(s, outDir, "doc_id", "doc_id", "source", "raw_toks",
+      "kept", "band", "weight_bits", "level")
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
@@ -16,10 +15,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
   * codes precomputed as the corpus grows.
   *
   * Frozen-model contract (the [[QualityStreams]]/[[CurationStreams]]
-  * discipline): the midrange thresholds are trained ONCE from the
-  * reference corpus and persisted with a commit marker; every
-  * micro-batch packs against that frozen state — the hot path never
-  * re-derives a threshold. Re-thresholding on running min/max would
+  * discipline): the midrange thresholds are trained into a
+  * [[graft.operators.BinaryLifecycle]] store and read back as one
+  * committed generation ([[graft.operators.BinaryLifecycle.asModel]]);
+  * every micro-batch packs against that frozen state — the hot path
+  * never re-derives a threshold. Re-thresholding on running min/max would
   * make codes order-dependent and replay-unsafe (the boilerplate
   * running-count lesson); a distribution shift instead triggers an
   * explicit retrain + full repack, the [[graft.operators.IvfLifecycle]]
@@ -41,34 +41,6 @@ object CodeStreams {
 
   /** The frozen threshold model: ONE pos-ordered array row. */
   final case class ThresholdModel(ts: DataFrame)
-
-  private def marker(modelDir: String) =
-    new org.apache.hadoop.fs.Path(s"$modelDir/_CODE_MODEL_OK")
-
-  /** Train the per-dim midrange thresholds from the corpus and persist
-    * them. The marker is retracted FIRST and re-created LAST, so a
-    * crash mid-retrain leaves an explicitly-uncommitted dir. */
-  def train(s: SparkSession, corpusDir: String, modelDir: String): ThresholdModel = {
-    val fs = marker(modelDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(marker(modelDir), false)
-    graft.operators.SimilarityQueries.binaryThresholdRow(
-        graft.Tables.embeddings(s, corpusDir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
-      .write.mode("overwrite").parquet(s"$modelDir/thresholds")
-    fs.create(marker(modelDir), true).close()
-    load(s, modelDir)
-  }
-
-  /** Re-open a persisted frozen model; refuses an uncommitted dir. */
-  def load(s: SparkSession, modelDir: String): ThresholdModel = {
-    val fs = marker(modelDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker(modelDir)),
-      s"threshold model at $modelDir lacks the _CODE_MODEL_OK commit " +
-        "marker (interrupted training) — re-run train()")
-    ThresholdModel(s.read.parquet(s"$modelDir/thresholds"))
-  }
 
   /** Pack one micro-batch of (vec_id, embedding) rows under the frozen
     * thresholds (exposed for replay tests). */
@@ -92,9 +64,5 @@ object CodeStreams {
   /** The accumulated code table, newest-batch-wins per vec_id — what
     * the Hamming serving tier scans. */
   def codes(s: SparkSession, outDir: String): DataFrame =
-    s.read.parquet(outDir)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("ingest_batch").desc)))
-      .filter(col("rk") === 1)
-      .select("vec_id", "w0", "w1")
+    Ledger.newest(s, outDir, "vec_id", "vec_id", "w0", "w1")
 }

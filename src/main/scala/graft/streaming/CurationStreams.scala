@@ -1,19 +1,17 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import graft.operators.{BoilerplateQueries, DsirQueries}
+import graft.operators.{BoilerplateLifecycle, BoilerplateQueries, DsirLifecycle, DsirQueries}
 
 /** Curation-on-arrival: the streaming twins of the two frozen-artifact
   * curation operators — DSIR importance scoring (`q_dsir_weights`) and
   * line-grain boilerplate excision (`q_line_excise`). Both follow the
-  * [[QualityStreams]] frozen-model contract: the model is trained ONCE
-  * on the reference corpus, persisted with a commit marker, and every
-  * micro-batch is scored against that frozen state — the hot path never
-  * retrains.
+  * [[QualityStreams]] frozen-model contract: at stream start the model
+  * is trained once into its lifecycle store ([[DsirLifecycle]],
+  * [[BoilerplateLifecycle]]) and every micro-batch is scored against
+  * that store's committed generation — the hot path never retrains.
   *
   * Frozen-state caveats (both documented, both by design — the
   * [[graft.sources.DeleteAudit]] frozen-cap precedent):
@@ -33,54 +31,10 @@ object CurationStreams {
   // ---------------------------------------------------------------- DSIR
 
   /** The frozen DSIR model: 256-row bucket counts + scalar totals + the
-    * frozen selection cut (the training pool's 30th-highest weight). */
+    * frozen selection cut (the training pool's 30th-highest weight) —
+    * one generation of a [[DsirLifecycle]] store
+    * ([[DsirLifecycle.asModel]]). */
   final case class DsirModel(buckets: DataFrame, nt: Long, nr: Long, cut: Long)
-
-  private def dsirMarker(dir: String) = new Path(s"$dir/_DSIR_MODEL_OK")
-
-  /** Train and persist the frozen DSIR model from the corpus. The commit
-    * marker is retracted FIRST and re-created LAST, so a crash
-    * mid-retrain leaves an explicitly-uncommitted dir. */
-  def trainDsir(s: SparkSession, corpusDir: String, modelDir: String): DsirModel = {
-    val fs = dsirMarker(modelDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(dsirMarker(modelDir), false)
-    val bk = DsirQueries.bucketTokens(graft.Tables.documents(s, corpusDir))
-    val bt = DsirQueries.bucketModel(bk).cache()
-    try {
-      bt.write.mode("overwrite").parquet(s"$modelDir/buckets")
-      val Row(nt: Long, nr: Long) =
-        bt.agg(sum("ct").as("nt"), sum("cr").as("nr")).head()
-      // the frozen selection boundary: the training pool's 30th-highest
-      // doc weight (the q_dsir_sample admission line)
-      val cut = bk.filter(!DsirQueries.isTarget)
-        .join(broadcast(bt.crossJoin(broadcast(
-          bt.agg(sum("ct").as("nt"), sum("cr").as("nr"))))), Seq("b"))
-        .withColumn("s", DsirQueries.scoreCol)
-        .groupBy("doc_id")
-        .agg(sum(col("s").cast("long")).as("weight_bits"))
-        .orderBy(col("weight_bits").desc, col("doc_id"))
-        .limit(30)
-        .agg(min("weight_bits")).head().getLong(0)
-      s.range(1)
-        .select(lit(nt).as("nt"), lit(nr).as("nr"), lit(cut).as("cut"))
-        .write.mode("overwrite").parquet(s"$modelDir/totals")
-      fs.create(dsirMarker(modelDir), true).close()
-    } finally bt.unpersist()
-    loadDsir(s, modelDir)
-  }
-
-  /** Re-open a persisted frozen DSIR model; refuses an uncommitted dir. */
-  def loadDsir(s: SparkSession, modelDir: String): DsirModel = {
-    val fs = dsirMarker(modelDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(dsirMarker(modelDir)),
-      s"DSIR model at $modelDir lacks the _DSIR_MODEL_OK commit marker " +
-        "(interrupted training) — re-run trainDsir()")
-    val t = s.read.parquet(s"$modelDir/totals").head()
-    DsirModel(s.read.parquet(s"$modelDir/buckets"),
-      t.getAs[Long]("nt"), t.getAs[Long]("nr"), t.getAs[Long]("cut"))
-  }
 
   /** One micro-batch DSIR scoring (exposed for replay tests). Every
     * arriving doc scores — a crawl carries no trusted target label, so
@@ -108,11 +62,13 @@ object CurationStreams {
         sum(col("s").cast("long")).as("weight_bits"))
       .withColumn("selected", col("weight_bits") >= m.cut)
 
-  /** Continuous wiring: documents scored on arrival under the model
-    * trained once on `corpusDir`. */
-  def dsirStream(docs: DataFrame, corpusDir: String, modelDir: String,
+  /** Continuous wiring: documents scored on arrival under the next
+    * generation of `store`, trained once on `corpusDir` at start. */
+  def dsirStream(docs: DataFrame, corpusDir: String, store: String,
                  outDir: String): DataStreamWriter[Row] = {
-    val m = trainDsir(docs.sparkSession, corpusDir, modelDir)
+    val s = docs.sparkSession
+    DsirLifecycle.retrain(graft.Tables.documents(s, corpusDir), store)
+    val m = DsirLifecycle.asModel(s, store)
     docs.writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -122,60 +78,28 @@ object CurationStreams {
 
   /** The accumulated scored pool, newest-batch-wins on re-ingest. */
   def dsirScored(s: SparkSession, outDir: String): DataFrame =
-    s.read.parquet(outDir)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("ingest_batch").desc)))
-      .filter(col("rk") === 1)
-      .select("doc_id", "source", "n_tokens", "weight_bits", "selected")
+    Ledger.newest(s, outDir, "doc_id",
+      "doc_id", "source", "n_tokens", "weight_bits", "selected")
 
   // --------------------------------------------------------- boilerplate
 
-  private def bpMarker(dir: String) = new Path(s"$dir/_BP_LIST_OK")
-
-  /** Train and persist the frozen boilerplate list (segments carried by
-    * >= MinDocs distinct reference-corpus documents). */
-  def trainBoilerplate(s: SparkSession, corpusDir: String, modelDir: String): DataFrame = {
-    val fs = bpMarker(modelDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(bpMarker(modelDir), false)
-    BoilerplateQueries
-      .boilerplateOf(BoilerplateQueries.segmentsOf(
-        graft.Tables.documents(s, corpusDir)))
-      .write.mode("overwrite").parquet(s"$modelDir/bplist")
-    fs.create(bpMarker(modelDir), true).close()
-    loadBoilerplate(s, modelDir)
-  }
-
-  /** Re-open the persisted list; refuses an uncommitted dir. */
-  def loadBoilerplate(s: SparkSession, modelDir: String): DataFrame = {
-    val fs = bpMarker(modelDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(bpMarker(modelDir)),
-      s"boilerplate list at $modelDir lacks the _BP_LIST_OK commit " +
-        "marker (interrupted training) — re-run trainBoilerplate()")
-    s.read.parquet(s"$modelDir/bplist")
-  }
-
-  /** One micro-batch excision against the frozen list. */
+  /** One micro-batch excision against the frozen list (the one-column
+    * `bseg` frame of [[BoilerplateLifecycle.list]]). */
   def bpExciseBatch(batch: DataFrame, batchId: Long, bp: DataFrame,
-                    outDir: String): Unit = {
-    val one = batch
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy("doc_id")
-          .orderBy(length(col("text")).desc, col("text").desc)))
-      .filter(col("_rk") === 1)
-      .drop("_rk")
+                    outDir: String): Unit =
     BoilerplateQueries
-      .exciseFrom(BoilerplateQueries.segmentsOf(one), bp)
+      .exciseFrom(BoilerplateQueries.segmentsOf(Ledger.oneRowPerDoc(
+        batch.select(col("doc_id").cast("long").as("doc_id"), col("text")))),
+        bp)
       .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-  }
 
-  /** Continuous wiring: excise-on-arrival under the list trained once
-    * on `corpusDir`. */
-  def boilerplateStream(docs: DataFrame, corpusDir: String, modelDir: String,
+  /** Continuous wiring: excise-on-arrival under the next generation of
+    * `store`, trained once on `corpusDir` at start. */
+  def boilerplateStream(docs: DataFrame, corpusDir: String, store: String,
                         outDir: String): DataStreamWriter[Row] = {
-    val bp = trainBoilerplate(docs.sparkSession, corpusDir, modelDir)
+    val s = docs.sparkSession
+    BoilerplateLifecycle.retrain(graft.Tables.documents(s, corpusDir), store)
+    val bp = BoilerplateLifecycle.list(s, store)
     docs.writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -185,10 +109,6 @@ object CurationStreams {
 
   /** The accumulated cleaned corpus, newest-batch-wins on re-ingest. */
   def bpExcised(s: SparkSession, outDir: String): DataFrame =
-    s.read.parquet(outDir)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("ingest_batch").desc)))
-      .filter(col("rk") === 1)
-      .select("doc_id", "segs_total", "segs_removed", "words_total",
-        "words_kept", "cleaned_fp")
+    Ledger.newest(s, outDir, "doc_id", "doc_id", "segs_total",
+      "segs_removed", "words_total", "words_kept", "cleaned_fp")
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
@@ -44,11 +43,8 @@ object LayoutStreams {
 
   /** The accumulated doc-grain cell ledger, newest-batch-wins. */
   def cells(s: SparkSession, outDir: String): DataFrame =
-    s.read.parquet(outDir)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("ingest_batch").desc)))
-      .filter(col("rk") === 1)
-      .select("doc_id", "source", "d1", "d2", "zv", "file_id")
+    Ledger.newest(s, outDir, "doc_id",
+      "doc_id", "source", "d1", "d2", "zv", "file_id")
 
   /** Per-file skipping statistics over the resolved ledger — the same
     * shape `q_zorder_layout` reports for the batch corpus. */

@@ -106,6 +106,7 @@ object MultimodalStreams {
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     require(fs.exists(p) && fs.listStatus(p).nonEmpty,
       s"no ingested hash index at $hashDir")
+    // not Ledger.newest: a valid signature outranks a newer failed one
     s.read.parquet(hashDir)
       .withColumn("rk", row_number().over(
         Window.partitionBy("doc_id")

@@ -1,11 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import graft.functions.TextFunctions.{tokens, wordShingles}
-import graft.operators.LangModelQueries
+import graft.operators.KnLifecycle
 
 /** Perplexity-filter-on-arrival — the streaming twin of `q_lm_kn` +
   * `q_quality_tertiles` (streaming twin #12): each micro-batch of
@@ -16,16 +15,16 @@ import graft.operators.LangModelQueries
   * never retrains in the hot path, exactly the frozen-vocab
   * [[TokenizeStreams]] discipline).
   *
-  * Frozen state, resolved ONCE at stream start:
+  * Frozen state: the next generation of a [[graft.operators.KnLifecycle]]
+  * store, trained ONCE at stream start and read back through
+  * [[graft.operators.KnLifecycle.asModel]]:
   *  - the bigram-type frame (bg → cvw) and the two word-marginal
-  *    frames (v → cv, N1+(v·); w → N1+(·w)) — vocabulary-sized,
-  *    SIZE-GATED onto each batch ([[LangModelQueries.joinFrozen]],
-  *    r19 verdict item 3): broadcast while the type total is under
-  *    `spark.graft.model.broadcast.rows`, plain equi-keyed joins past
-  *    it (AQE picks sort-merge/shuffled-hash) — a vocabulary that
-  *    outgrows the 8 GB broadcast cap demotes instead of failing;
-  *  - the 1-row type total T (driver long, [[TokenizeStreams
-  *    .trainedMerges]] pattern);
+  *    frames (v → cv, N1+(v·); w → N1+(·w)) — vocabulary-sized, joined
+  *    onto each batch as plain left joins, so Spark's own size rule
+  *    (`spark.sql.autoBroadcastJoinThreshold`) broadcasts them while
+  *    they are small and plans shuffled joins once a vocabulary outgrows
+  *    it;
+  *  - the 1-row type total T (a driver long);
   *  - per-source band cutpoints (c1 = head's hi_ppm, c2 = middle's
   *    hi_ppm) from the batch tertiles.
   *
@@ -55,7 +54,8 @@ import graft.operators.LangModelQueries
 object QualityStreams {
 
   /** The frozen KN model: three vocabulary-sized frames + the type
-    * total + per-source band cutpoints. */
+    * total + per-source band cutpoints — one generation of a
+    * [[KnLifecycle]] store. */
   final case class KnModel(
       bigrams: DataFrame, // (bg, cvw)
       firsts: DataFrame,  // (v, cv, n1v)
@@ -63,89 +63,35 @@ object QualityStreams {
       t: Long,            // N1+(··) — total bigram types
       cuts: DataFrame)    // (source, c1, c2)
 
-  private def instOf(docs: DataFrame): DataFrame =
+  /** (doc_id, source, bg): one row per bigram instance. */
+  private[graft] def instOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("source"),
       explode(wordShingles(tokens(col("text")), 2)).as("bg"))
 
-  /** Train the frozen model from the corpus at `corpusDir` and persist
-    * it under `modelDir` — called once, before the stream starts. The
-    * model lives on DISK (not pinned executor memory — the cache is
-    * released once the build lands), so a restarted stream re-[[load]]s
-    * the identical frozen state instead of retraining. */
-  def train(s: SparkSession, corpusDir: String, modelDir: String): KnModel = {
-    val inst = instOf(graft.Tables.documents(s, corpusDir))
-    // retract any previous commit before touching components: a crash
-    // mid-retrain must leave an explicitly-uncommitted dir, not an old
-    // marker blessing mixed-generation state
-    markerPath(modelDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(markerPath(modelDir), false)
-    val st = LangModelQueries.knTypeStats(inst).cache()
-    try {
-      st.select("bg", "cvw")
-        .write.mode("overwrite").parquet(s"$modelDir/bigrams")
-      st.select("v", "cv", "n1v").distinct()
-        .write.mode("overwrite").parquet(s"$modelDir/firsts")
-      st.select("wd", "n1w").distinct()
-        .write.mode("overwrite").parquet(s"$modelDir/conts")
-      val t = st.count()
-      s.range(1).select(lit(t).as("t"))
-        .write.mode("overwrite").parquet(s"$modelDir/total")
-      LangModelQueries.knScoresFrom(inst)
-        .withColumn("b3", ntile(3).over(
-          Window.partitionBy("source").orderBy("avg_ppm", "doc_id")))
-        .groupBy("source")
-        .agg(max(when(col("b3") === 1, col("avg_ppm"))).as("c1"),
-          max(when(col("b3") <= 2, col("avg_ppm"))).as("c2"))
-        .write.mode("overwrite").parquet(s"$modelDir/cuts")
-      // commit marker LAST: the five writes above are not atomic as a
-      // group, and a restarted stream must never load() a model whose
-      // tail components are from an older (or no) training run
-      val fs = new org.apache.hadoop.fs.Path(modelDir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.create(markerPath(modelDir), true).close()
-    } finally st.unpersist()
-    load(s, modelDir)
-  }
-
-  private def markerPath(modelDir: String) =
-    new org.apache.hadoop.fs.Path(s"$modelDir/_KN_MODEL_OK")
-
-  /** Re-open a persisted frozen model. Refuses an uncommitted
-    * (partially-written) model dir — retrain instead of silently
-    * scoring against mixed-generation state. */
-  def load(s: SparkSession, modelDir: String): KnModel = {
-    val fs = markerPath(modelDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(markerPath(modelDir)),
-      s"KN model at $modelDir lacks the _KN_MODEL_OK commit marker " +
-        "(interrupted training) — re-run train()")
-    KnModel(
-      bigrams = s.read.parquet(s"$modelDir/bigrams"),
-      firsts = s.read.parquet(s"$modelDir/firsts"),
-      conts = s.read.parquet(s"$modelDir/conts"),
-      t = s.read.parquet(s"$modelDir/total").head().getLong(0),
-      cuts = s.read.parquet(s"$modelDir/cuts"))
-  }
-
-  /** Score-and-band one already-deduplicated (doc_id, source, text)
-    * frame against the frozen model — the micro-batch core, shared
-    * with the composed [[AdmissionStreams]] twin. */
-  private[streaming] def scoreFrame(one: DataFrame, m: KnModel): DataFrame =
-    instOf(one)
+  /** Price every bigram instance of a (doc_id, source, text) frame under
+    * the frozen model: (doc_id, source, oov, bits), where `oov` marks an
+    * instance whose first or second word the trainer never saw. Shared
+    * by [[scoreFrame]] and [[KnLifecycle.driftCheck]]. */
+  private[graft] def bigramBits(docs: DataFrame, m: KnModel): DataFrame =
+    instOf(docs)
       .withColumn("v", substring_index(col("bg"), " ", 1))
       .withColumn("wd", substring_index(col("bg"), " ", -1))
-      // size-gated (r19 verdict item 3): broadcast while the vocabulary
-      // frames fit (m.t IS the bigram frame's row count and bounds the
-      // marginals — no extra count job), plain equi-joins past the gate
-      .transform(LangModelQueries.joinFrozen(_, m.bigrams, "bg", m.t))
-      .transform(LangModelQueries.joinFrozen(_, m.firsts, "v", m.t))
-      .transform(LangModelQueries.joinFrozen(_, m.conts, "wd", m.t))
+      .join(m.bigrams, Seq("bg"), "left")
+      .join(m.firsts, Seq("v"), "left")
+      .join(m.conts, Seq("wd"), "left")
       .select(col("doc_id"), col("source"),
+        (col("cv").isNull || col("n1w").isNull).as("oov"),
         (length(bin(coalesce(col("cv"), lit(1L)) * 4 * lit(m.t))) -
           length(bin(
             greatest(coalesce(col("cvw"), lit(0L)) * 4 - 3, lit(0L)) * lit(m.t)
               + coalesce(col("n1v"), lit(1L)) * coalesce(col("n1w"), lit(1L)) * 3)))
           .as("bits"))
+
+  /** Score-and-band one already-deduplicated (doc_id, source, text)
+    * frame against the frozen model — the micro-batch core, shared
+    * with the composed [[AdmissionStreams]] twin. */
+  private[streaming] def scoreFrame(one: DataFrame, m: KnModel): DataFrame =
+    bigramBits(one, m)
       .groupBy("doc_id", "source")
       .agg(count(lit(1)).as("n_bigrams"), sum("bits").cast("long").as("kn_bits"))
       .withColumn("avg_ppm", expr("kn_bits * 1000000 div n_bigrams"))
@@ -157,18 +103,12 @@ object QualityStreams {
           .otherwise("tail"))
       .select("doc_id", "source", "n_bigrams", "kn_bits", "avg_ppm", "band")
 
-  /** Keep one deterministic row per doc on same-batch re-fetch
-    * (longest text, then lexicographically greatest — the
-    * TokenizeStreams rule). Shared across the curation twins. */
+  /** The (doc_id, source, text) columns of a batch, one row per doc on
+    * a same-batch re-fetch ([[Ledger.oneRowPerDoc]]). Shared across the
+    * curation twins. */
   private[streaming] def oneRowPerDoc(batch: DataFrame): DataFrame =
-    batch
-      .select(col("doc_id").cast("long").as("doc_id"),
-        col("source"), col("text"))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy("doc_id")
-          .orderBy(length(col("text")).desc, col("text").desc)))
-      .filter(col("_rk") === 1)
-      .drop("_rk")
+    Ledger.oneRowPerDoc(batch.select(
+      col("doc_id").cast("long").as("doc_id"), col("source"), col("text")))
 
   /** One micro-batch score-and-band (exposed for replay tests). */
   def scoreBatch(batch: DataFrame, batchId: Long, m: KnModel,
@@ -177,11 +117,14 @@ object QualityStreams {
       .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
 
   /** Continuous wiring: a stream of (doc_id, source, text) documents
-    * scored micro-batch by micro-batch against the model trained on
-    * `corpusDir` (resolved once — the frozen-model contract). */
-  def scoreStream(docs: DataFrame, corpusDir: String, modelDir: String,
+    * scored micro-batch by micro-batch under the next generation of
+    * `store`, trained once on `corpusDir` at start (the frozen-model
+    * contract). */
+  def scoreStream(docs: DataFrame, corpusDir: String, store: String,
                   outDir: String): DataStreamWriter[Row] = {
-    val m = train(docs.sparkSession, corpusDir, modelDir)
+    val s = docs.sparkSession
+    KnLifecycle.retrain(graft.Tables.documents(s, corpusDir), store)
+    val m = KnLifecycle.asModel(s, store)
     docs.writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -192,9 +135,6 @@ object QualityStreams {
   /** The accumulated scored corpus: one row per document,
     * newest-batch-wins on re-ingest. */
   def scored(s: SparkSession, outDir: String): DataFrame =
-    s.read.parquet(outDir)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("ingest_batch").desc)))
-      .filter(col("rk") === 1)
-      .select("doc_id", "source", "n_bigrams", "kn_bits", "avg_ppm", "band")
+    Ledger.newest(s, outDir, "doc_id",
+      "doc_id", "source", "n_bigrams", "kn_bits", "avg_ppm", "band")
 }

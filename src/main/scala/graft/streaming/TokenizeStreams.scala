@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import graft.functions.TextFunctions.tokens
@@ -52,13 +51,8 @@ object TokenizeStreams {
     // fetch per doc, deterministically (longest text, then
     // lexicographically greatest) — across batches, newest-batch-wins
     // in [[encoded]] handles the re-fetch instead
-    val one = batch
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy("doc_id")
-          .orderBy(length(col("text")).desc, col("text").desc)))
-      .filter(col("_rk") === 1)
-    one
+    Ledger.oneRowPerDoc(
+      batch.select(col("doc_id").cast("long").as("doc_id"), col("text")))
       .select(col("doc_id"),
         posexplode(tokens(col("text"))).as(Seq("i", "w")))
       .filter(col("w") =!= "")
@@ -101,11 +95,7 @@ object TokenizeStreams {
   /** The accumulated encoded corpus: one row per document, a
     * re-ingested doc_id keeping its newest batch's encoding. */
   def encoded(s: SparkSession, encDir: String): DataFrame =
-    s.read.parquet(encDir)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("ingest_batch").desc)))
-      .filter(col("rk") === 1)
-      .select("doc_id", "n_tokens", "bpe_text")
+    Ledger.newest(s, encDir, "doc_id", "doc_id", "n_tokens", "bpe_text")
 
   // -------------------------------------------------------------------
   // Unigram twin (round-11): encode-on-arrival under the frozen
@@ -132,12 +122,8 @@ object TokenizeStreams {
   def uniEncodeBatch(batch: DataFrame, batchId: Long, vocab: DataFrame,
                      scores: DataFrame, encDir: String): Unit = {
     import graft.operators.UnigramQueries
-    val one = batch
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy("doc_id")
-          .orderBy(length(col("text")).desc, col("text").desc)))
-      .filter(col("_rk") === 1)
+    val one = Ledger.oneRowPerDoc(
+      batch.select(col("doc_id").cast("long").as("doc_id"), col("text")))
     val wchars = transform(sequence(lit(1), length(col("w"))),
       i => col("w").substr(i, lit(1)))
     val oovSeg =
@@ -180,9 +166,5 @@ object TokenizeStreams {
 
   /** The accumulated unigram-encoded corpus, newest-batch-wins. */
   def uniEncoded(s: SparkSession, encDir: String): DataFrame =
-    s.read.parquet(encDir)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("ingest_batch").desc)))
-      .filter(col("rk") === 1)
-      .select("doc_id", "n_tokens", "uni_text")
+    Ledger.newest(s, encDir, "doc_id", "doc_id", "n_tokens", "uni_text")
 }

@@ -193,15 +193,9 @@ object WinnowStreams {
     // (the next batch need not be a re-ingest for recovery to matter)
     graft.sources.StagingSwap.recover(
       s, pairTable, pairTable + "_purge_staging")
-    // same-batch re-fetch: one deterministic row per doc (longest text,
-    // then lexicographically greatest — the QualityStreams rule), so the
+    // same-batch re-fetch: one deterministic row per doc, so the
     // fingerprint set is always one a batch run could produce
-    val one = batch
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy("doc_id")
-          .orderBy(length(col("text")).desc, col("text").desc)))
-      .filter(col("_rk") === 1)
-      .drop("_rk")
+    val one = Ledger.oneRowPerDoc(batch)
     val delta = WinnowQueries.fingerprintHashes(one)
     val deltaIds = one.select("doc_id")
     // replay-safety AND supersede: the current batch's doc_ids leave the

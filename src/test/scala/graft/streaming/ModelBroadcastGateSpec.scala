@@ -1,20 +1,23 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.KnLifecycle
 import org.apache.spark.sql.functions._
 
-/** Pins the size-gated frozen-model join (r19 verdict item 3): the KN
-  * scoring joins broadcast the vocabulary-sized model frames while they
-  * fit under `spark.graft.model.broadcast.rows`, and DEMOTE to plain
-  * equi-keyed joins (planner/AQE's choice — never a forced broadcast
-  * that would hard-fail at the 8 GB cap) when the vocabulary outgrows
-  * the gate. Both regimes must produce identical rows — the gate moves
-  * bytes, never values. Auto-broadcast is disabled for the plan
-  * assertions so a surviving BroadcastHashJoin can only come from the
-  * gate's explicit hint. */
+/** Pins the frozen-model joins' broadcast decision: the KN scoring joins
+  * are plain left joins, so Spark's own size rule
+  * (`spark.sql.autoBroadcastJoinThreshold`) broadcasts the
+  * vocabulary-sized model frames while they are small and plans
+  * equi-keyed shuffled joins (never a forced broadcast that would
+  * hard-fail at the 8 GB cap) once the rule says no. The two regimes
+  * are Spark's default threshold, under which the sf0.001 model
+  * broadcasts, and `-1`, which turns size-based broadcasting off. Both
+  * must produce identical rows — the decision moves bytes, never
+  * values. */
 class ModelBroadcastGateSpec extends SparkSpec {
 
   private val base = "/tmp/graft_model_gate"
+  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
 
   private def cleanup(): Unit = {
     val p = new org.apache.hadoop.fs.Path(base)
@@ -25,61 +28,59 @@ class ModelBroadcastGateSpec extends SparkSpec {
     "BroadcastHashJoin".r
       .findAllIn(df.queryExecution.sparkPlan.toString).length
 
+  private def docs = graft.Tables.documents(spark, sf0001)
+    .select("doc_id", "source", "text")
+
   test("scoreFrame broadcasts the model under the row gate, demotes to " +
        "unhinted equi-joins above it, and the scored rows are identical") {
     cleanup()
-    val m = QualityStreams.train(spark, sf0001, s"$base/model")
-    val docs = graft.Tables.documents(spark, sf0001)
-      .select("doc_id", "source", "text")
+    val store = s"$base/model"
+    KnLifecycle.retrain(docs, store)
+    val m = KnLifecycle.asModel(spark, store)
     val conf = spark.conf
-    val prevAuto = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prev = conf.get(threshold)
     try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // small regime (default gate far above any test vocabulary):
-      // the three model joins + the cuts join are all hinted broadcasts
-      conf.unset("spark.graft.model.broadcast.rows")
+      // Spark's default threshold: the three model joins + the hinted
+      // per-source cuts join are all broadcasts at sf0.001
+      conf.unset(threshold)
       val small = QualityStreams.scoreFrame(docs, m)
       assert(bhjCount(small) >= 4,
-        s"expected >=4 hinted broadcasts under the gate, plan:\n" +
+        s"expected >=4 broadcasts under the default threshold, plan:\n" +
           small.queryExecution.sparkPlan.toString.take(2000))
-      // large regime (gate 0): the model joins lose the hint — with
-      // auto-broadcast off, only the bounded per-source cuts join (an
-      // explicit, |sources|-row broadcast) may remain
-      conf.set("spark.graft.model.broadcast.rows", "0")
+      // threshold -1: no model join broadcasts — only the bounded
+      // per-source cuts join (an explicit, |sources|-row hint) may remain
+      conf.set(threshold, "-1")
       val large = QualityStreams.scoreFrame(docs, m)
       assert(bhjCount(large) <= 1,
-        s"model joins still broadcast past the gate, plan:\n" +
+        s"model joins still broadcast with the threshold off, plan:\n" +
           large.queryExecution.sparkPlan.toString.take(2000))
-      // value identity: the gate may move bytes, never values
+      // value identity: the decision may move bytes, never values
       val cols = Seq("doc_id", "source", "n_bigrams", "kn_bits",
         "avg_ppm", "band").map(col)
       assert(small.select(cols: _*).exceptAll(large.select(cols: _*)).isEmpty &&
              large.select(cols: _*).exceptAll(small.select(cols: _*)).isEmpty,
-        "gated regimes disagree on scored rows")
+        "the two regimes disagree on scored rows")
     } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-      conf.unset("spark.graft.model.broadcast.rows")
+      conf.set(threshold, prev)
       cleanup()
     }
   }
 
   test("KnLifecycle.driftCheck gauges identically in both regimes") {
     cleanup()
-    import graft.operators.KnLifecycle
-    val docs = graft.Tables.documents(spark, sf0001)
-      .select("doc_id", "source", "text")
     val store = s"$base/knstore"
     KnLifecycle.retrain(docs, store)
     val conf = spark.conf
+    val prev = conf.get(threshold)
     try {
-      conf.unset("spark.graft.model.broadcast.rows")
+      conf.unset(threshold)
       val smallD = KnLifecycle.driftCheck(docs, store)
-      conf.set("spark.graft.model.broadcast.rows", "0")
+      conf.set(threshold, "-1")
       val largeD = KnLifecycle.driftCheck(docs, store)
       assert(smallD == largeD,
-        s"gated regimes disagree on the drift gauge: $smallD vs $largeD")
+        s"the two regimes disagree on the drift gauge: $smallD vs $largeD")
     } finally {
-      conf.unset("spark.graft.model.broadcast.rows")
+      conf.set(threshold, prev)
       cleanup()
     }
   }

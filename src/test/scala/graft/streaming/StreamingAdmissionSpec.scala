@@ -146,4 +146,30 @@ class StreamingAdmissionSpec extends SparkSpec {
     assert(kept2 == 0L && lvl2 == 0,
       s"boilerplate-only doc must attribute to excision: $kept2/$lvl2")
   }
+
+  test("a retrain that crashes before its commit pointer swings leaves " +
+    "the twin scoring under the previous generation") {
+    val root = s"$outD-crash-model"
+    val corpus = s"$outD-crash-corpus"
+    cleanup(root); cleanup(corpus)
+    val docs = graft.Tables.documents(spark, sf0001)
+      .select("doc_id", "source", "text")
+    val verdicts = (m: AdmissionStreams.AdmissionModel) =>
+      AdmissionStreams.admitFrame(docs, m).collect().toSet
+    val before = verdicts(AdmissionStreams.train(spark, sf0001, root))
+    // a corpus whose second data file is not parquet: the footer check
+    // reads the first file and passes, then the retrain's first job fails
+    graft.Tables.documents(spark, sf0001).limit(20)
+      .write.mode("overwrite").parquet(s"$corpus/documents.parquet")
+    val bad = new org.apache.hadoop.fs.Path(s"$corpus/documents.parquet/zz-corrupt.parquet")
+    val out = bad.getFileSystem(spark.sparkContext.hadoopConfiguration).create(bad, true)
+    out.write("not a parquet file".getBytes("UTF-8"))
+    out.close()
+    intercept[Exception] {
+      AdmissionStreams.train(spark, corpus, root)
+    }
+    assert(verdicts(AdmissionStreams.load(spark, root)) == before,
+      "a crashed retrain changed what the stores serve")
+    cleanup(root); cleanup(corpus)
+  }
 }

@@ -1,13 +1,16 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.BinaryLifecycle
+import graft.sources.GenerationedTable
 import org.apache.spark.sql.functions._
 
 /** Pack-on-arrival binary codes (streaming twin #20): out-of-order
   * replay reproduces the batch `idx_binary` artifact bit-for-bit; a
   * re-delivered batch never changes the code table; a NEW vector packs
-  * against the FROZEN thresholds (never re-thresholds); an
-  * uncommitted model is refused. */
+  * against the FROZEN thresholds (never re-thresholds); a store with no
+  * committed generation is refused and an interrupted retrain is never
+  * served. */
 class StreamingCodeSpec extends SparkSpec {
 
   private val modelD = "/tmp/graft_codestream_model"
@@ -26,7 +29,10 @@ class StreamingCodeSpec extends SparkSpec {
     * each test runs green in isolation). */
   private lazy val seeded: CodeStreams.ThresholdModel = {
     cleanup(modelD); cleanup(outD)
-    val m = CodeStreams.train(spark, sf0001, modelD)
+    BinaryLifecycle.retrain(graft.Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e")),
+      modelD)
+    val m = BinaryLifecycle.asModel(spark, modelD)
     val vecs = graft.Tables.embeddings(spark, sf0001)
       .select("vec_id", "embedding")
     // out-of-order slices
@@ -74,14 +80,36 @@ class StreamingCodeSpec extends SparkSpec {
 
   test("an uncommitted model is refused") {
     seeded
-    val p = new org.apache.hadoop.fs.Path(s"$modelD/_CODE_MODEL_OK")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, false)
-    val e = intercept[IllegalArgumentException] {
-      CodeStreams.load(spark, modelD)
+    // a store with no committed generation is refused by name
+    val empty = s"$modelD-empty"
+    cleanup(empty)
+    val e = intercept[IllegalStateException] {
+      BinaryLifecycle.asModel(spark, empty)
     }
-    assert(e.getMessage.contains("_CODE_MODEL_OK"))
-    // restore for other tests in this JVM
-    fs.create(p, true).close()
+    assert(e.getMessage.contains(s"$empty has no trained generation"))
+    // an interrupted retrain: stats and codes of gen 2 committed their
+    // own pointers, and gen-2 thresholds (each far above any component)
+    // landed on disk, but the thresholds pointer never swung
+    GenerationedTable.writeAs(BinaryLifecycle.stats(spark, modelD, Some(1)),
+      BinaryLifecycle.statsDir(modelD), 2)
+    GenerationedTable.writeAs(BinaryLifecycle.codes(spark, modelD, Some(1)),
+      BinaryLifecycle.codesDir(modelD), 2)
+    val orphan = s"${BinaryLifecycle.thresholdsDir(modelD)}/gen=2"
+    BinaryLifecycle.thresholds(spark, modelD, Some(1))
+      .withColumn("t", lit(1e12))
+      .write.mode("overwrite").parquet(orphan)
+    // the orphans stay: they are what a crash leaves, and the store
+    // keeps serving gen 1 to the other tests in this JVM
+    assert(BinaryLifecycle.committedGeneration(spark, modelD) == 1)
+    // the twin still packs under gen 1: a vector above every gen-1
+    // threshold sets every bit (gen-2 thresholds would clear them all)
+    import spark.implicits._
+    val late = Seq((990002L, Seq.fill(64)(1e9f))).toDF("vec_id", "embedding")
+    val outC = s"$outD-crash"
+    cleanup(outC)
+    CodeStreams.packBatch(late, 0L, BinaryLifecycle.asModel(spark, modelD), outC)
+    assert(codesMap(CodeStreams.codes(spark, outC))(990002L) ==
+      ((0xFFFFFFFFL, 0xFFFFFFFFL)), "an uncommitted generation was served")
+    cleanup(outC)
   }
 }

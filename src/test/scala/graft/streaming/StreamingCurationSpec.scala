@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{BoilerplateQueries, DsirQueries}
+import graft.operators.{BoilerplateLifecycle, BoilerplateQueries, DsirLifecycle, DsirQueries}
+import graft.sources.GenerationedTable
 import org.apache.spark.sql.functions._
 
 /** Stream/batch parity for curation-on-arrival (streaming twins of
@@ -9,7 +10,8 @@ import org.apache.spark.sql.functions._
   * the corpus reproduce the batch frames bit-exactly under the frozen
   * models; selection divergence is confined to cut-tied weights; OOV
   * buckets and unseen segments take their documented frozen-state
-  * behavior; replay is idempotent; uncommitted model dirs are refused. */
+  * behavior; replay is idempotent; stores with no committed generation
+  * are refused and an interrupted retrain is never served. */
 class StreamingCurationSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,9 +26,10 @@ class StreamingCurationSpec extends SparkSpec {
     "selection diverges only at cut ties; replay idempotent") {
     val (mD, oD) = (s"$base-dsir-model", s"$base-dsir-out")
     cleanup(mD); cleanup(oD)
-    val m = CurationStreams.trainDsir(spark, sf0001, mD)
     val docs = graft.Tables.documents(spark, sf0001)
       .select("doc_id", "source", "text")
+    DsirLifecycle.retrain(docs, mD)
+    val m = DsirLifecycle.asModel(spark, mD)
     CurationStreams.dsirScoreBatch(docs.filter(col("doc_id") >= 250), 0L, m, oD)
     CurationStreams.dsirScoreBatch(docs.filter(col("doc_id") < 250), 1L, m, oD)
     val got = CurationStreams.dsirScored(spark, oD)
@@ -74,7 +77,8 @@ class StreamingCurationSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source").asSfTable("documents")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$corpus/documents.parquet")
-    val m = CurationStreams.trainDsir(spark, corpus, mD)
+    DsirLifecycle.retrain(graft.Tables.documents(spark, corpus), mD)
+    val m = DsirLifecycle.asModel(spark, mD)
     val norm0 = (java.lang.Long.toBinaryString(m.nr + 1).length
       - java.lang.Long.toBinaryString(m.nt + 1).length).toLong
     assert(norm0 != 0, "test corpus must have a nonzero normalizer")
@@ -94,9 +98,10 @@ class StreamingCurationSpec extends SparkSpec {
     "segments pass through; replay idempotent; markers enforced") {
     val (mD, oD) = (s"$base-bp-model", s"$base-bp-out")
     cleanup(mD); cleanup(oD)
-    val bp = CurationStreams.trainBoilerplate(spark, sf0001, mD)
     val docs = graft.Tables.documents(spark, sf0001)
       .select("doc_id", "source", "text")
+    BoilerplateLifecycle.retrain(docs, mD)
+    val bp = BoilerplateLifecycle.list(spark, mD)
     CurationStreams.bpExciseBatch(docs.filter(col("doc_id") % 2 === 1), 0L, bp, oD)
     CurationStreams.bpExciseBatch(docs.filter(col("doc_id") % 2 === 0), 1L, bp, oD)
     val got = CurationStreams.bpExcised(spark, oD)
@@ -116,17 +121,42 @@ class StreamingCurationSpec extends SparkSpec {
     val again = CurationStreams.bpExcised(spark, oD)
       .filter(col("doc_id") =!= 9999L)
     assert(again.exceptAll(want).isEmpty && want.exceptAll(again).isEmpty)
-    // uncommitted model dirs are refused (crash-window contract)
-    val fs = new org.apache.hadoop.fs.Path(mD)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$mD/_BP_LIST_OK"), false)
-    intercept[IllegalArgumentException] {
-      CurationStreams.loadBoilerplate(spark, mD)
+    // stores with no committed generation are refused by name
+    val (bpNone, dsirNone) = (s"$base-bp-none", s"$base-dsir-none")
+    cleanup(bpNone); cleanup(dsirNone)
+    val eb = intercept[IllegalStateException] {
+      BoilerplateLifecycle.list(spark, bpNone)
     }
-    val dM = s"$base-dsir-model"
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dM/_DSIR_MODEL_OK"), false)
-    intercept[IllegalArgumentException] {
-      CurationStreams.loadDsir(spark, dM)
+    assert(eb.getMessage.contains(s"$bpNone has no trained generation"))
+    val ed = intercept[IllegalStateException] {
+      DsirLifecycle.asModel(spark, dsirNone)
     }
+    assert(ed.getMessage.contains(s"$dsirNone has no trained generation"))
+    // an interrupted retrain is never served (crash-window contract):
+    // gen-2 stats committed and an empty gen-2 list landed on disk, but
+    // the list pointer never swung — excision still runs under gen 1
+    GenerationedTable.writeAs(BoilerplateLifecycle.stats(spark, mD),
+      BoilerplateLifecycle.statsDir(mD), 2)
+    bp.limit(0).write.mode("overwrite")
+      .parquet(s"${BoilerplateLifecycle.listDir(mD)}/gen=2")
+    val oC = s"$base-bp-crash-out"
+    cleanup(oC)
+    CurationStreams.bpExciseBatch(docs, 0L, BoilerplateLifecycle.list(spark, mD), oC)
+    val crash = CurationStreams.bpExcised(spark, oC)
+    assert(crash.exceptAll(want).isEmpty && want.exceptAll(crash).isEmpty,
+      "an uncommitted boilerplate generation was served")
+    // DSIR: gen-2 buckets + stats landed, the totals pointer did not
+    val dM = s"$base-dsir-crash-model"
+    cleanup(dM)
+    DsirLifecycle.retrain(docs, dM)
+    val d1 = DsirLifecycle.asModel(spark, dM)
+    GenerationedTable.writeAs(d1.buckets.limit(1), DsirLifecycle.bucketsDir(dM), 2)
+    GenerationedTable.writeAs(DsirLifecycle.stats(spark, dM).limit(1),
+      DsirLifecycle.statsDir(dM), 2)
+    val d2 = DsirLifecycle.asModel(spark, dM)
+    assert(d2.buckets.count() == d1.buckets.count() &&
+      (d2.nt, d2.nr, d2.cut) == ((d1.nt, d1.nr, d1.cut)),
+      "an uncommitted DSIR generation was served")
+    cleanup(oC); cleanup(dM)
   }
 }

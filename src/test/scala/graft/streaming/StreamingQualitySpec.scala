@@ -1,14 +1,17 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.LangModelQueries
+import graft.operators.{KnLifecycle, LangModelQueries}
+import graft.sources.GenerationedTable
 import org.apache.spark.sql.functions._
 
 /** Stream/batch parity for perplexity-filter-on-arrival: scoring is
   * bit-identical to `q_lm_kn` for in-vocabulary documents; banding
   * equals the batch tertiles except at boundary-tied ppm values; OOV
   * transitions take the exact KN backoff (not an ad-hoc penalty);
-  * unseen sources band as `unbanded`; replay is idempotent. */
+  * unseen sources band as `unbanded`; replay is idempotent; a store
+  * with no committed generation is refused and an interrupted retrain
+  * is never served. */
 class StreamingQualitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -21,10 +24,11 @@ class StreamingQualitySpec extends SparkSpec {
 
   test("out-of-order streamed scoring equals the batch KN scores; " +
     "band divergence confined to boundary ties") {
-    cleanup()
-    val m = QualityStreams.train(spark, sf0001, s"$outD-model")
+    cleanup(); cleanup(s"$outD-model")
     val docs = graft.Tables.documents(spark, sf0001)
       .select("doc_id", "source", "text")
+    KnLifecycle.retrain(docs, s"$outD-model")
+    val m = KnLifecycle.asModel(spark, s"$outD-model")
     QualityStreams.scoreBatch(docs.filter(col("doc_id") >= 250), 0L, m, outD)
     QualityStreams.scoreBatch(docs.filter(col("doc_id") < 250), 1L, m, outD)
     val got = QualityStreams.scored(spark, outD)
@@ -66,21 +70,37 @@ class StreamingQualitySpec extends SparkSpec {
     "marker before touching components") {
     val mD = s"$outD-marker"
     cleanup(mD)
-    val m = QualityStreams.train(spark, sf0001, mD)
-    assert(m.t > 0)
-    QualityStreams.load(spark, mD) // committed → loads
-    // simulate a crash mid-retrain: marker retracted, components mixed
-    val fs = new org.apache.hadoop.fs.Path(mD)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$mD/_KN_MODEL_OK"), false)
-    val e = intercept[IllegalArgumentException] {
-      QualityStreams.load(spark, mD)
+    // a store with no committed generation is refused by name
+    val e = intercept[IllegalStateException] {
+      KnLifecycle.asModel(spark, mD)
     }
-    assert(e.getMessage.contains("_KN_MODEL_OK"),
-      "the refusal must name the commit marker")
-    // re-training re-commits
-    QualityStreams.train(spark, sf0001, mD)
-    QualityStreams.load(spark, mD)
+    assert(e.getMessage.contains(s"$mD has no trained generation"),
+      "the refusal must name the store")
+    val docs = graft.Tables.documents(spark, sf0001)
+      .select("doc_id", "source", "text")
+    KnLifecycle.retrain(docs, mD)
+    val m = KnLifecycle.asModel(spark, mD)
+    assert(m.t > 0)
+    val key = (df: org.apache.spark.sql.DataFrame) =>
+      df.select("doc_id", "kn_bits", "band").collect().toSet
+    val served = key(QualityStreams.scoreFrame(docs, m))
+    // simulate a crash mid-retrain: every gen-2 component landed (empty)
+    // and swung its own pointer, the type total (the commit point) not
+    Seq(KnLifecycle.statsDir(mD) -> KnLifecycle.stats(spark, mD),
+        KnLifecycle.bigramsDir(mD) -> m.bigrams,
+        KnLifecycle.firstsDir(mD) -> m.firsts,
+        KnLifecycle.contsDir(mD) -> m.conts,
+        KnLifecycle.cutsDir(mD) -> m.cuts).foreach { case (dir, df) =>
+      GenerationedTable.writeAs(df.limit(0), dir, 2)
+    }
+    assert(KnLifecycle.committedGeneration(spark, mD) == 1)
+    assert(key(QualityStreams.scoreFrame(docs, KnLifecycle.asModel(spark, mD)))
+      == served, "an uncommitted generation was served")
+    // re-training re-commits over the orphans
+    assert(KnLifecycle.retrain(docs, mD) == 2)
+    assert(key(QualityStreams.scoreFrame(docs, KnLifecycle.asModel(spark, mD)))
+      == served)
+    cleanup(mD)
   }
 
   test("OOV transitions take the exact KN backoff; unseen sources " +

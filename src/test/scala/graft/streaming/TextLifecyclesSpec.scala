@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.{SparkSpec, Tables}
-import graft.operators.{BoilerplateLifecycle, BoilerplateQueries, BpeLifecycle, DsirLifecycle, KnLifecycle}
+import graft.operators.{BoilerplateLifecycle, BoilerplateQueries, BpeLifecycle, DsirLifecycle, DsirQueries, KnLifecycle, LangModelQueries}
 import graft.sources.GenerationedTable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The text-tier drift → retrain lifecycles (round-18 verdict item 1):
@@ -14,7 +15,8 @@ import org.apache.spark.sql.functions._
   * Kneser–Ney score model ([[KnLifecycle]]). Each lifecycle is pinned
   * for: generation isolation, both drift triggers, the quiet-after-
   * retrain contract, crash-window single-commit-point reads, and the
-  * handoff to its streaming twin's frozen-model type. */
+  * handoff to its streaming twin's frozen-model type, checked against
+  * a model built independently from the batch operators. */
 class TextLifecyclesSpec extends SparkSpec {
 
   private val dstore = "/tmp/graft_dsir_retrain_store"
@@ -43,6 +45,39 @@ class TextLifecyclesSpec extends SparkSpec {
     docs.withColumn("text",
       array_join(reverse(split(trim(col("text")), "\\s+")), " "))
 
+  /** The DSIR model of the batch operators on sf0.001: the
+    * `DsirQueries.bucketModel` counts, their totals, and the q_dsir_sample
+    * cut (the weight of the 30th selected document). */
+  private def batchDsir: CurationStreams.DsirModel = {
+    val bt = DsirQueries.bucketModel(DsirQueries.bucketTokens(docs))
+    val Row(nt: Long, nr: Long) =
+      bt.agg(sum("ct").as("nt"), sum("cr").as("nr")).head()
+    val cut = DsirQueries.dsirSample.run(spark, sf0001)
+      .agg(min("weight_bits")).head().getLong(0)
+    CurationStreams.DsirModel(bt, nt, nr, cut)
+  }
+
+  /** The KN model of the batch operators on sf0.001: the
+    * `LangModelQueries.knTypeStats` frames and type total, and band
+    * cutpoints from the `knScoresFrom` tertiles. */
+  private def batchKn: QualityStreams.KnModel = {
+    val inst = docs.select(col("doc_id"), col("source"),
+      explode(graft.functions.TextFunctions.wordShingles(
+        graft.functions.TextFunctions.tokens(col("text")), 2)).as("bg"))
+    val st = LangModelQueries.knTypeStats(inst)
+    QualityStreams.KnModel(
+      bigrams = st.select("bg", "cvw"),
+      firsts = st.select("v", "cv", "n1v").distinct(),
+      conts = st.select("wd", "n1w").distinct(),
+      t = st.count(),
+      cuts = LangModelQueries.knScoresFrom(inst)
+        .withColumn("b3", ntile(3).over(
+          Window.partitionBy("source").orderBy("avg_ppm", "doc_id")))
+        .groupBy("source")
+        .agg(max(when(col("b3") === 1, col("avg_ppm"))).as("c1"),
+          max(when(col("b3") <= 2, col("avg_ppm"))).as("c2")))
+  }
+
   // ------------------------------------------------------------- DSIR
 
   test("dsir: retrain lands stats, buckets and totals under one " +
@@ -50,14 +85,13 @@ class TextLifecyclesSpec extends SparkSpec {
     cleanup(dstore)
     val g1 = DsirLifecycle.retrain(docs, dstore)
     assert(g1 == 1)
-    // bridge equals CurationStreams.trainDsir on the same corpus
-    val twin = CurationStreams.trainDsir(
-      spark, sf0001, s"$dstore/_twin_model")
+    // the bridge equals the batch operators' model on the same corpus
+    val ref = batchDsir
     val m = DsirLifecycle.asModel(spark, dstore)
-    assert(m.nt == twin.nt && m.nr == twin.nr && m.cut == twin.cut)
+    assert(m.nt == ref.nt && m.nr == ref.nr && m.cut == ref.cut)
     val key = (df: DataFrame) => df.select("b", "ct", "cr").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(key(m.buckets) == key(twin.buckets))
+    assert(key(m.buckets) == key(ref.buckets))
     // second retrain: pinned gen-1 bytes undisturbed, pointer at 2
     val base1 = DsirLifecycle.stats(spark, dstore, Some(1)).collect().toSet
     assert(DsirLifecycle.retrain(mangled, dstore) == 2)
@@ -118,8 +152,7 @@ class TextLifecyclesSpec extends SparkSpec {
        "generation model; driftCheck refuses an empty corpus") {
     cleanup(dstore)
     DsirLifecycle.retrain(docs, dstore)
-    val twin = CurationStreams.trainDsir(
-      spark, sf0001, s"$dstore/_twin_model")
+    val ref = batchDsir
     val key = (df: DataFrame) =>
       df.select("doc_id", "weight_bits", "selected").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
@@ -127,8 +160,8 @@ class TextLifecyclesSpec extends SparkSpec {
     assert(
       key(CurationStreams.dsirScoreFrame(arrivals,
         DsirLifecycle.asModel(spark, dstore))) ==
-      key(CurationStreams.dsirScoreFrame(arrivals, twin)),
-      "bridged generation model diverges from the twin's frozen model")
+      key(CurationStreams.dsirScoreFrame(arrivals, ref)),
+      "bridged generation model diverges from the batch model")
     val e = intercept[IllegalArgumentException] {
       DsirLifecycle.driftCheck(docs.filter(col("doc_id") < 0), dstore)
     }
@@ -143,16 +176,16 @@ class TextLifecyclesSpec extends SparkSpec {
     cleanup(kstore)
     val g1 = KnLifecycle.retrain(docs, kstore)
     assert(g1 == 1)
-    val twin = QualityStreams.train(spark, sf0001, s"$kstore/_twin_model")
+    val ref = batchKn
     val m = KnLifecycle.asModel(spark, kstore)
-    assert(m.t == twin.t)
+    assert(m.t == ref.t)
     val key = (df: DataFrame) =>
       df.select("doc_id", "kn_bits", "band").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val arrivals = docs.limit(50)
     assert(key(QualityStreams.scoreFrame(arrivals, m)) ==
-      key(QualityStreams.scoreFrame(arrivals, twin)),
-      "bridged generation model diverges from the twin's frozen model")
+      key(QualityStreams.scoreFrame(arrivals, ref)),
+      "bridged generation model diverges from the batch model")
     // pinned baseline undisturbed by a retrain
     val base1 = KnLifecycle.stats(spark, kstore, Some(1)).collect().toSet
     assert(KnLifecycle.retrain(mangled, kstore) == 2)
@@ -341,19 +374,19 @@ class TextLifecyclesSpec extends SparkSpec {
        "generation bridge") {
     cleanup(bstore)
     assert(BoilerplateLifecycle.retrain(docs, bstore) == 1)
-    val twin = CurationStreams.trainBoilerplate(
-      spark, sf0001, s"$bstore/_twin_model")
+    val ref = BoilerplateQueries.boilerplateOf(
+      BoilerplateQueries.segmentsOf(docs))
     val key = (df: DataFrame) =>
       df.select("bseg").collect().map(_.getString(0)).toSet
-    assert(key(BoilerplateLifecycle.list(spark, bstore)) == key(twin),
-      "lifecycle gen-1 list != streaming twin's trained list")
-    // excision under the bridged list equals excision under the twin's
+    assert(key(BoilerplateLifecycle.list(spark, bstore)) == key(ref),
+      "lifecycle gen-1 list != the batch boilerplate list")
+    // excision under the bridged list equals excision under the batch list
     val seg = BoilerplateQueries.segmentsOf(docs.limit(50))
     val exKey = (bp: DataFrame) =>
       BoilerplateQueries.exciseFrom(seg, bp)
         .select("doc_id", "segs_removed", "words_kept").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(exKey(BoilerplateLifecycle.list(spark, bstore)) == exKey(twin))
+    assert(exKey(BoilerplateLifecycle.list(spark, bstore)) == exKey(ref))
     // a retrain on drifted arrivals leaves gen 1 byte-identical
     val l1 = key(BoilerplateLifecycle.list(spark, bstore, Some(1)))
     assert(BoilerplateLifecycle.retrain(mangled, bstore) == 2)
