@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import graft.operators.{TopKeyword, Trend}
 import graft.semantic.{KeywordClassifier, RuleClassifier}
 import graft.sources.{Sink, Sources}
@@ -9,8 +9,8 @@ import graft.sources.{Sink, Sources}
 /** Pipeline B — customer search-behavior trends (reference
   * ETL_customer_behavior.py end to end, re-planned per SURVEY §3.2/§3.3):
   *
-  *   one multi-path parquet read per month (not 14 unioned scans), each
-  *   tagged with its month, the two unioned
+  *   one parquet read over both months' day dirs (not 28 unioned
+  *   scans), each file tagged with its month as a partition value
   *   → per-(user, month, keyword) counts
   *   → ONE `groupBy(user_id)` that picks each month's top keyword
   *     (deterministic tie-break) and keeps the users with a pick in both
@@ -29,10 +29,9 @@ object BehaviorPipeline {
   /** Build the behavior frame (lazy; no action). */
   def build(spark: SparkSession, juneDirs: Seq[String], julyDirs: Seq[String],
             classifier: KeywordClassifier = RuleClassifier): DataFrame = {
-    def month(dirs: Seq[String], tag: String) =
-      Sources.searchLogs(spark, dirs).select(col("user_id"), col("keyword"), lit(tag).as("month"))
-    val picks = TopKeyword.paired(month(juneDirs, "T6").unionByName(month(julyDirs, "T7")),
-      col("month"), Seq("T6" -> "most_search_T6", "T7" -> "most_search_T7"))
+    val logs = Sources.searchMonths(spark, Seq("T6" -> juneDirs, "T7" -> julyDirs))
+    val picks = TopKeyword.paired(logs, col("month"),
+      Seq("T6" -> "most_search_T6", "T7" -> "most_search_T7"))
     Trend(classifier.applyDistinct(spark, picks,
       Seq("most_search_T6" -> "category_T6", "most_search_T7" -> "category_T7")))
   }

@@ -5,7 +5,11 @@ import java.time.format.DateTimeFormatter
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import graft.schema.Schemas
 
 /** Multi-path sources for the Customer360 pipelines.
@@ -13,9 +17,14 @@ import graft.schema.Schemas
   * The reference simulates multi-day sources with a driver loop of
   * per-day reads union'd together (ETL_customer_interaction.py:89-92,
   * ETL_customer_behavior.py:170-181) — 30 scans, 30 jobs, no partition
-  * pruning. The engine reads all day paths in ONE DataFrameReader call:
-  * one job, one scan stage, and a `log_date` column derived from the
-  * file path so date predicates prune at the source.
+  * pruning. The engine reads all day paths as ONE relation over a
+  * [[DayFiles]] index: one scan stage, and a `log_date` partition value
+  * parsed once per file from its name on the driver (pipeline B's month
+  * is a second partition value). Spark appends partition values as
+  * per-file constants, and a date predicate becomes a `PartitionFilters`
+  * entry that skips whole files at the source (`DayFilesSpec`). A day
+  * path with no valid `yyyyMMdd` name fails the read's construction
+  * with `DAY_PATH_CONTRACT`.
   */
 object Sources {
 
@@ -30,30 +39,27 @@ object Sources {
   }
 
   /** Interaction logs (ES-export NDJSON): one read over all day files,
-    * envelope unwrapped, `log_date` stamped from the file name (the
-    * reference stamps it per-day in the loop — C8). Declared schema: no
+    * envelope unwrapped, `log_date` from the file name
+    * (.../yyyyMMdd.json; an 8-digit parent directory never wins — the
+    * reference stamps it per-day in the loop, C8). Declared schema: no
     * inference pass. */
   def interactionLogs(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read
-      .schema(Schemas.interactionLog)
-      .json(paths: _*)
-      .select(col("_source.*"), input_file_name().as("_file"))
-      // anchored to the FILE NAME (.../yyyyMMdd.json) — an 8-digit run
-      // in a parent directory must not win
-      .withColumn("log_date",
-        to_date(regexp_extract(col("_file"), "(\\d{8})[^/]*$", 1), "yyyyMMdd"))
-      .drop("_file")
+    DayFiles.read(spark, new JsonFileFormat, Schemas.interactionLog, DayFiles.InFileName, paths)
+      .select(col("_source.*"), col("log_date"))
 
   /** Search logs (day-partitioned parquet dirs): one read over all day
-    * dirs, `log_date` from the directory name. */
+    * dirs, `log_date` from the directory name
+    * (.../yyyyMMdd/part-*.parquet; digits in part-file names never
+    * win). */
   def searchLogs(spark: SparkSession, dayDirs: Seq[String]): DataFrame =
-    spark.read
-      .schema(Schemas.searchLog)
-      .parquet(dayDirs: _*)
-      // anchored to the DAY DIRECTORY (.../yyyyMMdd/part-*.parquet) —
-      // digit runs in part-file names or parent dirs must not win
-      .withColumn("log_date",
-        to_date(regexp_extract(input_file_name(), "(\\d{8})/[^/]*$", 1), "yyyyMMdd"))
+    DayFiles.read(spark, new ParquetFileFormat, Schemas.searchLog, DayFiles.InDirName, dayDirs)
+
+  /** Search logs of several months as one read: [[searchLogs]] plus a
+    * `month` column holding each group's tag. A day dir listed under
+    * two months is read once under each. */
+  def searchMonths(spark: SparkSession, months: Seq[(String, Seq[String])]): DataFrame =
+    DayFiles.readTagged(spark, new ParquetFileFormat, Schemas.searchLog, DayFiles.InDirName,
+      "month", months)
 
   /** Corrupt-tolerant NDJSON ingest: PERMISSIVE parse with broken lines
     * CAPTURED in `_corrupt` instead of silently nulled or failing the
@@ -77,18 +83,13 @@ object Sources {
   /** Day-file CSV exports (the warehouse-dump shape: one RFC-4180 CSV
     * per day with a header row): one declared-schema read over all day
     * files — no inference pass, which at scale would cost a full extra
-    * scan per job — with `log_date` stamped from the file name exactly
-    * like [[interactionLogs]]. Quoted fields (embedded commas) parse per
+    * scan per job — with `log_date` from the file name exactly like
+    * [[interactionLogs]]. Quoted fields (embedded commas) parse per
     * RFC 4180 on both the Spark and DuckDB sides. */
   def csvExports(spark: SparkSession, paths: Seq[String],
                  schemaDdl: String): DataFrame =
-    spark.read
-      .schema(schemaDdl)
-      .option("header", "true")
-      .csv(paths: _*)
-      .withColumn("log_date",
-        to_date(regexp_extract(input_file_name(), "(\\d{8})[^/]*$", 1),
-                "yyyyMMdd"))
+    DayFiles.read(spark, new CSVFileFormat, StructType.fromDDL(schemaDdl), DayFiles.InFileName,
+      paths, Map("header" -> "true"))
 
   /** Parallel JDBC source — the read side of the warehouse round trip
     * ([[JdbcSink]] is the write side). `partition = (column, lo, hi,

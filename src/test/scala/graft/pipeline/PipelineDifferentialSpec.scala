@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.util.Random
 
@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{ContentTypeMap, Engagement}
+import graft.operators.{ContentTypeMap, Engagement, TopKeyword, Trend}
 import graft.schema.Schemas
 import graft.semantic.{KeywordClassifier, MockLlmClassifier, RuleClassifier}
 import graft.sources.Sources
@@ -17,7 +17,9 @@ import graft.sources.Sources
 /** The two reference pipelines against their earlier compositions,
   * written out here: pipeline B as a per-month `row_number` pick, a
   * per-month classification and an inner USING join of the months;
-  * pipeline A as Spark's `pivot` plus a `countDistinct` profile. The
+  * pipeline A as Spark's `pivot` plus a `countDistinct` profile; both
+  * over the earlier sources, which derived `log_date` per row from
+  * `input_file_name` and read each month of B separately. The
   * rewritten plans must give the same rows. */
 class PipelineDifferentialSpec extends SparkSpec {
   import spark.implicits._
@@ -108,6 +110,86 @@ class PipelineDifferentialSpec extends SparkSpec {
       assertSameRows(got, oldBehavior(dirs, dirs, clf), s"$name $dirs")
       assert(got.filter(col("Trending_Type") =!= "Unchanged").count() == 0, s"$name $dirs")
     }
+  }
+
+  /** The earlier interaction source: `log_date` parsed per row from
+    * the row's file name. */
+  private def perRowInteractions(paths: Seq[String]): DataFrame =
+    spark.read.schema(Schemas.interactionLog).json(paths: _*)
+      .select(col("_source.*"), input_file_name().as("_file"))
+      .withColumn("log_date",
+        to_date(regexp_extract(col("_file"), "(\\d{8})[^/]*$", 1), "yyyyMMdd"))
+      .drop("_file")
+
+  /** The earlier search source: `log_date` parsed per row from the
+    * row's day directory. */
+  private def perRowSearch(dirs: Seq[String]): DataFrame =
+    spark.read.schema(Schemas.searchLog).parquet(dirs: _*)
+      .withColumn("log_date",
+        to_date(regexp_extract(input_file_name(), "(\\d{8})/[^/]*$", 1), "yyyyMMdd"))
+
+  /** Pipeline B over the earlier sources: one tagged read per month,
+    * the two unioned. */
+  private def perRowBehavior(june: Seq[String], july: Seq[String]): DataFrame = {
+    def month(dirs: Seq[String], tag: String) =
+      perRowSearch(dirs).select(col("user_id"), col("keyword"), lit(tag).as("month"))
+    val picks = TopKeyword.paired(month(june, "T6").unionByName(month(july, "T7")),
+      col("month"), Seq("T6" -> "most_search_T6", "T7" -> "most_search_T7"))
+    Trend(RuleClassifier.applyDistinct(spark, picks,
+      Seq("most_search_T6" -> "category_T6", "most_search_T7" -> "category_T7")))
+  }
+
+  /** Day inputs named to trip a path-derived date: interaction day
+    * files under an 8-digit parent directory, one of them all nulls and
+    * one mostly nulls; search day directories (below an 8-digit
+    * ancestor) whose part files carry 8-digit runs in their names. */
+  private lazy val (interactionDays, searchDays) = {
+    val root = Files.createTempDirectory("graft_day_diff").resolve("19991231")
+    val rng = new Random(23)
+    val apps = Seq("CHANNEL", "VOD", "KPLUS", "RELAX", "CHILD", "FIMS", "SPORT", "kplus", "")
+    def field(name: String, v: Option[String]) = v.fold(s""""$name":null""")(x => s""""$name":$x""")
+    def line(i: Int, nulls: Double) = {
+      def opt(v: => String) = if (rng.nextDouble() < nulls) None else Some(v)
+      s"""{"_index":"history","_type":"kplus","_id":"$i","_score":0,"_source":{""" +
+        Seq(field("Contract", opt(s""""C${rng.nextInt(12)}"""")),
+          field("Mac", opt(s""""m$i"""")),
+          field("TotalDuration", opt(rng.nextInt(5000).toString)),
+          field("AppName", opt(s""""${apps(rng.nextInt(apps.size))}""""))).mkString(",") + "}}"
+    }
+    val a = Seq(("20220401", 0.05), ("20220402", 1.0), ("20220403", 0.7), ("20220404", 0.0))
+      .map { case (d, nulls) =>
+        val p = root.resolve(s"$d.json")
+        Files.createDirectories(p.getParent)
+        Files.writeString(p, (0 until 120).map(line(_, nulls)).mkString("\n"))
+        p.toString
+      }
+    val vocab = Seq("VTV3 HD", "phim ma rạp", "love story", "bóng đá", "nhạc trẻ", null)
+    val b = Seq(("20220601", 0.05), ("20220602", 0.8), ("20220701", 0.0)).map { case (d, nulls) =>
+      val rows = Seq.fill(150)((
+        if (rng.nextDouble() < nulls) null else s"u${rng.nextInt(20)}",
+        if (rng.nextDouble() < nulls) null else vocab(rng.nextInt(vocab.size))))
+      val dir = day(root.resolve("search").toString, d, rows)
+      val parts = Files.list(Paths.get(dir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("part-"))
+      parts.zipWithIndex.foreach { case (p, i) =>
+        Files.move(p, p.resolveSibling(f"part-20221231-$i%05d.snappy.parquet")) }
+      dir
+    }
+    (a, b)
+  }
+
+  test("pipelines A and B over the day-file sources equal them over the per-row sources") {
+    val a = interactionDays
+    assertSameRows(InteractionPipeline.build(spark, a),
+      Engagement(ContentTypeMap(perRowInteractions(a))), "pipeline A")
+    assertSameRows(InteractionPipeline.build(spark, a :+ a.head),
+      Engagement(ContentTypeMap(perRowInteractions(a :+ a.head))), "pipeline A, a day twice")
+    val Seq(june1, june2, july1) = searchDays
+    for ((june, july) <- Seq((Seq(june1, june2), Seq(july1)),
+                             (Seq(june1, june2), Seq(june2, july1)),
+                             (Seq(june1), Seq(june1))))
+      assertSameRows(BehaviorPipeline.build(spark, june, july), perRowBehavior(june, july),
+        s"pipeline B, June $june, July $july")
   }
 
   private val types = ContentTypeMap.ContentTypes

@@ -6,16 +6,16 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.{InputFileName, ParseToDate, RegExpExtract}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.JobCount
 import graft.schema.Schemas
 import graft.semantic.{BatchClassifier, MockLlmClassifier}
 
@@ -34,39 +34,9 @@ object RecordingClassifier {
 
 /** The two reference pipelines run as minimal plans: the jobs a write
   * runs, the exchanges and operators of its final plan, and pipeline B
-  * sending each surviving keyword to the classifier once. Jobs are
-  * counted with a `SparkListener`; a marker job submitted after the
-  * measured block drains the (asynchronous) listener bus. */
-class PipelineShapeSpec extends SparkSpec {
+  * sending each surviving keyword to the classifier once. */
+class PipelineShapeSpec extends JobCount {
   import spark.implicits._
-
-  private val Probe = "graft.spec.pipeline"
-
-  private object Jobs extends SparkListener {
-    val seen = new ConcurrentLinkedQueue[String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(Probe))).getOrElse(""))
-  }
-  private lazy val listening = { spark.sparkContext.addSparkListener(Jobs); true }
-  private val probes = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** The number of Spark jobs the calling thread submits while `body`
-    * runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    assert(listening)
-    val sc = spark.sparkContext
-    val tag = s"probe_${probes.incrementAndGet()}"
-    sc.setLocalProperty(Probe, tag)
-    try body finally sc.setLocalProperty(Probe, null)
-    sc.setLocalProperty(Probe, s"$tag/end")
-    try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Probe, null)
-    val deadline = System.nanoTime() + 30e9.toLong
-    while (!Jobs.seen.asScala.exists(_ == s"$tag/end")) {
-      assert(System.nanoTime() < deadline, "listener bus did not drain")
-      Thread.sleep(10)
-    }
-    Jobs.seen.asScala.count(_ == tag)
-  }
 
   private object Adaptive extends AdaptiveSparkPlanHelper
 
@@ -120,7 +90,7 @@ class PipelineShapeSpec extends SparkSpec {
 
   test("a pipeline A write runs at most 3 jobs over a 2-exchange plan") {
     val df = InteractionPipeline.build(spark, interactionDays)
-    val jobs = jobsDuring(df.write.mode("overwrite").parquet(s"$root/out/interaction"))
+    val (_, jobs) = jobsDuring(df.write.mode("overwrite").parquet(s"$root/out/interaction"))
     assert(jobs <= 3, s"pipeline A ran $jobs jobs")
     val exchanges = Adaptive.collect(finalPlan(df)) { case e: ShuffleExchangeExec => e }
     assert(exchanges.size == 2, s"pipeline A plans ${exchanges.size} exchanges")
@@ -128,7 +98,7 @@ class PipelineShapeSpec extends SparkSpec {
 
   test("a pipeline B write runs at most 5 jobs, with no window and no join of the months") {
     val df = BehaviorPipeline.build(spark, june, july, new RecordingClassifier)
-    val jobs = jobsDuring(df.write.mode("overwrite").parquet(s"$root/out/behavior"))
+    val (_, jobs) = jobsDuring(df.write.mode("overwrite").parquet(s"$root/out/behavior"))
     assert(jobs <= 5, s"pipeline B ran $jobs jobs")
     val plan = finalPlan(df)
     assert(Adaptive.collect(plan) { case w: WindowExec => w }.isEmpty, plan)
@@ -136,6 +106,26 @@ class PipelineShapeSpec extends SparkSpec {
     val joinKeys = Adaptive.collect(plan) { case j: BaseJoinExec =>
       (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name)) }
     assert(joinKeys.nonEmpty && joinKeys.forall(!_.contains("user_id")), joinKeys)
+  }
+
+  /** The per-row date derivations in the analyzed and final plans of
+    * `df` (ParseToDate is replaced before physical planning, so only
+    * the analyzed plan can show it). */
+  private def dateDerivations(df: DataFrame): Seq[String] = {
+    val logical = df.queryExecution.analyzed.collect { case p => p.expressions }.flatten
+    val physical = Adaptive.collect(finalPlan(df)) { case p => p.expressions }.flatten
+    (logical ++ physical).flatMap(_.collect {
+      case e @ (_: InputFileName | _: RegExpExtract | _: ParseToDate) => e.nodeName })
+  }
+
+  test("neither pipeline derives a date per row; B reads both months as one relation") {
+    val a = InteractionPipeline.build(spark, interactionDays)
+    assert(dateDerivations(a).isEmpty, dateDerivations(a))
+    val b = BehaviorPipeline.build(spark, june, july, new RecordingClassifier)
+    assert(dateDerivations(b).isEmpty, dateDerivations(b))
+    val relations = Adaptive.collect(finalPlan(b)) { case s: FileSourceScanExec => s.relation }
+    assert(relations.map(_.location).distinct.size == 1, relations)
+    assert(relations.head.partitionSchema.fieldNames.toSet == Set("month", "log_date"))
   }
 
   test("pipeline B classifies each top keyword of a both-month user once, " +
