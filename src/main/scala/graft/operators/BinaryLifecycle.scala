@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.GenerationedTable
+import graft.sources.GenerationStore
 
 /** Binary-threshold drift → retrain-and-repack lifecycle (round-17
   * verdict item 5: [[graft.streaming.CodeStreams]]' frozen-model
@@ -20,23 +20,15 @@ import graft.sources.GenerationedTable
   * nothing — Hamming shortlists silently lose recall while staying
   * bit-deterministic, which is why only a gauge can catch it.
   *
-  * Store layout (all [[GenerationedTable]]s committed under ONE
-  * generation number):
+  * Store layout (a [[GenerationStore]], see its commit rule):
   *  - `<store>/thresholds` — per-dim (pos, t), the model; the
-  *    generation-number AUTHORITY (readers resolve its `_LATEST`);
+  *    AUTHORITY;
   *  - `<store>/stats`      — training-time per-dim balance, the drift
   *    baseline (recomputing it later is impossible: the corpus behind
   *    the path has drifted, that being the point);
   *  - `<store>/codes`      — the packed (vec_id, w0, w1) table the
   *    Hamming serving tier scans, repacked WITH each retrain so the
   *    code/threshold pair can never be mixed-generation.
-  *
-  * Commit order: stats → codes → thresholds. A crash before the last
-  * write leaves orphan stats/codes generations, which are harmless
-  * (read only via the thresholds pointer, never by their own) and are
-  * overwritten by the next retrain, which re-derives the same number
-  * from the unchanged thresholds dir — the [[IvfLifecycle.retrain]]
-  * lockstep discipline.
   *
   * Pinned readers are undisturbed: a reader on generation g keeps
   * reading g's bytes; the streaming packer
@@ -52,9 +44,8 @@ import graft.sources.GenerationedTable
   */
 object BinaryLifecycle {
 
-  def thresholdsDir(store: String): String = s"$store/thresholds"
-  def statsDir(store: String): String = s"$store/stats"
-  def codesDir(store: String): String = s"$store/codes"
+  def at(store: String): GenerationStore =
+    GenerationStore(store, authority = "thresholds", siblings = Seq("stats", "codes"))
 
   /** Per-dim balance of an exploded (vec_id, pos, x) frame against a
     * per-dim (pos, t) threshold frame: (pos, n_vectors, above_n,
@@ -78,25 +69,15 @@ object BinaryLifecycle {
     * number. Returns that number. `vectors` is (vec_id, e:
     * array<double>). */
   def retrain(vectors: DataFrame, store: String): Int = {
-    val s = vectors.sparkSession
     val perDim = SimilarityQueries.binaryPerDimThresholds(vectors)
-    val next = GenerationedTable.generations(s, thresholdsDir(store))
-      .lastOption.getOrElse(0) + 1
-    GenerationedTable.writeAs(
-      balanceOf(explodeVecs(vectors), perDim), statsDir(store), next)
-    GenerationedTable.writeAs(
-      SimilarityQueries.packWords(vectors,
-        SimilarityQueries.thresholdRowOf(perDim)),
-      codesDir(store), next)
-    GenerationedTable.writeAs(perDim, thresholdsDir(store), next)
-    next
+    at(store).commit(vectors.sparkSession) { _ => {
+      case "stats" => balanceOf(explodeVecs(vectors), perDim)
+      case "codes" =>
+        SimilarityQueries.packWords(vectors,
+          SimilarityQueries.thresholdRowOf(perDim))
+      case "thresholds" => perDim
+    }}
   }
-
-  /** The pointed (or pinned) generation's trained per-dim thresholds. */
-  def thresholds(s: SparkSession, store: String,
-                 gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, thresholdsDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
 
   /** The pointed (or pinned) generation bridged to the streaming twin's
     * frozen-model type — how [[graft.streaming.CodeStreams]] packs
@@ -104,35 +85,7 @@ object BinaryLifecycle {
   def asModel(s: SparkSession, store: String,
               gen: Option[Int] = None): graft.streaming.CodeStreams.ThresholdModel =
     graft.streaming.CodeStreams.ThresholdModel(
-      SimilarityQueries.thresholdRowOf(thresholds(s, store, gen)))
-
-  /** The pointed (or pinned) generation's packed code table — what the
-    * Hamming serving tier scans. An UNPINNED read resolves the
-    * THRESHOLDS pointer, not the codes dir's own: retrain swings the
-    * per-dir pointers in stats → codes → thresholds order, so between
-    * the codes and thresholds writes the codes pointer is already at
-    * gen N while the committed model is still gen N−1 — resolving the
-    * codes pointer there would pair new codes with old thresholds, the
-    * exact mixed-generation state the design forbids. The thresholds
-    * pointer is the single commit point; orphan codes generations are
-    * unreachable until it swings. */
-  def codes(s: SparkSession, store: String,
-            gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, codesDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
-
-  /** The training-time per-dim balance baseline of the pointed (or
-    * pinned) generation — same single-commit-point rule as [[codes]]. */
-  def stats(s: SparkSession, store: String,
-            gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, statsDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
-
-  /** The store's committed generation = the thresholds pointer, the
-    * ONLY pointer unpinned readers may resolve (it swings last). */
-  def committedGeneration(s: SparkSession, store: String): Int =
-    GenerationedTable.latest(s, thresholdsDir(store)).getOrElse(
-      throw new IllegalStateException(s"$store has no trained generation"))
+      SimilarityQueries.thresholdRowOf(at(store).read(s, "thresholds", gen)))
 
   /** The store's id-bearing generationed relations, for the
     * right-to-be-forgotten audit ([[graft.sources.DeleteAudit
@@ -144,7 +97,7 @@ object BinaryLifecycle {
     * referencing none, the model-vs-record distinction the audit
     * draws everywhere). */
   def auditRelations(store: String): Seq[(String, String, Seq[String])] =
-    Seq(("binary_codes", codesDir(store), Seq("vec_id")))
+    Seq(("binary_codes", at(store).dir("codes"), Seq("vec_id")))
 
   /** The drift gauge's verdict, with the measured per-dim extremes
     * exposed so an operator (or a test) can see WHY. */
@@ -164,11 +117,12 @@ object BinaryLifecycle {
                  shiftPpm: Long = 150000L,
                  darkBandPpm: Long = 50000L): CodeDriftDecision = {
     val s = vectors.sparkSession
-    val gen = committedGeneration(s, store)
-    val frozen = thresholds(s, store, Some(gen))
+    val st = at(store)
+    val gen = st.committed(s)
+    val frozen = st.read(s, "thresholds", Some(gen))
     val cur = balanceOf(explodeVecs(vectors), frozen)
       .select(col("pos"), col("balance_ppm").as("cur_ppm"))
-    val base = GenerationedTable.read(s, statsDir(store), Some(gen))
+    val base = st.read(s, "stats", Some(gen))
       .select(col("pos"), col("balance_ppm").as("base_ppm"))
     val darkLo = darkBandPpm
     val darkHi = 1000000L - darkBandPpm

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.GenerationedTable
+import graft.sources.GenerationStore
 
 /** IVF drift → retrain lifecycle (round-7 verdict item 4: centroids were
   * trained once and frozen forever — `q_embedding_outliers` gauged drift
@@ -16,17 +16,17 @@ import graft.sources.GenerationedTable
   * making those cells' candidate joins quadratic-ish while others
   * starve). This module closes the loop:
   *
-  *  - centroid sets are a [[GenerationedTable]] under
-  *    `<store>/centroids` — a retrain lands a COMPLETE new generation
-  *    beside the old one and swings the `_LATEST` pointer; a reader
-  *    pinned to generation g keeps reading generation g's bytes
-  *    untouched (snapshot isolation, no coordination);
+  *  - the store is a [[GenerationStore]] (see its commit rule):
+  *    centroid sets under `<store>/centroids`, the AUTHORITY — a
+  *    retrain lands a COMPLETE new generation beside the old one and
+  *    swings its pointer; a reader pinned to generation g keeps reading
+  *    generation g's bytes untouched (snapshot isolation, no
+  *    coordination);
   *  - every generation persists its TRAINING-TIME telemetry
-  *    ([[DriftStats]]: mean assigned distance, cell balance) as a
-  *    sibling [[GenerationedTable]] under `<store>/stats`, written with
-  *    the same generation number — the baseline the drift gauge
-  *    compares against (recomputing it later is impossible: the corpus
-  *    behind the path has drifted, that being the point);
+  *    ([[DriftStats]]: mean assigned distance, cell balance) as the
+  *    sibling `<store>/stats` — the baseline the drift gauge compares
+  *    against (recomputing it later is impossible: the corpus behind
+  *    the path has drifted, that being the point);
   *  - [[driftCheck]] reruns the same telemetry over the CURRENT corpus
   *    against the pointed generation and returns a [[DriftDecision]]
   *    with the measured ratios — the `q_embedding_outliers` /
@@ -55,8 +55,8 @@ import graft.sources.GenerationedTable
   */
 object IvfLifecycle {
 
-  def centroidsDir(store: String): String = s"$store/centroids"
-  def statsDir(store: String): String = s"$store/stats"
+  def at(store: String): GenerationStore =
+    GenerationStore(store, authority = "centroids", siblings = Seq("stats"))
 
   /** Corpus-level quantization telemetry against one centroid set.
     * `meanDist` is the mean assigned squared-L2 distance (integer
@@ -96,7 +96,7 @@ object IvfLifecycle {
 
   /** Training-time baseline of generation `gen`. */
   def baselineStats(s: SparkSession, store: String, gen: Int): DriftStats = {
-    val r = GenerationedTable.read(s, statsDir(store), Some(gen))
+    val r = at(store).read(s, "stats", Some(gen))
       .select("n_vectors", "mean_dist", "max_cell_share", "live_cells")
       .collect().head
     DriftStats(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getLong(3))
@@ -115,24 +115,10 @@ object IvfLifecycle {
   def retrain(vectors: DataFrame, k: Int, iters: Int, store: String): Int = {
     val s = vectors.sparkSession
     val t = IvfQuantizer.trainVectors(vectors, k, iters)
-    try {
-      val st = driftStats(vectors, t.centroids)
-      // One generation number for both tables, chosen from the CENTROID
-      // dir (the pointer readers resolve), stats committed FIRST: a
-      // crash between the two writes leaves only an orphan stats
-      // generation, which is harmless (stats are read by explicit gen
-      // via the centroid pointer, never by their own) and gets
-      // overwritten by the next retrain, which re-derives the same
-      // number from the unchanged centroid dir. The old order (centroids
-      // first) wedged the store: a centroid gen with no stats twin made
-      // baselineStats throw and every later retrain fail its
-      // lockstep check.
-      val next = GenerationedTable.generations(s, centroidsDir(store))
-        .lastOption.getOrElse(0) + 1
-      GenerationedTable.writeAs(statsToDf(s, st), statsDir(store), next)
-      GenerationedTable.writeAs(t.centroids, centroidsDir(store), next)
-      next
-    } finally t.quantized.unpersist()
+    try at(store).commit(s) { _ => {
+      case "stats" => statsToDf(s, driftStats(vectors, t.centroids))
+      case "centroids" => t.centroids
+    }} finally t.quantized.unpersist()
   }
 
   /** Measure the current corpus against the pointed generation. Default
@@ -143,9 +129,8 @@ object IvfLifecycle {
                  distRatio: Double = 1.5,
                  cellShare: Double = 0.5): DriftDecision = {
     val s = vectors.sparkSession
-    val gen = GenerationedTable.latest(s, centroidsDir(store)).getOrElse(
-      throw new IllegalStateException(s"$store has no trained generation"))
-    val cent = GenerationedTable.read(s, centroidsDir(store), Some(gen))
+    val gen = at(store).committed(s)
+    val cent = at(store).read(s, "centroids", Some(gen))
     val cur = driftStats(vectors, cent)
     val base = baselineStats(s, store, gen)
     val reasons = Seq.newBuilder[String]

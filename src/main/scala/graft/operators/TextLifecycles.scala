@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.GenerationedTable
+import graft.sources.GenerationStore
 import graft.plans.Materialize.MaterializeOps
 
 /** DSIR drift → retrain lifecycle (round-18 verdict item 1: the
@@ -25,21 +25,13 @@ import graft.plans.Materialize.MaterializeOps
   * "looks like the target" — deterministic, never an error, which is
   * why only a gauge can catch it.
   *
-  * Store layout (all [[GenerationedTable]]s committed under ONE
-  * generation number):
-  *  - `<store>/totals`  — 1-row (nt, nr, cut), the generation-number
-  *    AUTHORITY (readers resolve its `_LATEST`; it is written LAST);
+  * Store layout (a [[GenerationStore]], see its commit rule):
+  *  - `<store>/totals`  — 1-row (nt, nr, cut), the AUTHORITY;
   *  - `<store>/buckets` — the 256-row (b, ct, cr) model;
   *  - `<store>/stats`   — training-time per-bucket token share
   *    (b, n_tokens, share_ppm) over the WHOLE training mix, the drift
   *    baseline (recomputing it later is impossible: the corpus behind
   *    the path has drifted, that being the point).
-  *
-  * Commit order: stats → buckets → totals. A crash before the last
-  * write leaves orphan stats/buckets generations that are unreachable
-  * (unpinned readers resolve ONLY the totals pointer — the
-  * [[BinaryLifecycle.codes]] single-commit-point rule) and are
-  * overwritten by the next retrain.
   *
   * The store is the DSIR model's only trainer and on-disk format:
   * [[graft.streaming.CurationStreams.dsirStream]] and
@@ -53,9 +45,8 @@ import graft.plans.Materialize.MaterializeOps
   */
 object DsirLifecycle {
 
-  def totalsDir(store: String): String = s"$store/totals"
-  def bucketsDir(store: String): String = s"$store/buckets"
-  def statsDir(store: String): String = s"$store/stats"
+  def at(store: String): GenerationStore =
+    GenerationStore(store, authority = "totals", siblings = Seq("stats", "buckets"))
 
   /** Per-bucket token share of a (doc_id, source, text) frame in exact
     * ppm: (b, n_tokens, share_ppm) — the gauge's measurement frame and
@@ -81,61 +72,37 @@ object DsirLifecycle {
     val s = docs.sparkSession
     val bk = DsirQueries.bucketTokens(docs)
     val bt = DsirQueries.bucketModel(bk).cache()
-    try {
-      val next = GenerationedTable.generations(s, totalsDir(store))
-        .lastOption.getOrElse(0) + 1
+    try at(store).commit(s) { _ => {
       // the training-time share baseline derives from the cached model
       // (every token is target or raw, so n_tokens = ct + cr and
       // n_all = nt + nr) — identical rows to bucketShares(docs) without
       // re-tokenizing the corpus a second and third time
-      GenerationedTable.writeAs(
+      case "stats" =>
         bt.crossJoin(broadcast(
             bt.agg(sum(col("ct") + col("cr")).as("n_all"))))
           .select(col("b"), (col("ct") + col("cr")).as("n_tokens"),
-            expr("1000000 * (ct + cr) div n_all").as("share_ppm")),
-        statsDir(store), next)
-      GenerationedTable.writeAs(bt, bucketsDir(store), next)
-      val Row(nt: Long, nr: Long) =
-        bt.agg(sum("ct").as("nt"), sum("cr").as("nr")).head()
-      // the frozen selection boundary: the training pool's 30th-highest
-      // doc weight (the q_dsir_sample admission line); nt/nr are already
-      // on the driver — attach them as literals instead of re-running
-      // the totals agg inside the score join
-      val cut = bk.filter(!DsirQueries.isTarget)
-        .join(broadcast(bt), Seq("b"))
-        .withColumn("nt", lit(nt)).withColumn("nr", lit(nr))
-        .withColumn("s", DsirQueries.scoreCol)
-        .groupBy("doc_id")
-        .agg(sum(col("s").cast("long")).as("weight_bits"))
-        .orderBy(col("weight_bits").desc, col("doc_id"))
-        .limit(30)
-        .agg(min("weight_bits")).head().getLong(0)
-      GenerationedTable.writeAs(
+            expr("1000000 * (ct + cr) div n_all").as("share_ppm"))
+      case "buckets" => bt
+      case "totals" =>
+        val Row(nt: Long, nr: Long) =
+          bt.agg(sum("ct").as("nt"), sum("cr").as("nr")).head()
+        // the frozen selection boundary: the training pool's 30th-highest
+        // doc weight (the q_dsir_sample admission line); nt/nr are already
+        // on the driver — attach them as literals instead of re-running
+        // the totals agg inside the score join
+        val cut = bk.filter(!DsirQueries.isTarget)
+          .join(broadcast(bt), Seq("b"))
+          .withColumn("nt", lit(nt)).withColumn("nr", lit(nr))
+          .withColumn("s", DsirQueries.scoreCol)
+          .groupBy("doc_id")
+          .agg(sum(col("s").cast("long")).as("weight_bits"))
+          .orderBy(col("weight_bits").desc, col("doc_id"))
+          .limit(30)
+          .agg(min("weight_bits")).head().getLong(0)
         s.range(1).select(lit(nt).as("nt"), lit(nr).as("nr"),
-          lit(cut).as("cut")),
-        totalsDir(store), next)
-      next
-    } finally bt.unpersist()
+          lit(cut).as("cut"))
+    }} finally bt.unpersist()
   }
-
-  /** The store's committed generation = the totals pointer, the ONLY
-    * pointer unpinned readers may resolve (it swings last). */
-  def committedGeneration(s: SparkSession, store: String): Int =
-    GenerationedTable.latest(s, totalsDir(store)).getOrElse(
-      throw new IllegalStateException(s"$store has no trained generation"))
-
-  /** The pointed (or pinned) generation's 256-row bucket model. */
-  def buckets(s: SparkSession, store: String,
-              gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, bucketsDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
-
-  /** The training-time bucket-share baseline — same single-commit-point
-    * rule as [[buckets]]. */
-  def stats(s: SparkSession, store: String,
-            gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, statsDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
 
   /** The pointed (or pinned) generation bridged to the streaming twin's
     * frozen-model type — how [[graft.streaming.CurationStreams]] scores
@@ -143,10 +110,10 @@ object DsirLifecycle {
     * generation boundary). */
   def asModel(s: SparkSession, store: String,
               gen: Option[Int] = None): graft.streaming.CurationStreams.DsirModel = {
-    val g = gen.getOrElse(committedGeneration(s, store))
-    val t = GenerationedTable.read(s, totalsDir(store), Some(g)).head()
-    graft.streaming.CurationStreams.DsirModel(
-      buckets(s, store, Some(g)),
+    val st = at(store)
+    val g = gen.getOrElse(st.committed(s))
+    val t = st.read(s, "totals", Some(g)).head()
+    graft.streaming.CurationStreams.DsirModel(st.read(s, "buckets", Some(g)),
       t.getAs[Long]("nt"), t.getAs[Long]("nr"), t.getAs[Long]("cut"))
   }
 
@@ -172,11 +139,12 @@ object DsirLifecycle {
                  shiftPpm: Long = 2000L,
                  novelPpm: Long = 10000L): DsirDriftDecision = {
     val s = docs.sparkSession
-    val gen = committedGeneration(s, store)
+    val st = at(store)
+    val gen = st.committed(s)
     val cur = bucketShares(docs)
-    val base = stats(s, store, Some(gen))
+    val base = st.read(s, "stats", Some(gen))
       .select(col("b"), col("share_ppm").as("base_ppm"))
-    val model = buckets(s, store, Some(gen))
+    val model = st.read(s, "buckets", Some(gen))
       .select(col("b"), (col("ct") + col("cr")).as("trained_n"))
     // ≤256 aggregate rows end at 1 — telemetry, not data
     val r = cur
@@ -237,15 +205,11 @@ object DsirLifecycle {
   *    in-vocabulary transitions, shifting every band boundary's
   *    meaning while the frozen cutpoints stand still).
   *
-  * Store layout (all [[GenerationedTable]]s committed under ONE
-  * generation number): `<store>/total` is the 1-row type total and the
-  * generation-number AUTHORITY (written LAST; unpinned readers resolve
-  * only its pointer — the [[BinaryLifecycle.codes]] single-commit-point
-  * rule); `<store>/stats` (training-time 1-row baseline: n_bigrams,
-  * kn_bits, mean_ppm), `<store>/bigrams`, `<store>/firsts`,
-  * `<store>/conts`, `<store>/cuts` are its siblings, committed first.
-  * Orphans from a crash mid-retrain are unreachable and overwritten by
-  * the next retrain.
+  * Store layout (a [[GenerationStore]], see its commit rule):
+  * `<store>/total`, the 1-row type total, is the AUTHORITY;
+  * `<store>/stats` (training-time 1-row baseline: n_bigrams, kn_bits,
+  * mean_ppm), `<store>/bigrams`, `<store>/firsts`, `<store>/conts` and
+  * `<store>/cuts` are its siblings.
   *
   * The store is the KN model's only trainer and on-disk format:
   * [[graft.streaming.QualityStreams.scoreStream]] and
@@ -259,12 +223,9 @@ object DsirLifecycle {
   */
 object KnLifecycle {
 
-  def totalDir(store: String): String = s"$store/total"
-  def statsDir(store: String): String = s"$store/stats"
-  def bigramsDir(store: String): String = s"$store/bigrams"
-  def firstsDir(store: String): String = s"$store/firsts"
-  def contsDir(store: String): String = s"$store/conts"
-  def cutsDir(store: String): String = s"$store/cuts"
+  def at(store: String): GenerationStore =
+    GenerationStore(store, authority = "total",
+      siblings = Seq("stats", "bigrams", "firsts", "conts", "cuts"))
 
   /** Train the next generation from the current corpus: the full KN
     * model ([[graft.streaming.QualityStreams.KnModel]] components), the
@@ -275,63 +236,45 @@ object KnLifecycle {
     val inst = graft.streaming.QualityStreams.instOf(docs)
     val st = LangModelQueries.knTypeStats(inst).cache()
     try {
-      val next = GenerationedTable.generations(s, totalDir(store))
-        .lastOption.getOrElse(0) + 1
       // score through the CACHED type-stats frame (r19 ADVICE: the old
       // knScoresFrom(inst) rebuilt knTypeStats from scratch internally),
       // and materialize the doc-grain scores once — they are consumed
       // twice below (stats baseline agg + band cutpoints)
       val scores = LangModelQueries.knScoresFromStats(inst, st)
         .materializeOnce
-      GenerationedTable.writeAs(
-        scores.agg(sum("n_bigrams").as("n_bigrams"),
-            sum("kn_bits").as("kn_bits"))
-          .select(col("n_bigrams"), col("kn_bits"),
-            expr("kn_bits * 1000000 div n_bigrams").as("mean_ppm")),
-        statsDir(store), next)
-      GenerationedTable.writeAs(st.select("bg", "cvw"), bigramsDir(store), next)
-      GenerationedTable.writeAs(
-        st.select("v", "cv", "n1v").distinct(), firstsDir(store), next)
-      GenerationedTable.writeAs(
-        st.select("wd", "n1w").distinct(), contsDir(store), next)
-      GenerationedTable.writeAs(
-        scores.withColumn("b3", ntile(3).over(
-            Window.partitionBy("source").orderBy("avg_ppm", "doc_id")))
-          .groupBy("source")
-          .agg(max(when(col("b3") === 1, col("avg_ppm"))).as("c1"),
-            max(when(col("b3") <= 2, col("avg_ppm"))).as("c2")),
-        cutsDir(store), next)
-      val t = st.count()
-      GenerationedTable.writeAs(
-        s.range(1).select(lit(t).as("t")), totalDir(store), next)
-      next
+      at(store).commit(s) { _ => {
+        case "stats" =>
+          scores.agg(sum("n_bigrams").as("n_bigrams"),
+              sum("kn_bits").as("kn_bits"))
+            .select(col("n_bigrams"), col("kn_bits"),
+              expr("kn_bits * 1000000 div n_bigrams").as("mean_ppm"))
+        case "bigrams" => st.select("bg", "cvw")
+        case "firsts" => st.select("v", "cv", "n1v").distinct()
+        case "conts" => st.select("wd", "n1w").distinct()
+        case "cuts" =>
+          scores.withColumn("b3", ntile(3).over(
+              Window.partitionBy("source").orderBy("avg_ppm", "doc_id")))
+            .groupBy("source")
+            .agg(max(when(col("b3") === 1, col("avg_ppm"))).as("c1"),
+              max(when(col("b3") <= 2, col("avg_ppm"))).as("c2"))
+        case "total" => s.range(1).select(lit(st.count()).as("t"))
+      }}
     } finally st.unpersist()
   }
-
-  /** The store's committed generation = the type-total pointer, the
-    * ONLY pointer unpinned readers may resolve (it swings last). */
-  def committedGeneration(s: SparkSession, store: String): Int =
-    GenerationedTable.latest(s, totalDir(store)).getOrElse(
-      throw new IllegalStateException(s"$store has no trained generation"))
-
-  /** The training-time surprisal baseline — single-commit-point rule. */
-  def stats(s: SparkSession, store: String,
-            gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, statsDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
 
   /** The pointed (or pinned) generation bridged to the streaming twin's
     * frozen-model type — how [[graft.streaming.QualityStreams]] scores
     * arrivals under generation `gen`. */
   def asModel(s: SparkSession, store: String,
               gen: Option[Int] = None): graft.streaming.QualityStreams.KnModel = {
-    val g = gen.getOrElse(committedGeneration(s, store))
+    val st = at(store)
+    val g = Some(gen.getOrElse(st.committed(s)))
     graft.streaming.QualityStreams.KnModel(
-      bigrams = GenerationedTable.read(s, bigramsDir(store), Some(g)),
-      firsts = GenerationedTable.read(s, firstsDir(store), Some(g)),
-      conts = GenerationedTable.read(s, contsDir(store), Some(g)),
-      t = GenerationedTable.read(s, totalDir(store), Some(g)).head().getLong(0),
-      cuts = GenerationedTable.read(s, cutsDir(store), Some(g)))
+      bigrams = st.read(s, "bigrams", g),
+      firsts = st.read(s, "firsts", g),
+      conts = st.read(s, "conts", g),
+      t = st.read(s, "total", g).head().getLong(0),
+      cuts = st.read(s, "cuts", g))
   }
 
   /** The drift gauge's verdict, with the measured observables exposed
@@ -351,7 +294,7 @@ object KnLifecycle {
                  oovPpm: Long = 50000L,
                  shiftPpm: Long = 100000L): KnDriftDecision = {
     val s = docs.sparkSession
-    val gen = committedGeneration(s, store)
+    val gen = at(store).committed(s)
     // the twin's own pricing of each bigram instance, aggregated to 1 row
     val r = graft.streaming.QualityStreams
       .bigramBits(docs, asModel(s, store, Some(gen)))
@@ -365,7 +308,8 @@ object KnLifecycle {
     val n = r.getLong(0)
     val oov = 1000000L * r.getLong(1) / n
     val curMean = 1000000L * r.getLong(2) / n
-    val baseMean = stats(s, store, Some(gen)).head().getAs[Long]("mean_ppm")
+    val baseMean = at(store).read(s, "stats", Some(gen)).head()
+      .getAs[Long]("mean_ppm")
     val shift = math.abs(curMean - baseMean)
     val reasons = Seq.newBuilder[String]
     if (oov >= oovPpm)
@@ -412,74 +356,58 @@ object KnLifecycle {
   *    merge-chain-dependent, and the share observable already carries
   *    their whole signal — keeping the two orthogonal and both exact.
   *
-  * Store layout ([[GenerationedTable]]s under ONE generation):
-  * `<store>/merges` is the AUTHORITY (written last; the
-  * [[BinaryLifecycle.codes]] single-commit-point rule), with
-  * `<store>/stats` (1-row training baseline) and `<store>/vocab`
-  * committed first. Training runs [[ChunkingQueries.bpeTrainInto]]
-  * (the catalog artifact's own loop) into a per-generation scratch
-  * dir, then lands the tables; the scratch is removed after commit.
+  * Store layout (a [[GenerationStore]], see its commit rule):
+  * `<store>/merges` is the AUTHORITY, with `<store>/stats` (1-row
+  * training baseline) and `<store>/vocab` its siblings. Training runs
+  * [[ChunkingQueries.bpeTrainInto]] (the catalog artifact's own loop)
+  * into a per-generation scratch dir, then lands the tables; the
+  * scratch is removed after commit.
+  *
+  * The store is the tokenizer's only trainer and on-disk format:
+  * [[graft.streaming.TokenizeStreams.encodeStream]] trains through
+  * [[retrain]] and encodes with the `vocab` table and [[merges]].
   *
   * Scale shape: the gauge is one token explode + a vocabulary-sized
   * left join aggregated to one row; retraining is the artifact
   * builder's own cost, paid exactly when the gauge fires. */
 object BpeLifecycle {
 
-  def mergesDir(store: String): String = s"$store/merges"
-  def vocabDir(store: String): String = s"$store/vocab"
-  def statsDir(store: String): String = s"$store/stats"
+  /** The `vocab` table is the (w, wn, pieces, n_tokens) segmentation
+    * [[graft.streaming.TokenizeStreams.encodeBatch]] takes as its
+    * frozen `vocab`. */
+  def at(store: String): GenerationStore =
+    GenerationStore(store, authority = "merges", siblings = Seq("stats", "vocab"))
 
   /** Train the next generation from the current corpus. Returns its
     * number. `docs` is any (…, text) document frame. */
   def retrain(docs: DataFrame, store: String): Int = {
     val s = docs.sparkSession
-    val next = GenerationedTable.generations(s, mergesDir(store))
-      .lastOption.getOrElse(0) + 1
-    val scratch = s"$store/_train_g$next"
-    ChunkingQueries.bpeTrainInto(s, docs, scratch)
-    val vocab = s.read.parquet(s"$scratch/vocab")
-    GenerationedTable.writeAs(
-      vocab.agg(sum(col("wn")).as("n_words"),
-          sum(col("wn") * col("n_tokens")).as("n_bpe_tokens"))
-        .select(col("n_words"), col("n_bpe_tokens"),
-          expr("(1000000 * n_bpe_tokens) div n_words").as("tok_per_mword")),
-      statsDir(store), next)
-    GenerationedTable.writeAs(vocab, vocabDir(store), next)
-    GenerationedTable.writeAs(
-      s.read.parquet(s"$scratch/merges"), mergesDir(store), next)
-    val p = new org.apache.hadoop.fs.Path(scratch)
+    val scratch = (g: Int) => s"$store/_train_g$g"
+    val next = at(store).commit(s) { g =>
+      ChunkingQueries.bpeTrainInto(s, docs, scratch(g))
+      val vocab = s.read.parquet(s"${scratch(g)}/vocab")
+      val frames: PartialFunction[String, DataFrame] = {
+        case "stats" =>
+          vocab.agg(sum(col("wn")).as("n_words"),
+              sum(col("wn") * col("n_tokens")).as("n_bpe_tokens"))
+            .select(col("n_words"), col("n_bpe_tokens"),
+              expr("(1000000 * n_bpe_tokens) div n_words").as("tok_per_mword"))
+        case "vocab" => vocab
+        case "merges" => s.read.parquet(s"${scratch(g)}/merges")
+      }
+      frames
+    }
+    val p = new org.apache.hadoop.fs.Path(scratch(next))
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     next
   }
 
-  /** The store's committed generation = the merges pointer, the ONLY
-    * pointer unpinned readers may resolve (it swings last). */
-  def committedGeneration(s: SparkSession, store: String): Int =
-    GenerationedTable.latest(s, mergesDir(store)).getOrElse(
-      throw new IllegalStateException(s"$store has no trained generation"))
-
-  /** The pointed (or pinned) generation's (w, wn, pieces, n_tokens)
-    * segmentation table — what [[graft.streaming.TokenizeStreams
-    * .encodeBatch]] takes as its frozen `vocab`. */
-  def vocab(s: SparkSession, store: String,
-            gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, vocabDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
-
-  /** The training-time baseline — single-commit-point rule. */
-  def stats(s: SparkSession, store: String,
-            gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, statsDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
-
   /** The pointed (or pinned) generation's merge sequence in step
     * order — the driver-side tokenizer state [[graft.streaming
-    * .TokenizeStreams.encodeBatch]] applies to OOV words (10 rows,
-    * the trainedMerges shape). */
+    * .TokenizeStreams.encodeBatch]] applies to OOV words (10 rows). */
   def merges(s: SparkSession, store: String,
              gen: Option[Int] = None): Seq[(String, String)] =
-    GenerationedTable.read(s, mergesDir(store),
-        Some(gen.getOrElse(committedGeneration(s, store))))
+    at(store).read(s, "merges", gen)
       .orderBy("step").select("pair_a", "pair_b")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
 
@@ -499,8 +427,9 @@ object BpeLifecycle {
                  oovPpm: Long = 50000L,
                  shiftPpm: Long = 100000L): TokDriftDecision = {
     val s = docs.sparkSession
-    val gen = committedGeneration(s, store)
-    val v = vocab(s, store, Some(gen)).select(col("w"), col("n_tokens"))
+    val st = at(store)
+    val gen = st.committed(s)
+    val v = st.read(s, "vocab", Some(gen)).select(col("w"), col("n_tokens"))
     // one token explode + vocabulary-sized broadcast left join → 1 row
     val r = docs
       .select(explode(graft.functions.TextFunctions.tokens(col("text")))
@@ -518,7 +447,7 @@ object BpeLifecycle {
     val n = r.getLong(0)
     val oov = 1000000L * r.getLong(1) / n
     val inVocab = n - r.getLong(1)
-    val baseC = stats(s, store, Some(gen)).head().getAs[Long]("tok_per_mword")
+    val baseC = st.read(s, "stats", Some(gen)).head().getAs[Long]("tok_per_mword")
     // an all-OOV stream carries no in-vocab compression sample; the
     // OOV trigger owns that case entirely
     val shift =
@@ -566,23 +495,22 @@ object BpeLifecycle {
   *    the same staleness from the other side; a rising one means the
   *    arriving mix is boilerplate-heavier than the list's corpus).
   *
-  * Store layout ([[GenerationedTable]]s under ONE generation):
-  * `<store>/bplist` is the AUTHORITY (written last — the
-  * [[BinaryLifecycle.codes]] single-commit-point rule);
-  * `<store>/stats` (1-row training baseline) commits first.
+  * Store layout (a [[GenerationStore]], see its commit rule):
+  * `<store>/bplist`, the one-column (`bseg`) list, is the AUTHORITY;
+  * `<store>/stats` (1-row training baseline) is its sibling.
   *
   * The store is the list's only trainer and on-disk format:
   * [[graft.streaming.CurationStreams.boilerplateStream]] and
   * [[graft.streaming.AdmissionStreams.train]] train through [[retrain]]
-  * and excise with [[list]].
+  * and excise with the `bplist` table.
   *
   * Scale shape: the gauge is the list-training pass itself (one
   * segment explode + one segment-keyed hash-agg) plus a list-sized
   * left join, aggregated to one row. */
 object BoilerplateLifecycle {
 
-  def listDir(store: String): String = s"$store/bplist"
-  def statsDir(store: String): String = s"$store/stats"
+  def at(store: String): GenerationStore =
+    GenerationStore(store, authority = "bplist", siblings = Seq("stats"))
 
   /** (seg, n, nd): instance count + distinct-doc count per distinct
     * segment of a (doc_id, …, text) frame — the gauge's (and the
@@ -611,39 +539,16 @@ object BoilerplateLifecycle {
   /** Train the next generation from the current corpus. Returns its
     * number. */
   def retrain(docs: DataFrame, store: String): Int = {
-    val s = docs.sparkSession
-    val next = GenerationedTable.generations(s, listDir(store))
-      .lastOption.getOrElse(0) + 1
     val cs = segStats(docs).cache()
     try {
       val bp = cs.filter(col("nd") >= BoilerplateQueries.MinDocs)
         .select(col("seg").as("bseg"))
-      GenerationedTable.writeAs(gaugeOf(cs, bp), statsDir(store), next)
-      GenerationedTable.writeAs(bp, listDir(store), next)
+      at(store).commit(docs.sparkSession) { _ => {
+        case "stats" => gaugeOf(cs, bp)
+        case "bplist" => bp
+      }}
     } finally cs.unpersist()
-    next
   }
-
-  /** The store's committed generation = the list pointer (the only
-    * pointer; stats reads resolve it for symmetry with the other
-    * lifecycles' single-commit-point rule). */
-  def committedGeneration(s: SparkSession, store: String): Int =
-    GenerationedTable.latest(s, listDir(store)).getOrElse(
-      throw new IllegalStateException(s"$store has no trained generation"))
-
-  /** The pointed (or pinned) generation's one-column (`bseg`) list —
-    * what [[graft.streaming.CurationStreams.bpExciseBatch]] takes as
-    * its frozen list. */
-  def list(s: SparkSession, store: String,
-           gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, listDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
-
-  /** The training-time baseline — single-commit-point rule. */
-  def stats(s: SparkSession, store: String,
-            gen: Option[Int] = None): DataFrame =
-    GenerationedTable.read(s, statsDir(store),
-      Some(gen.getOrElse(committedGeneration(s, store))))
 
   /** The drift gauge's verdict, with the measured observables exposed
     * so an operator (or a test) can see WHY. */
@@ -662,13 +567,14 @@ object BoilerplateLifecycle {
                  novelPpm: Long = 10000L,
                  shiftPpm: Long = 100000L): BpDriftDecision = {
     val s = docs.sparkSession
-    val gen = committedGeneration(s, store)
-    val r = gaugeOf(segStats(docs), list(s, store, Some(gen)))
+    val st = at(store)
+    val gen = st.committed(s)
+    val r = gaugeOf(segStats(docs), st.read(s, "bplist", Some(gen)))
       .collect().head
     require(!r.isNullAt(0) && r.getLong(0) > 0,
       s"driftCheck over an empty corpus against $store gen $gen — " +
         "drift against nothing is undefined, refusing to gauge")
-    val base = stats(s, store, Some(gen)).head().getAs[Long]("hit_ppm")
+    val base = st.read(s, "stats", Some(gen)).head().getAs[Long]("hit_ppm")
     val novel = r.getAs[Long]("novel_ppm")
     val shift = math.abs(r.getAs[Long]("hit_ppm") - base)
     val reasons = Seq.newBuilder[String]

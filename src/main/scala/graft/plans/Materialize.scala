@@ -12,9 +12,10 @@ import org.apache.spark.sql.DataFrame
   * lineage truncated. Cheap and right for a single-box bench, but NOT
   * fault-tolerant: on a real cluster a lost executor loses the block and
   * fails the query instead of recomputing (r20 verdict item 1). A 100 TB
-  * deployment sets `spark.graft.checkpoint.reliable=true` plus
-  * `spark.graft.checkpoint.dir=<hdfs/s3 path>` (or calls
-  * `sparkContext.setCheckpointDir` itself) and every site below flips to
+  * deployment sets `spark.graft.checkpoint.reliable=true` and gives the
+  * context a checkpoint dir — Spark's own `spark.checkpoint.dir=<hdfs/s3
+  * path>`, read when the `SparkContext` starts, or
+  * `sparkContext.setCheckpointDir` — and every site below flips to
   * the replicated reliable `checkpoint(eager = true)` — same rows, same
   * downstream plan shape (both forms serve an in-memory/scanned RDD with
   * truncated lineage), survivable block loss. The trade-off is a write
@@ -30,20 +31,15 @@ object Materialize {
     * checkpoints instead of executor-local ones. */
   val ReliableConf = "spark.graft.checkpoint.reliable"
 
-  /** Checkpoint directory to install when [[ReliableConf]] is set and
-    * the context has none (e.g. an HDFS path at cluster scale). */
-  val DirConf = "spark.graft.checkpoint.dir"
-
   /** Materialize `df` eagerly, truncating lineage; see object doc for
     * the local-vs-reliable dial. */
   def once(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     if (s.conf.get(ReliableConf, "false").toBoolean) {
       if (s.sparkContext.getCheckpointDir.isEmpty)
-        s.sparkContext.setCheckpointDir(s.conf.getOption(DirConf).getOrElse(
-          throw new IllegalStateException(
-            s"$ReliableConf=true needs a checkpoint dir: set $DirConf " +
-              "or call sparkContext.setCheckpointDir")))
+        throw new IllegalStateException(
+          s"$ReliableConf=true needs a checkpoint dir: set " +
+            "spark.checkpoint.dir or call sparkContext.setCheckpointDir")
       df.checkpoint(eager = true)
     } else df.localCheckpoint(eager = true)
   }

@@ -37,7 +37,7 @@ object GenerationedTable {
     * partial snapshot a crashed writer left there) and swing the
     * pointer. Lets a multi-table store commit sibling tables under one
     * externally-chosen generation instead of trusting two independent
-    * counters to stay in lockstep (see [[graft.operators.IvfLifecycle]]). */
+    * counters to stay in lockstep (see [[GenerationStore]]). */
   def writeAs(df: DataFrame, dir: String, next: Int): Int = {
     val s = df.sparkSession
     val f = fs(s, dir)
@@ -112,5 +112,69 @@ object GenerationedTable {
     val drop = gens.dropRight(keep).filterNot(current.contains(_))
     drop.foreach(g => f.delete(new Path(dir, s"gen=$g"), true))
     drop
+  }
+}
+
+/** A store of sibling [[GenerationedTable]]s under `root` that commit
+  * together under ONE generation number — the on-disk form of every
+  * drift → retrain lifecycle's trained model ([[graft.operators
+  * .IvfLifecycle]], [[graft.operators.BinaryLifecycle]],
+  * [[graft.operators.DsirLifecycle]] and its text-tier peers). Each
+  * table lives at `<root>/<table>/gen=<g>` with its own `_LATEST`.
+  *
+  * The commit rule, written once here:
+  *  - the next generation is one past the highest retained generation
+  *    of the `authority` table;
+  *  - [[commit]] writes the `siblings` in their declared order, then
+  *    the authority LAST, so the authority's `_LATEST` is the store's
+  *    single commit point;
+  *  - unpinned reads resolve ONLY the authority's pointer
+  *    ([[committed]]). A crash before the authority write leaves orphan
+  *    sibling generations whose own pointers already moved; no
+  *    unpinned read reaches them (that would pair new siblings with the
+  *    old authority — the mixed-generation state this rule forbids),
+  *    and the next commit re-derives the same number from the unchanged
+  *    authority and overwrites them;
+  *  - a store without a committed authority is refused by name
+  *    (`<root> has no trained generation`).
+  *
+  * Pinned reads (`gen = Some(g)`) reach any retained generation, so a
+  * reader on `g` is undisturbed by later commits. Single-writer, like
+  * [[GenerationedTable]]. */
+final case class GenerationStore(root: String, authority: String,
+                                 siblings: Seq[String]) {
+
+  /** Every table in write order: the siblings, then the authority. */
+  val tables: Seq[String] = siblings :+ authority
+
+  /** The table's [[GenerationedTable]] directory. */
+  def dir(table: String): String = {
+    require(tables.contains(table),
+      s"$root has no table '$table' (tables: ${tables.mkString(", ")})")
+    s"$root/$table"
+  }
+
+  /** The committed generation: the authority's pointer. */
+  def committed(s: SparkSession): Int =
+    GenerationedTable.latest(s, dir(authority)).getOrElse(
+      throw new IllegalStateException(s"$root has no trained generation"))
+
+  /** `table` at the pinned generation, or at the committed one. */
+  def read(s: SparkSession, table: String, gen: Option[Int] = None): DataFrame =
+    GenerationedTable.read(s, dir(table), Some(gen.getOrElse(committed(s))))
+
+  /** Commit the next generation and return its number. `frames` gets
+    * that number and answers each table's frame; every table must have
+    * one before anything is written. Each frame is built just before
+    * its own write, in [[tables]] order, so a frame may depend on
+    * driver-side results computed after the earlier writes. */
+  def commit(s: SparkSession)(frames: Int => PartialFunction[String, DataFrame]): Int = {
+    val next = GenerationedTable.generations(s, dir(authority))
+      .lastOption.getOrElse(0) + 1
+    val frame = frames(next)
+    val missing = tables.filterNot(frame.isDefinedAt)
+    require(missing.isEmpty, s"$root: no frame for ${missing.mkString(", ")}")
+    tables.foreach(t => GenerationedTable.writeAs(frame(t), dir(t), next))
+    next
   }
 }

@@ -68,7 +68,7 @@ object AdmissionStreams {
     * none. */
   def load(s: SparkSession, modelRoot: String): AdmissionModel =
     AdmissionModel(
-      BoilerplateLifecycle.list(s, s"$modelRoot/bp"),
+      BoilerplateLifecycle.at(s"$modelRoot/bp").read(s, "bplist"),
       KnLifecycle.asModel(s, s"$modelRoot/kn"),
       DsirLifecycle.asModel(s, s"$modelRoot/dsir"))
 

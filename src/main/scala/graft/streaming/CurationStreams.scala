@@ -84,7 +84,7 @@ object CurationStreams {
   // --------------------------------------------------------- boilerplate
 
   /** One micro-batch excision against the frozen list (the one-column
-    * `bseg` frame of [[BoilerplateLifecycle.list]]). */
+    * `bseg` frame of a [[BoilerplateLifecycle]] store's `bplist`). */
   def bpExciseBatch(batch: DataFrame, batchId: Long, bp: DataFrame,
                     outDir: String): Unit =
     BoilerplateQueries
@@ -99,7 +99,7 @@ object CurationStreams {
                         outDir: String): DataStreamWriter[Row] = {
     val s = docs.sparkSession
     BoilerplateLifecycle.retrain(graft.Tables.documents(s, corpusDir), store)
-    val bp = BoilerplateLifecycle.list(s, store)
+    val bp = BoilerplateLifecycle.at(store).read(s, "bplist")
     docs.writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -129,8 +129,16 @@ object DeleteStreams {
           processBatch(batch, batchId, pairDir, keepDir, certDir, catalogSpace)
       }
 
-  /** Current served state (the pointer's generation). */
+  /** Current served state: both tables at the keep-list pointer's
+    * generation. [[seed]] and [[processBatch]] write `keep` last, so its
+    * pointer is the pair's commit point; a crash between the two writes
+    * leaves a pairs generation no reader is served until its batch is
+    * replayed. */
   def currentState(s: SparkSession, pairDir: String,
-                   keepDir: String): (DataFrame, DataFrame) =
-    (GenerationedTable.read(s, pairDir), GenerationedTable.read(s, keepDir))
+                   keepDir: String): (DataFrame, DataFrame) = {
+    val g = GenerationedTable.latest(s, keepDir).getOrElse(
+      throw new IllegalStateException(s"$keepDir has no generations"))
+    (GenerationedTable.read(s, pairDir, Some(g)),
+      GenerationedTable.read(s, keepDir, Some(g)))
+  }
 }

@@ -199,14 +199,10 @@ object SemanticStreams {
                                store: String, vecTable: String,
                                pairTable: String, asnDir: String,
                                buckets: Int = 8): Unit = {
-    import graft.operators.IvfLifecycle
-    import graft.sources.GenerationedTable
     val s = batch.sparkSession
-    val gen = GenerationedTable.latest(s, IvfLifecycle.centroidsDir(store))
-      .getOrElse(throw new IllegalStateException(
-        s"$store has no trained centroid generation — run IvfLifecycle.retrain first"))
-    val centroids =
-      GenerationedTable.read(s, IvfLifecycle.centroidsDir(store), Some(gen))
+    val ivf = graft.operators.IvfLifecycle.at(store)
+    val gen = ivf.committed(s)
+    val centroids = ivf.read(s, "centroids", Some(gen))
     val genDir = asnGenDir(asnDir, gen)
     val p = new Path(genDir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)

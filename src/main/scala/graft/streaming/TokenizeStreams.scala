@@ -7,7 +7,8 @@ import graft.functions.TextFunctions.tokens
 
 /** Tokenize-on-arrival — the streaming twin of `q_bpe_encode`: each
   * micro-batch of (doc_id, text) documents is encoded against the
-  * FROZEN trained tokenizer (the persisted `idx_bpe_merges` vocab —
+  * FROZEN trained tokenizer (one generation of a
+  * [[graft.operators.BpeLifecycle]] store — the vocabulary is
   * vocabulary-sized, broadcast onto the word stream; training never
   * re-runs in the hot path, exactly the IVF/streaming-dedup frozen-
   * model discipline) and written as token sequences into a
@@ -70,27 +71,21 @@ object TokenizeStreams {
   }
 
   /** Continuous wiring: a stream of (doc_id, text) documents encoded
-    * micro-batch by micro-batch against the tokenizer trained on the
-    * corpus at `corpusDir` (resolved ONCE, before the stream starts —
-    * the frozen-model contract). */
-  def encodeStream(docs: DataFrame, corpusDir: String,
+    * micro-batch by micro-batch under the next generation of `store`,
+    * trained once on `corpusDir` at start (the frozen-model contract). */
+  def encodeStream(docs: DataFrame, corpusDir: String, store: String,
                    encDir: String): DataStreamWriter[Row] = {
+    import graft.operators.BpeLifecycle
     val s = docs.sparkSession
-    val vocab = graft.operators.ChunkingQueries.bpeVocab(s, corpusDir)
-    val merges = trainedMerges(s, corpusDir)
+    val gen = Some(BpeLifecycle.retrain(graft.Tables.documents(s, corpusDir), store))
+    val vocab = BpeLifecycle.at(store).read(s, "vocab", gen)
+    val merges = BpeLifecycle.merges(s, store, gen)
     docs.writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) encodeBatch(batch, batchId, vocab, merges, encDir)
       }
   }
-
-  /** The trained merge sequence in step order — 10 rows of tokenizer
-    * state, collected once at stream start (frozen-model contract). */
-  def trainedMerges(s: SparkSession, corpusDir: String): Seq[(String, String)] =
-    graft.operators.ChunkingQueries.bpeMergeTable(s, corpusDir)
-      .orderBy("step").select("pair_a", "pair_b")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
 
   /** The accumulated encoded corpus: one row per document, a
     * re-ingested doc_id keeping its newest batch's encoding. */

@@ -53,8 +53,8 @@ class BinaryLifecycleSpec extends SparkSpec {
     // the gen-1 codes equal a fresh batch pack under gen-1 thresholds
     val fresh = SimilarityQueries.packWords(vecs,
       SimilarityQueries.thresholdRowOf(
-        BinaryLifecycle.thresholds(spark, store, Some(1))))
-    val pinned = codeKey(BinaryLifecycle.codes(spark, store, Some(1)))
+        BinaryLifecycle.at(store).read(spark, "thresholds", Some(1))))
+    val pinned = codeKey(BinaryLifecycle.at(store).read(spark, "codes", Some(1)))
     assert(pinned == codeKey(fresh), "gen-1 codes != fresh pack")
     // ... and (thresholds being trained on this corpus) equal the
     // registered batch builder's artifact-backed table
@@ -63,11 +63,11 @@ class BinaryLifecycleSpec extends SparkSpec {
     val g2 = BinaryLifecycle.retrain(flipped, store)
     assert(g2 == 2)
     // the pinned generation's bytes are exactly what they were
-    assert(codeKey(BinaryLifecycle.codes(spark, store, Some(1))) == pinned)
+    assert(codeKey(BinaryLifecycle.at(store).read(spark, "codes", Some(1))) == pinned)
     // the pointer moved; the repacked generation differs
     assert(GenerationedTable.latest(
-      spark, BinaryLifecycle.codesDir(store)).contains(2))
-    assert(codeKey(BinaryLifecycle.codes(spark, store)) != pinned)
+      spark, BinaryLifecycle.at(store).dir("codes")).contains(2))
+    assert(codeKey(BinaryLifecycle.at(store).read(spark, "codes")) != pinned)
   }
 
   test("the drift gauge: quiet corpus serves, a distribution slide " +
@@ -111,31 +111,31 @@ class BinaryLifecycleSpec extends SparkSpec {
     // simulate the crash window: stats+codes gen 2 committed,
     // thresholds (the pointer authority) not
     GenerationedTable.writeAs(
-      BinaryLifecycle.codes(spark, store, Some(1)).limit(1),
-      BinaryLifecycle.codesDir(store), 2)
+      BinaryLifecycle.at(store).read(spark, "codes", Some(1)).limit(1),
+      BinaryLifecycle.at(store).dir("codes"), 2)
     assert(GenerationedTable.latest(
-      spark, BinaryLifecycle.thresholdsDir(store)).contains(1))
+      spark, BinaryLifecycle.at(store).dir("thresholds")).contains(1))
     assert(BinaryLifecycle.driftCheck(vecs, store).generation == 1)
     // inside the crash window the codes dir's OWN pointer is already at
     // the orphan gen 2, but an UNPINNED codes()/stats() read resolves
     // the thresholds pointer (the single commit point) and still serves
     // the committed gen-1 pair — never mixed-generation
     assert(GenerationedTable.latest(
-      spark, BinaryLifecycle.codesDir(store)).contains(2))
-    assert(BinaryLifecycle.committedGeneration(spark, store) == 1)
-    assert(codeKey(BinaryLifecycle.codes(spark, store)) ==
-      codeKey(BinaryLifecycle.codes(spark, store, Some(1))),
+      spark, BinaryLifecycle.at(store).dir("codes")).contains(2))
+    assert(BinaryLifecycle.at(store).committed(spark) == 1)
+    assert(codeKey(BinaryLifecycle.at(store).read(spark, "codes")) ==
+      codeKey(BinaryLifecycle.at(store).read(spark, "codes", Some(1))),
       "unpinned codes() read the orphan generation inside the crash window")
-    assert(BinaryLifecycle.stats(spark, store).count() ==
-      BinaryLifecycle.stats(spark, store, Some(1)).count())
+    assert(BinaryLifecycle.at(store).read(spark, "stats").count() ==
+      BinaryLifecycle.at(store).read(spark, "stats", Some(1)).count())
     // the next retrain re-derives gen 2 from the thresholds dir and
     // overwrites the orphan — no wedge
     val g2 = BinaryLifecycle.retrain(drifted, store)
     assert(g2 == 2)
-    assert(codeKey(BinaryLifecycle.codes(spark, store, Some(2))) ==
+    assert(codeKey(BinaryLifecycle.at(store).read(spark, "codes", Some(2))) ==
       codeKey(SimilarityQueries.packWords(drifted,
         SimilarityQueries.thresholdRowOf(
-          BinaryLifecycle.thresholds(spark, store, Some(2))))))
+          BinaryLifecycle.at(store).read(spark, "thresholds", Some(2))))))
     cleanup()
   }
 
@@ -156,7 +156,7 @@ class BinaryLifecycleSpec extends SparkSpec {
     // a CodeStreams-shaped frozen model from the pinned generation
     def modelOf(gen: Int) = graft.streaming.CodeStreams.ThresholdModel(
       SimilarityQueries.thresholdRowOf(
-        BinaryLifecycle.thresholds(spark, store, Some(gen))))
+        BinaryLifecycle.at(store).read(spark, "thresholds", Some(gen))))
     val arrivals = drifted.limit(50)
       .select(col("vec_id"), col("e").as("embedding"))
     val outDir = s"$store/stream_codes"
@@ -170,7 +170,7 @@ class BinaryLifecycleSpec extends SparkSpec {
     val expected = codeKey(SimilarityQueries.packWords(
       drifted.limit(50),
       SimilarityQueries.thresholdRowOf(
-        BinaryLifecycle.thresholds(spark, store, Some(g2)))))
+        BinaryLifecycle.at(store).read(spark, "thresholds", Some(g2)))))
     assert(after == expected, "post-switch arrivals not on gen-2 codes")
     assert(before != after, "the generation switch changed nothing?")
     cleanup()

@@ -202,7 +202,8 @@ class SentinelGuardSpec extends AnyFunSuite {
     * measures, and each store's commit-order/single-pointer read
     * discipline is pinned by its lifecycle spec (BinaryLifecycleSpec,
     * IvfLifecycleSpec, TextLifecyclesSpec). This test makes the class
-    * decision STRUCTURAL: it enumerates every `<x>Dir(store)` sub-table
+    * decision STRUCTURAL: it enumerates every table of every
+    * `GenerationStore(store, authority = "...", siblings = Seq(...))`
     * declaration in src/main and fails when a new lifecycle store
     * appears that is not explicitly decided below — the author must
     * either extend the decided list (same justification holding: no
@@ -225,21 +226,27 @@ class SentinelGuardSpec extends AnyFunSuite {
     "TextLifecycles.scala/vocab",    // (its stats row is shared above)
     "TextLifecycles.scala/bplist")   // BoilerplateLifecycle authority
 
+  /** `<file>/<table>` for every table of every [[graft.sources
+    * .GenerationStore]] declaration in one file's text: the authority
+    * and each quoted sibling. */
+  private[operators] def storeTables(display: String, text: String): Seq[String] = {
+    val decl = ("""GenerationStore\(\s*\w+\s*,\s*authority\s*=\s*"(\w+)"\s*,""" +
+      """\s*siblings\s*=\s*Seq\(([^)]*)\)""").r
+    val quoted = """"(\w+)"""".r
+    decl.findAllMatchIn(text).toSeq.flatMap { m =>
+      (m.group(1) +: quoted.findAllMatchIn(m.group(2)).map(_.group(1)).toSeq)
+        .map(t => s"$display/$t")
+    }
+  }
+
   test("every generationed lifecycle store sub-table is an explicitly " +
     "decided exemption (no gate query reads one) or needs a sentinel") {
-    val dirDecl = """def \w+Dir\(store: String\): String = s"\$store/(\w+)"""".r
-    val found = Set.newBuilder[String]
-    for (p <- sourceFiles) {
-      val text = readAll(p)
-      dirDecl.findAllMatchIn(text).foreach { m =>
-        found += s"${p.getFileName}/${m.group(1)}"
-      }
-    }
-    val live = found.result()
+    val live = sourceFiles
+      .flatMap(p => storeTables(p.getFileName.toString, readAll(p))).toSet
     // not vacuous: 16 store sub-tables today; a parse regression must
     // fail loudly rather than go blind
-    assert(live.size >= 16, s"only ${live.size} lifecycle store dirs " +
-      "parsed — the <x>Dir(store) declaration pattern changed")
+    assert(live.size >= 16, s"only ${live.size} lifecycle store tables " +
+      "parsed — the GenerationStore declaration pattern changed")
     val undecided = live -- decidedLifecycleDirs
     assert(undecided.isEmpty,
       s"lifecycle stores with NO decision: $undecided — extend " +
@@ -270,5 +277,26 @@ class SentinelGuardSpec extends AnyFunSuite {
     assert(!covered.contains("probe_scores") && !exempt.contains("probe_scores"),
       "the planted artifact must be neither covered nor exempt — so the " +
         "main test's undecided check would flag it")
+  }
+
+  test("planted probe: a new lifecycle store table without a decision is " +
+    "flagged") {
+    val probe =
+      """package graft.operators
+        |object ProbeLifecycle {
+        |  def at(store: String): graft.sources.GenerationStore =
+        |    graft.sources.GenerationStore(store, authority = "model",
+        |      siblings = Seq("stats", "probe_sketch"))
+        |}
+        |""".stripMargin
+    val tables = storeTables("ProbeLifecycle.scala", probe)
+    assert(tables == Seq("ProbeLifecycle.scala/model",
+      "ProbeLifecycle.scala/stats", "ProbeLifecycle.scala/probe_sketch"),
+      s"parse failed: $tables")
+    // a new table in a DECIDED file is flagged just the same
+    val inText = storeTables("TextLifecycles.scala", probe).toSet
+    assert((inText -- decidedLifecycleDirs) ==
+      Set("TextLifecycles.scala/model", "TextLifecycles.scala/probe_sketch"),
+      "the main test's undecided check must flag the planted tables")
   }
 }

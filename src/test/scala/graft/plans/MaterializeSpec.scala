@@ -25,11 +25,25 @@ class MaterializeSpec extends SparkSpec {
     assert(out.count() == 7)
   }
 
+  test("reliable without a dir fails fast with the conf names") {
+    // a context-level dir cannot be unset once installed; only
+    // meaningful when none is set (this test runs before the reliable
+    // path installs one)
+    if (spark.sparkContext.getCheckpointDir.isEmpty) {
+      spark.conf.set(Materialize.ReliableConf, "true")
+      try {
+        val e = intercept[IllegalStateException](Materialize.once(probe()))
+        assert(e.getMessage.contains("spark.checkpoint.dir"))
+      } finally spark.conf.unset(Materialize.ReliableConf)
+    }
+  }
+
   test("reliable path: identical rows, same truncated-scan shape") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     try {
-      spark.conf.set(Materialize.ReliableConf, "true")
-      spark.conf.set(Materialize.DirConf, dir)
+      // the deployment's own dir: Spark's spark.checkpoint.dir at
+      // context start, or setCheckpointDir — Materialize installs none
+      spark.sparkContext.setCheckpointDir(dir)
       val local = {
         spark.conf.set(Materialize.ReliableConf, "false")
         Materialize.once(probe()).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
@@ -40,25 +54,14 @@ class MaterializeSpec extends SparkSpec {
         _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
       val rel = reliable.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
       assert(rel.toSeq == local.toSeq, "both regimes must emit identical rows")
-      assert(spark.sparkContext.getCheckpointDir.isDefined,
-        "reliable path must install the conf'd checkpoint dir")
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try assert(walk.anyMatch(_.getFileName.toString.startsWith("rdd-")),
+        "reliable path must checkpoint into the context's dir")
+      finally walk.close()
     } finally {
       spark.conf.unset(Materialize.ReliableConf)
-      spark.conf.unset(Materialize.DirConf)
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  test("reliable without a dir fails fast with the conf names") {
-    // a fresh context-level dir may already be installed by the previous
-    // test; only meaningful when none is set
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      spark.conf.set(Materialize.ReliableConf, "true")
-      try {
-        val e = intercept[IllegalStateException](Materialize.once(probe()))
-        assert(e.getMessage.contains(Materialize.DirConf))
-      } finally spark.conf.unset(Materialize.ReliableConf)
     }
   }
 }

@@ -361,7 +361,7 @@ class DeleteAuditSpec extends SparkSpec {
 
     // purge both stores' histories
     assert(DeleteAudit.purgeGenerations(spark, deleted,
-      BinaryLifecycle.codesDir(bstore), Seq("vec_id")).toMap ==
+      BinaryLifecycle.at(bstore).dir("codes"), Seq("vec_id")).toMap ==
       Map(1 -> 1L, 2 -> 1L))
     assert(DeleteAudit.purgeGenerations(spark, deleted,
       logDir, Seq("vec_id")).toMap == Map(1 -> 1L, 2 -> 1L))
@@ -379,10 +379,10 @@ class DeleteAuditSpec extends SparkSpec {
     // pointers, sibling rows, and reader semantics are untouched:
     // time travel works at every generation, it just cannot resurrect
     // the deleted key — and the all-rows-purged delta still reads
-    assert(BinaryLifecycle.committedGeneration(spark, bstore) == 2)
-    assert(BinaryLifecycle.codes(spark, bstore, Some(1))
+    assert(BinaryLifecycle.at(bstore).committed(spark) == 2)
+    assert(BinaryLifecycle.at(bstore).read(spark, "codes", Some(1))
       .filter(col("vec_id") === 7L).isEmpty)
-    assert(BinaryLifecycle.codes(spark, bstore).count() ==
+    assert(BinaryLifecycle.at(bstore).read(spark, "codes").count() ==
       vecs.count() - 1)
     assert(log.read(spark).filter(col("vec_id") === 7L).isEmpty)
     assert(log.read(spark, Some(1)).filter(col("vec_id") === 7L).isEmpty)

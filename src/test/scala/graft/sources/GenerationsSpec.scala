@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Generation-versioned tables: latest-read follows the pointer, time
   * travel reaches any retained snapshot, vacuum respects retention and
-  * never deletes the pointed-at generation. */
+  * never deletes the pointed-at generation. Multi-table stores
+  * ([[GenerationStore]]): one commit point, the authority's pointer. */
 class GenerationsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -89,6 +90,95 @@ class GenerationsSpec extends SparkSpec {
     GenerationedTable.write(spark.range(99).select(col("id")), dir)
     assert(reader.count() == 10, "in-flight reader must keep its snapshot")
     assert(GenerationedTable.read(spark, dir).count() == 99)
+    cleanup()
+  }
+
+  // ---------------------------------------------------- GenerationStore
+
+  private def store = GenerationStore(dir, authority = "model",
+    siblings = Seq("stats", "codes"))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.as[Long].collect().toSet
+
+  private def one(v: Long) = Seq(v).toDF("v")
+
+  test("store: a commit lands the siblings under the new number, then " +
+       "the authority") {
+    cleanup()
+    val seen = Seq.newBuilder[(String, Option[Int])]
+    def frames(v: Long): Int => PartialFunction[String, org.apache.spark.sql.DataFrame] =
+      _ => {
+        case "stats" => one(v)
+        case "codes" =>
+          seen += "stats@codes" -> GenerationedTable.latest(spark, store.dir("stats"))
+          one(v + 1)
+        case "model" =>
+          seen += "codes@model" -> GenerationedTable.latest(spark, store.dir("codes"))
+          seen += "model@model" -> GenerationedTable.latest(spark, store.dir("model"))
+          one(v + 2)
+      }
+    assert(store.commit(spark)(frames(10)) == 1)
+    assert(store.commit(spark)(frames(20)) == 2)
+    // each frame was built after the tables before it had landed the
+    // new number, and before the authority's pointer moved
+    assert(seen.result() == Seq(
+      "stats@codes" -> Some(1), "codes@model" -> Some(1), "model@model" -> None,
+      "stats@codes" -> Some(2), "codes@model" -> Some(2), "model@model" -> Some(1)))
+    assert(store.committed(spark) == 2)
+    assert(store.tables.map(t => rows(store.read(spark, t))) ==
+      Seq(Set(20L), Set(21L), Set(22L)))
+    assert(store.tables.map(t => rows(store.read(spark, t, Some(1)))) ==
+      Seq(Set(10L), Set(11L), Set(12L)))
+    // the on-disk layout: <root>/<table>/gen=<g>, one pointer per table
+    assert(store.tables.forall(t =>
+      GenerationedTable.generations(spark, s"$dir/$t") == Seq(1, 2)))
+    // a commit missing a table's frame writes nothing
+    intercept[IllegalArgumentException] {
+      store.commit(spark)(_ => { case "stats" | "model" => one(0) })
+    }
+    assert(GenerationedTable.generations(spark, store.dir("stats")) == Seq(1, 2))
+    cleanup()
+  }
+
+  test("store: a failure before the authority write leaves the committed " +
+       "generation unchanged; the orphan sibling is readable only pinned") {
+    cleanup()
+    store.commit(spark)(_ => {
+      case "stats" => one(1); case "codes" => one(2); case "model" => one(3)
+    })
+    intercept[IllegalStateException] {
+      store.commit(spark)(_ => {
+        case "stats" => one(7)
+        case "codes" => one(8)
+        case "model" => throw new IllegalStateException("trainer crashed")
+      })
+    }
+    // the siblings' own pointers moved; the store's did not
+    assert(GenerationedTable.latest(spark, store.dir("codes")).contains(2))
+    assert(store.committed(spark) == 1)
+    assert(rows(store.read(spark, "codes")) == Set(2L))
+    assert(rows(store.read(spark, "codes", Some(2))) == Set(8L))
+    // the next commit re-derives the same number and overwrites the orphan
+    assert(store.commit(spark)(_ => {
+      case "stats" => one(4); case "codes" => one(5); case "model" => one(6)
+    }) == 2)
+    assert(rows(store.read(spark, "codes")) == Set(5L))
+    cleanup()
+  }
+
+  test("store: an empty store is refused by name; a pinned read of a " +
+       "generation that is not retained fails") {
+    cleanup()
+    val e = intercept[IllegalStateException](store.read(spark, "codes"))
+    assert(e.getMessage.contains(s"$dir has no trained generation"))
+    intercept[IllegalStateException](store.committed(spark))
+    store.commit(spark)(_ => {
+      case "stats" => one(1); case "codes" => one(2); case "model" => one(3)
+    })
+    intercept[IllegalArgumentException](store.read(spark, "codes", Some(2)))
+    // and a table the store does not declare
+    intercept[IllegalArgumentException](store.read(spark, "centroids"))
     cleanup()
   }
 }

@@ -51,17 +51,17 @@ class RetrainLifecycleSpec extends SparkSpec {
     val g1 = IvfLifecycle.retrain(vecs, k = 8, iters = 2, store)
     assert(g1 == 1)
     val pinned = centKey(
-      GenerationedTable.read(spark, IvfLifecycle.centroidsDir(store), Some(1)))
+      GenerationedTable.read(spark, IvfLifecycle.at(store).dir("centroids"), Some(1)))
     val g2 = IvfLifecycle.retrain(drifted, k = 8, iters = 2, store)
     assert(g2 == 2)
     // the pinned generation's bytes are exactly what they were
     assert(centKey(GenerationedTable.read(
-      spark, IvfLifecycle.centroidsDir(store), Some(1))) == pinned)
+      spark, IvfLifecycle.at(store).dir("centroids"), Some(1))) == pinned)
     // the pointer moved; the new generation differs
     assert(GenerationedTable.latest(
-      spark, IvfLifecycle.centroidsDir(store)).contains(2))
+      spark, IvfLifecycle.at(store).dir("centroids")).contains(2))
     assert(centKey(GenerationedTable.read(
-      spark, IvfLifecycle.centroidsDir(store))) != pinned)
+      spark, IvfLifecycle.at(store).dir("centroids"))) != pinned)
     // both generations carry their training-time baseline
     assert(IvfLifecycle.baselineStats(spark, store, 1).nVectors == vecs.count())
     assert(IvfLifecycle.baselineStats(spark, store, 2).nVectors == vecs.count())
@@ -106,10 +106,10 @@ class RetrainLifecycleSpec extends SparkSpec {
     // the exact state the stats-first write order can leave behind
     val orphan = Seq((0L, 0.0, 0.0, 0L))
       .toDF("n_vectors", "mean_dist", "max_cell_share", "live_cells")
-    GenerationedTable.writeAs(orphan, IvfLifecycle.statsDir(store), 2)
+    GenerationedTable.writeAs(orphan, IvfLifecycle.at(store).dir("stats"), 2)
     // readers resolve via the CENTROID pointer: still generation 1
     assert(GenerationedTable.latest(
-      spark, IvfLifecycle.centroidsDir(store)).contains(1))
+      spark, IvfLifecycle.at(store).dir("centroids")).contains(1))
     assert(IvfLifecycle.driftCheck(vecs, store).generation == 1)
     // the next retrain re-derives gen 2 from the centroid dir and
     // overwrites the orphan — no require-mismatch, no wedge
@@ -143,7 +143,7 @@ class RetrainLifecycleSpec extends SparkSpec {
     // simulate a crash mid-seed: gen-2 dir exists with a PARTIAL slice
     // (only half the accumulated corpus reassigned) and no marker
     val gen2Cent = GenerationedTable.read(
-      spark, IvfLifecycle.centroidsDir(store), Some(2))
+      spark, IvfLifecycle.at(store).dir("centroids"), Some(2))
     IvfQuantizer.assignVectors(
         chunkDf(0).limit(chunks(0).length / 2), gen2Cent)
       .write.mode("overwrite")
@@ -173,7 +173,7 @@ class RetrainLifecycleSpec extends SparkSpec {
     SemanticStreams.processBatchGenerationed(chunkDf(1), 1L, store,
       vecT, pairT, asnD, buckets = 4)
     val gen1Cent = GenerationedTable.read(
-      spark, IvfLifecycle.centroidsDir(store), Some(1))
+      spark, IvfLifecycle.at(store).dir("centroids"), Some(1))
     val gen1Slice = asnKey(
       spark.read.parquet(SemanticStreams.asnGenDir(asnD, 1)))
     // sanity: gen-1 slice is the gen-1 batch assignment of chunks 0+1
@@ -192,7 +192,7 @@ class RetrainLifecycleSpec extends SparkSpec {
       vecT, pairT, asnD, buckets = 4)
 
     val gen2Cent = GenerationedTable.read(
-      spark, IvfLifecycle.centroidsDir(store), Some(2))
+      spark, IvfLifecycle.at(store).dir("centroids"), Some(2))
     val allDf = (0 to 3).map(chunkDf).reduce(_ unionByName _)
     // the new generation's index == a from-scratch batch rebuild: the
     // boundary reassigned chunks 0-1, the stream assigned chunks 2-3

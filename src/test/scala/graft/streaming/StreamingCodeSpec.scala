@@ -90,17 +90,17 @@ class StreamingCodeSpec extends SparkSpec {
     // an interrupted retrain: stats and codes of gen 2 committed their
     // own pointers, and gen-2 thresholds (each far above any component)
     // landed on disk, but the thresholds pointer never swung
-    GenerationedTable.writeAs(BinaryLifecycle.stats(spark, modelD, Some(1)),
-      BinaryLifecycle.statsDir(modelD), 2)
-    GenerationedTable.writeAs(BinaryLifecycle.codes(spark, modelD, Some(1)),
-      BinaryLifecycle.codesDir(modelD), 2)
-    val orphan = s"${BinaryLifecycle.thresholdsDir(modelD)}/gen=2"
-    BinaryLifecycle.thresholds(spark, modelD, Some(1))
+    GenerationedTable.writeAs(BinaryLifecycle.at(modelD).read(spark, "stats", Some(1)),
+      BinaryLifecycle.at(modelD).dir("stats"), 2)
+    GenerationedTable.writeAs(BinaryLifecycle.at(modelD).read(spark, "codes", Some(1)),
+      BinaryLifecycle.at(modelD).dir("codes"), 2)
+    val orphan = s"${BinaryLifecycle.at(modelD).dir("thresholds")}/gen=2"
+    BinaryLifecycle.at(modelD).read(spark, "thresholds", Some(1))
       .withColumn("t", lit(1e12))
       .write.mode("overwrite").parquet(orphan)
     // the orphans stay: they are what a crash leaves, and the store
     // keeps serving gen 1 to the other tests in this JVM
-    assert(BinaryLifecycle.committedGeneration(spark, modelD) == 1)
+    assert(BinaryLifecycle.at(modelD).committed(spark) == 1)
     // the twin still packs under gen 1: a vector above every gen-1
     // threshold sets every bit (gen-2 thresholds would clear them all)
     import spark.implicits._

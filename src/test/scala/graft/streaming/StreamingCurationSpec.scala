@@ -101,7 +101,7 @@ class StreamingCurationSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sf0001)
       .select("doc_id", "source", "text")
     BoilerplateLifecycle.retrain(docs, mD)
-    val bp = BoilerplateLifecycle.list(spark, mD)
+    val bp = BoilerplateLifecycle.at(mD).read(spark, "bplist")
     CurationStreams.bpExciseBatch(docs.filter(col("doc_id") % 2 === 1), 0L, bp, oD)
     CurationStreams.bpExciseBatch(docs.filter(col("doc_id") % 2 === 0), 1L, bp, oD)
     val got = CurationStreams.bpExcised(spark, oD)
@@ -125,7 +125,7 @@ class StreamingCurationSpec extends SparkSpec {
     val (bpNone, dsirNone) = (s"$base-bp-none", s"$base-dsir-none")
     cleanup(bpNone); cleanup(dsirNone)
     val eb = intercept[IllegalStateException] {
-      BoilerplateLifecycle.list(spark, bpNone)
+      BoilerplateLifecycle.at(bpNone).read(spark, "bplist")
     }
     assert(eb.getMessage.contains(s"$bpNone has no trained generation"))
     val ed = intercept[IllegalStateException] {
@@ -135,13 +135,13 @@ class StreamingCurationSpec extends SparkSpec {
     // an interrupted retrain is never served (crash-window contract):
     // gen-2 stats committed and an empty gen-2 list landed on disk, but
     // the list pointer never swung — excision still runs under gen 1
-    GenerationedTable.writeAs(BoilerplateLifecycle.stats(spark, mD),
-      BoilerplateLifecycle.statsDir(mD), 2)
+    GenerationedTable.writeAs(BoilerplateLifecycle.at(mD).read(spark, "stats"),
+      BoilerplateLifecycle.at(mD).dir("stats"), 2)
     bp.limit(0).write.mode("overwrite")
-      .parquet(s"${BoilerplateLifecycle.listDir(mD)}/gen=2")
+      .parquet(s"${BoilerplateLifecycle.at(mD).dir("bplist")}/gen=2")
     val oC = s"$base-bp-crash-out"
     cleanup(oC)
-    CurationStreams.bpExciseBatch(docs, 0L, BoilerplateLifecycle.list(spark, mD), oC)
+    CurationStreams.bpExciseBatch(docs, 0L, BoilerplateLifecycle.at(mD).read(spark, "bplist"), oC)
     val crash = CurationStreams.bpExcised(spark, oC)
     assert(crash.exceptAll(want).isEmpty && want.exceptAll(crash).isEmpty,
       "an uncommitted boilerplate generation was served")
@@ -150,9 +150,9 @@ class StreamingCurationSpec extends SparkSpec {
     cleanup(dM)
     DsirLifecycle.retrain(docs, dM)
     val d1 = DsirLifecycle.asModel(spark, dM)
-    GenerationedTable.writeAs(d1.buckets.limit(1), DsirLifecycle.bucketsDir(dM), 2)
-    GenerationedTable.writeAs(DsirLifecycle.stats(spark, dM).limit(1),
-      DsirLifecycle.statsDir(dM), 2)
+    GenerationedTable.writeAs(d1.buckets.limit(1), DsirLifecycle.at(dM).dir("buckets"), 2)
+    GenerationedTable.writeAs(DsirLifecycle.at(dM).read(spark, "stats").limit(1),
+      DsirLifecycle.at(dM).dir("stats"), 2)
     val d2 = DsirLifecycle.asModel(spark, dM)
     assert(d2.buckets.count() == d1.buckets.count() &&
       (d2.nt, d2.nr, d2.cut) == ((d1.nt, d1.nr, d1.cut)),

@@ -92,6 +92,30 @@ class StreamingDeletePropagationSpec extends SparkSpec {
     cleanup()
   }
 
+  test("a crash between the pairs and keep writes leaves both tables " +
+       "served at the last committed generation") {
+    cleanup()
+    val pairs = seedPairs
+    DeleteStreams.seed(pairs, DedupResolve.keepList(pairs), pairD, keepD)
+    DeleteStreams.processBatch(Seq(3L).toDF("doc_id"), 0L, pairD, keepD,
+      certD, catalogSpace = None) // generation 2
+    val p2 = pairSet(GenerationedTable.read(spark, pairD, Some(2)))
+    val k2 = keepSet(GenerationedTable.read(spark, keepD, Some(2)))
+    // batch 1 lands its pairs (generation 3) and crashes before keep
+    val (p3, _) = DeleteAudit.purgeNearDup(
+      GenerationedTable.read(spark, pairD, Some(2)),
+      GenerationedTable.read(spark, keepD, Some(2)), Seq(10L).toDF("id"))
+    GenerationedTable.replayAs(p3, pairD, 3)
+    assert(GenerationedTable.latest(spark, pairD).contains(3) &&
+      GenerationedTable.latest(spark, keepD).contains(2))
+    assert(pairSet(GenerationedTable.read(spark, pairD, Some(3))) != p2,
+      "the orphan pairs generation must differ for this test to mean much")
+    val (gotPairs, gotKeep) = DeleteStreams.currentState(spark, pairD, keepD)
+    assert(pairSet(gotPairs) == p2, "served pairs from an uncommitted generation")
+    assert(keepSet(gotKeep) == k2)
+    cleanup()
+  }
+
   test("the per-batch certificate spans every manifest-declared catalog " +
     "relation and certifies zero after purge + rebuild") {
     cleanup()

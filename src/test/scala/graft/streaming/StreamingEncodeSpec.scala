@@ -1,28 +1,40 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.ChunkingQueries
+import graft.operators.{BpeLifecycle, ChunkingQueries}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Stream/batch parity for tokenize-on-arrival: documents encoded in
-  * out-of-order micro-batches against the frozen trained tokenizer
-  * must equal the batch `q_bpe_encode` rows exactly; replay must be
-  * idempotent; OOV words in new documents must fall back to character
-  * pieces rather than vanish. */
+  * out-of-order micro-batches against the frozen trained tokenizer (a
+  * [[BpeLifecycle]] store trained on the corpus) must equal the batch
+  * `q_bpe_encode` rows exactly; replay must be idempotent; OOV words in
+  * new documents must fall back to character pieces rather than
+  * vanish. */
 class StreamingEncodeSpec extends SparkSpec {
   import spark.implicits._
 
   private val encD = "/tmp/graft_senc_idx"
+  private val storeD = "/tmp/graft_senc_bpe_store"
 
   private def cleanup(): Unit = {
     val p = new org.apache.hadoop.fs.Path(encD)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
+  /** The tokenizer the twin encodes with: one generation trained on the
+    * corpus, read back as the (vocab, merges) pair. */
+  private lazy val model = {
+    val p = new org.apache.hadoop.fs.Path(storeD)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val g = Some(BpeLifecycle.retrain(graft.Tables.documents(spark, sf0001), storeD))
+    (BpeLifecycle.at(storeD).read(spark, "vocab", g),
+      BpeLifecycle.merges(spark, storeD, g))
+  }
+
   test("out-of-order streamed encode equals the batch q_bpe_encode") {
     cleanup()
-    val vocab = ChunkingQueries.bpeVocab(spark, sf0001)
-    val merges = TokenizeStreams.trainedMerges(spark, sf0001)
+    val (vocab, merges) = model
     val docs = graft.Tables.documents(spark, sf0001)
       .select("doc_id", "text")
     // two out-of-order batches covering the corpus
@@ -45,8 +57,7 @@ class StreamingEncodeSpec extends SparkSpec {
 
   test("a doc fetched twice in one batch encodes once, deterministically") {
     cleanup()
-    val vocab = ChunkingQueries.bpeVocab(spark, sf0001)
-    val merges = TokenizeStreams.trainedMerges(spark, sf0001)
+    val (vocab, merges) = model
     val short = "plain words here"
     val long = "plain words here and there"
     TokenizeStreams.encodeBatch(
@@ -69,8 +80,7 @@ class StreamingEncodeSpec extends SparkSpec {
 
   test("OOV words segment by the trained merges, never dropped") {
     cleanup()
-    val vocab = ChunkingQueries.bpeVocab(spark, sf0001)
-    val merges = TokenizeStreams.trainedMerges(spark, sf0001)
+    val (vocab, merges) = model
     assert(merges.nonEmpty)
     // a fully-novel word degrades to characters
     TokenizeStreams.encodeBatch(
@@ -99,5 +109,37 @@ class StreamingEncodeSpec extends SparkSpec {
       s"learned merge '$pa$pb' not applied to OOV word: ${row.getString(2)}")
     assert(row.getLong(1) < word.length,
       "OOV word with learned pairs must compress below char length")
+  }
+
+  test("encodeStream trains the next store generation once at start and " +
+       "encodes arrivals under it") {
+    cleanup()
+    val streamStore = s"$storeD-stream"
+    val p = new org.apache.hadoop.fs.Path(streamStore)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val arrivals = graft.Tables.documents(spark, sf0001)
+      .filter(col("doc_id") < 40).select("doc_id", "text")
+      .as[(Long, String)].collect().toSeq
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val q = TokenizeStreams.encodeStream(mem.toDF().toDF("doc_id", "text"),
+      sf0001, streamStore, encD).start()
+    try {
+      mem.addData(arrivals.take(20)); q.processAllAvailable()
+      mem.addData(arrivals.drop(20)); q.processAllAvailable()
+    } finally q.stop()
+    assert(BpeLifecycle.at(streamStore).committed(spark) == 1,
+      "the stream must train exactly one generation, at start")
+    val refD = s"$encD-ref"
+    val rp = new org.apache.hadoop.fs.Path(refD)
+    rp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rp, true)
+    val (vocab, merges) = model
+    TokenizeStreams.encodeBatch(arrivals.toDF("doc_id", "text"), 0L,
+      vocab, merges, refD)
+    val got = TokenizeStreams.encoded(spark, encD)
+    val want = TokenizeStreams.encoded(spark, refD)
+    assert(got.count() == arrivals.size &&
+      got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      "streamed encode under the trained generation diverges")
   }
 }

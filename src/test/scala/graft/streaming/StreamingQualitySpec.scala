@@ -86,14 +86,14 @@ class StreamingQualitySpec extends SparkSpec {
     val served = key(QualityStreams.scoreFrame(docs, m))
     // simulate a crash mid-retrain: every gen-2 component landed (empty)
     // and swung its own pointer, the type total (the commit point) not
-    Seq(KnLifecycle.statsDir(mD) -> KnLifecycle.stats(spark, mD),
-        KnLifecycle.bigramsDir(mD) -> m.bigrams,
-        KnLifecycle.firstsDir(mD) -> m.firsts,
-        KnLifecycle.contsDir(mD) -> m.conts,
-        KnLifecycle.cutsDir(mD) -> m.cuts).foreach { case (dir, df) =>
+    Seq(KnLifecycle.at(mD).dir("stats") -> KnLifecycle.at(mD).read(spark, "stats"),
+        KnLifecycle.at(mD).dir("bigrams") -> m.bigrams,
+        KnLifecycle.at(mD).dir("firsts") -> m.firsts,
+        KnLifecycle.at(mD).dir("conts") -> m.conts,
+        KnLifecycle.at(mD).dir("cuts") -> m.cuts).foreach { case (dir, df) =>
       GenerationedTable.writeAs(df.limit(0), dir, 2)
     }
-    assert(KnLifecycle.committedGeneration(spark, mD) == 1)
+    assert(KnLifecycle.at(mD).committed(spark) == 1)
     assert(key(QualityStreams.scoreFrame(docs, KnLifecycle.asModel(spark, mD)))
       == served, "an uncommitted generation was served")
     // re-training re-commits over the orphans

@@ -93,10 +93,10 @@ class TextLifecyclesSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(key(m.buckets) == key(ref.buckets))
     // second retrain: pinned gen-1 bytes undisturbed, pointer at 2
-    val base1 = DsirLifecycle.stats(spark, dstore, Some(1)).collect().toSet
+    val base1 = DsirLifecycle.at(dstore).read(spark, "stats", Some(1)).collect().toSet
     assert(DsirLifecycle.retrain(mangled, dstore) == 2)
-    assert(DsirLifecycle.stats(spark, dstore, Some(1)).collect().toSet == base1)
-    assert(DsirLifecycle.committedGeneration(spark, dstore) == 2)
+    assert(DsirLifecycle.at(dstore).read(spark, "stats", Some(1)).collect().toSet == base1)
+    assert(DsirLifecycle.at(dstore).committed(spark) == 2)
     cleanup(dstore)
   }
 
@@ -130,21 +130,21 @@ class TextLifecyclesSpec extends SparkSpec {
     // simulate the crash window: stats+buckets gen 2 landed, totals
     // (the pointer authority) not
     GenerationedTable.writeAs(
-      DsirLifecycle.buckets(spark, dstore, Some(1)).limit(1),
-      DsirLifecycle.bucketsDir(dstore), 2)
+      DsirLifecycle.at(dstore).read(spark, "buckets", Some(1)).limit(1),
+      DsirLifecycle.at(dstore).dir("buckets"), 2)
     GenerationedTable.writeAs(
-      DsirLifecycle.stats(spark, dstore, Some(1)).limit(1),
-      DsirLifecycle.statsDir(dstore), 2)
+      DsirLifecycle.at(dstore).read(spark, "stats", Some(1)).limit(1),
+      DsirLifecycle.at(dstore).dir("stats"), 2)
     assert(GenerationedTable.latest(
-      spark, DsirLifecycle.bucketsDir(dstore)).contains(2))
-    assert(DsirLifecycle.committedGeneration(spark, dstore) == 1)
-    assert(DsirLifecycle.buckets(spark, dstore).count() ==
-      DsirLifecycle.buckets(spark, dstore, Some(1)).count(),
+      spark, DsirLifecycle.at(dstore).dir("buckets")).contains(2))
+    assert(DsirLifecycle.at(dstore).committed(spark) == 1)
+    assert(DsirLifecycle.at(dstore).read(spark, "buckets").count() ==
+      DsirLifecycle.at(dstore).read(spark, "buckets", Some(1)).count(),
       "unpinned buckets() read the orphan generation")
     assert(DsirLifecycle.driftCheck(docs, dstore).generation == 1)
     // the next retrain overwrites the orphan — no wedge
     assert(DsirLifecycle.retrain(mangled, dstore) == 2)
-    assert(DsirLifecycle.buckets(spark, dstore).count() > 1)
+    assert(DsirLifecycle.at(dstore).read(spark, "buckets").count() > 1)
     cleanup(dstore)
   }
 
@@ -187,10 +187,10 @@ class TextLifecyclesSpec extends SparkSpec {
       key(QualityStreams.scoreFrame(arrivals, ref)),
       "bridged generation model diverges from the batch model")
     // pinned baseline undisturbed by a retrain
-    val base1 = KnLifecycle.stats(spark, kstore, Some(1)).collect().toSet
+    val base1 = KnLifecycle.at(kstore).read(spark, "stats", Some(1)).collect().toSet
     assert(KnLifecycle.retrain(mangled, kstore) == 2)
-    assert(KnLifecycle.stats(spark, kstore, Some(1)).collect().toSet == base1)
-    assert(KnLifecycle.committedGeneration(spark, kstore) == 2)
+    assert(KnLifecycle.at(kstore).read(spark, "stats", Some(1)).collect().toSet == base1)
+    assert(KnLifecycle.at(kstore).committed(spark) == 2)
     cleanup(kstore)
   }
 
@@ -235,14 +235,14 @@ class TextLifecyclesSpec extends SparkSpec {
     cleanup(kstore)
     KnLifecycle.retrain(docs, kstore)
     GenerationedTable.writeAs(
-      KnLifecycle.stats(spark, kstore, Some(1)),
-      KnLifecycle.statsDir(kstore), 2)
+      KnLifecycle.at(kstore).read(spark, "stats", Some(1)),
+      KnLifecycle.at(kstore).dir("stats"), 2)
     GenerationedTable.writeAs(
       spark.range(1).select(lit(0L).as("bg_fake")),
-      KnLifecycle.bigramsDir(kstore), 2)
+      KnLifecycle.at(kstore).dir("bigrams"), 2)
     assert(GenerationedTable.latest(
-      spark, KnLifecycle.bigramsDir(kstore)).contains(2))
-    assert(KnLifecycle.committedGeneration(spark, kstore) == 1)
+      spark, KnLifecycle.at(kstore).dir("bigrams")).contains(2))
+    assert(KnLifecycle.at(kstore).committed(spark) == 1)
     // unpinned gauge + bridge still read the committed gen-1 model
     assert(KnLifecycle.driftCheck(docs, kstore).generation == 1)
     assert(KnLifecycle.asModel(spark, kstore).bigrams.columns.contains("bg"))
@@ -270,12 +270,16 @@ class TextLifecyclesSpec extends SparkSpec {
     // same training loop as the catalog artifact: vocab + merges equal
     val key = (df: DataFrame) => df.select("w", "n_tokens").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(key(BpeLifecycle.vocab(spark, tstore)) ==
+    // the catalog artifact's merge sequence in step order
+    val artifactMerges =
+      graft.operators.ChunkingQueries.bpeMergeTable(spark, sf0001)
+        .orderBy("step").select("pair_a", "pair_b")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(key(BpeLifecycle.at(tstore).read(spark, "vocab")) ==
       key(graft.operators.ChunkingQueries.bpeVocab(spark, sf0001)
         .select(col("w"), col("n_tokens"))),
       "lifecycle gen-1 vocab != bpe artifact vocab")
-    assert(BpeLifecycle.merges(spark, tstore) ==
-      TokenizeStreams.trainedMerges(spark, sf0001),
+    assert(BpeLifecycle.merges(spark, tstore) == artifactMerges,
       "lifecycle gen-1 merges != artifact merge sequence")
     // the streaming encoder under the bridged generation model equals
     // the artifact-model encode on the same arrivals
@@ -283,19 +287,19 @@ class TextLifecyclesSpec extends SparkSpec {
     val d1 = s"$tstore/_enc_gen"
     val d2 = s"$tstore/_enc_art"
     TokenizeStreams.encodeBatch(arrivals, 0L,
-      BpeLifecycle.vocab(spark, tstore),
+      BpeLifecycle.at(tstore).read(spark, "vocab"),
       BpeLifecycle.merges(spark, tstore), d1)
     TokenizeStreams.encodeBatch(arrivals, 0L,
       graft.operators.ChunkingQueries.bpeVocab(spark, sf0001),
-      TokenizeStreams.trainedMerges(spark, sf0001), d2)
+      artifactMerges, d2)
     val enc = (dd: String) => TokenizeStreams.encoded(spark, dd).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(enc(d1) == enc(d2), "generation-bridged encode diverges")
     // a retrain on a drifted corpus leaves gen 1 byte-identical
-    val v1 = key(BpeLifecycle.vocab(spark, tstore, Some(1)))
+    val v1 = key(BpeLifecycle.at(tstore).read(spark, "vocab", Some(1)))
     assert(BpeLifecycle.retrain(mangled, tstore) == 2)
-    assert(key(BpeLifecycle.vocab(spark, tstore, Some(1))) == v1)
-    assert(BpeLifecycle.committedGeneration(spark, tstore) == 2)
+    assert(key(BpeLifecycle.at(tstore).read(spark, "vocab", Some(1))) == v1)
+    assert(BpeLifecycle.at(tstore).committed(spark) == 2)
     cleanup(tstore)
   }
 
@@ -341,17 +345,17 @@ class TextLifecyclesSpec extends SparkSpec {
     cleanup(tstore)
     BpeLifecycle.retrain(docs, tstore)
     GenerationedTable.writeAs(
-      BpeLifecycle.vocab(spark, tstore, Some(1)).limit(1),
-      BpeLifecycle.vocabDir(tstore), 2)
+      BpeLifecycle.at(tstore).read(spark, "vocab", Some(1)).limit(1),
+      BpeLifecycle.at(tstore).dir("vocab"), 2)
     assert(GenerationedTable.latest(
-      spark, BpeLifecycle.vocabDir(tstore)).contains(2))
-    assert(BpeLifecycle.committedGeneration(spark, tstore) == 1)
-    assert(BpeLifecycle.vocab(spark, tstore).count() ==
-      BpeLifecycle.vocab(spark, tstore, Some(1)).count(),
+      spark, BpeLifecycle.at(tstore).dir("vocab")).contains(2))
+    assert(BpeLifecycle.at(tstore).committed(spark) == 1)
+    assert(BpeLifecycle.at(tstore).read(spark, "vocab").count() ==
+      BpeLifecycle.at(tstore).read(spark, "vocab", Some(1)).count(),
       "unpinned vocab() read the orphan generation")
     // next retrain overwrites the orphan — no wedge
     assert(BpeLifecycle.retrain(mangled, tstore) == 2)
-    assert(BpeLifecycle.vocab(spark, tstore).count() > 1)
+    assert(BpeLifecycle.at(tstore).read(spark, "vocab").count() > 1)
     // an all-OOV stream (gauged against gen 2 = mangled vocab, fed the
     // ORIGINAL corpus) has no in-vocab compression sample: the share
     // trigger owns the verdict, shift reads 0 instead of dividing by 0
@@ -378,7 +382,7 @@ class TextLifecyclesSpec extends SparkSpec {
       BoilerplateQueries.segmentsOf(docs))
     val key = (df: DataFrame) =>
       df.select("bseg").collect().map(_.getString(0)).toSet
-    assert(key(BoilerplateLifecycle.list(spark, bstore)) == key(ref),
+    assert(key(BoilerplateLifecycle.at(bstore).read(spark, "bplist")) == key(ref),
       "lifecycle gen-1 list != the batch boilerplate list")
     // excision under the bridged list equals excision under the batch list
     val seg = BoilerplateQueries.segmentsOf(docs.limit(50))
@@ -386,12 +390,12 @@ class TextLifecyclesSpec extends SparkSpec {
       BoilerplateQueries.exciseFrom(seg, bp)
         .select("doc_id", "segs_removed", "words_kept").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(exKey(BoilerplateLifecycle.list(spark, bstore)) == exKey(ref))
+    assert(exKey(BoilerplateLifecycle.at(bstore).read(spark, "bplist")) == exKey(ref))
     // a retrain on drifted arrivals leaves gen 1 byte-identical
-    val l1 = key(BoilerplateLifecycle.list(spark, bstore, Some(1)))
+    val l1 = key(BoilerplateLifecycle.at(bstore).read(spark, "bplist", Some(1)))
     assert(BoilerplateLifecycle.retrain(mangled, bstore) == 2)
-    assert(key(BoilerplateLifecycle.list(spark, bstore, Some(1))) == l1)
-    assert(BoilerplateLifecycle.committedGeneration(spark, bstore) == 2)
+    assert(key(BoilerplateLifecycle.at(bstore).read(spark, "bplist", Some(1))) == l1)
+    assert(BoilerplateLifecycle.at(bstore).committed(spark) == 2)
     cleanup(bstore)
   }
 
@@ -435,14 +439,14 @@ class TextLifecyclesSpec extends SparkSpec {
     cleanup(bstore)
     BoilerplateLifecycle.retrain(docs, bstore)
     GenerationedTable.writeAs(
-      BoilerplateLifecycle.stats(spark, bstore, Some(1)),
-      BoilerplateLifecycle.statsDir(bstore), 2)
+      BoilerplateLifecycle.at(bstore).read(spark, "stats", Some(1)),
+      BoilerplateLifecycle.at(bstore).dir("stats"), 2)
     assert(GenerationedTable.latest(
-      spark, BoilerplateLifecycle.statsDir(bstore)).contains(2))
-    assert(BoilerplateLifecycle.committedGeneration(spark, bstore) == 1)
+      spark, BoilerplateLifecycle.at(bstore).dir("stats")).contains(2))
+    assert(BoilerplateLifecycle.at(bstore).committed(spark) == 1)
     assert(BoilerplateLifecycle.driftCheck(docs, bstore).generation == 1)
     assert(BoilerplateLifecycle.retrain(mangled, bstore) == 2)
-    assert(BoilerplateLifecycle.committedGeneration(spark, bstore) == 2)
+    assert(BoilerplateLifecycle.at(bstore).committed(spark) == 2)
     val e = intercept[IllegalArgumentException] {
       BoilerplateLifecycle.driftCheck(docs.filter(col("doc_id") < 0), bstore)
     }
